@@ -89,7 +89,7 @@ ntri = timed("tc_total", lambda: triangle_count(dag).collect()[0][0])
 timed("tc_per_edge", lambda: per_edge_triangles(tc_edges, dag).count())
 # PR over the symmetric table: dangling-free -> one job per superstep;
 # work per superstep = 2m directed edges
-res = timed("pagerank_10iter", lambda: pagerank(sym, verts, tol=0.0, max_iter=PR_ITERS, lineage_every=3))
+res = timed("pagerank_10iter", lambda: pagerank(sym, verts, tol=0.0, max_iter=PR_ITERS))
 timed("cc", lambda: connected_components(edges, verts).count())
 timed("lp_4iter", lambda: label_propagation(sym, verts, n_iter=4).labels.count())
 timed("ingest_pages", lambda: build_link_graph(

@@ -69,8 +69,7 @@ def rep(name, fn):
 
 rep("tc_total", lambda: triangle_count(dag).collect())
 rep("cc", lambda: connected_components(cc_edges, verts).count())
-rep("pagerank_6iter", lambda: pagerank(sym, verts, tol=0.0, max_iter=6,
-                                       lineage_every=3))
+rep("pagerank_6iter", lambda: pagerank(sym, verts, tol=0.0, max_iter=6))
 rep("lp_4iter", lambda: label_propagation(sym, verts, n_iter=4).labels.count())
 rep("louvain_2rounds", lambda: louvain_one_level(sym, n_rounds=2).count())
 out["pr_edges_per_superstep"] = m2

@@ -18,12 +18,7 @@ from graphminer_spark.algorithms.components import (
     connected_components,
 )
 from graphminer_spark.algorithms.labelprop import label_propagation
-from graphminer_spark.algorithms.pagerank import (
-    pagerank,
-    pagerank_csr,
-    pagerank_weighted,
-    personalized_pagerank,
-)
+from graphminer_spark.algorithms.pagerank import pagerank, pagerank_csr
 from graphminer_spark.algorithms.triangles import (
     clique4_count,
     per_edge_triangles,
@@ -721,7 +716,7 @@ def _q_wpr5(spark: SparkSession, sf_dir: str) -> DataFrame:
     wedges = edges.select(
         "src", "dst", (1 + (F.col("src") + F.col("dst")) % 5).alias("w")
     )
-    res = pagerank_weighted(wedges, verts, n_iter=5)
+    res = pagerank(wedges, verts, tol=0.0, max_iter=5, weight="w")
     return res.ranks.select(
         "id", F.format_string("%.6f", F.col("rank")).alias("rank_s")
     )
@@ -733,7 +728,7 @@ PPR_SOURCE_MOD = 50  # teleport set: ids divisible by 50 (~2% of verts)
 def _q_ppr5(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges, _, verts = _graph_vertices(spark, sf_dir)
     sources = verts.filter(F.col("id") % PPR_SOURCE_MOD == 0)
-    res = personalized_pagerank(edges, verts, sources, n_iter=5)
+    res = pagerank(edges, verts, tol=0.0, max_iter=5, sources=sources)
     return res.ranks.select(
         "id", F.format_string("%.6f", F.col("rank")).alias("rank_s")
     )

@@ -279,7 +279,6 @@ def main() -> None:
     )
 
     from graphminer_spark.algorithms.kcore import core_numbers_hindex  # noqa: E402
-    from graphminer_spark.algorithms.pagerank import personalized_pagerank  # noqa: E402
     from graphminer_spark.algorithms.triangles import (  # noqa: E402
         triangle_count_sampled,
     )
@@ -395,7 +394,7 @@ def main() -> None:
     srcs = verts.filter(F.col("id") % 50 == 0)
     timed(
         "ppr_5iter",
-        lambda: personalized_pagerank(edges, verts, srcs, n_iter=5).ranks.count(),
+        lambda: pagerank(edges, verts, tol=0.0, max_iter=5, sources=srcs).ranks.count(),
         extra=True,
     )
 

@@ -102,7 +102,6 @@ def label_propagation(
                 )
                 changed = int(row["changed"] or 0)
                 changed_hist.append(changed)
-                ckpt.log(it, {"algo": "lp", "changed": changed})
                 if changed == 0:
                     converged = True
                     break

@@ -1,13 +1,15 @@
 """PageRank: power iteration with dangling-mass redistribution.
 
-Two physical strategies over the same math (rank' = (1-d)/N +
-d·(Σ in-contribs + dangling/N)):
+One superstep loop (``_iterate``) serves every variant of the math
+rank' = t·((1-d) + d·dangling) + d·Σ in-contribs, where the teleport
+vector t is uniform (1/N) or, with ``sources``, 1[v∈S]/|S|:
 
 * ``pagerank`` — pure DataFrame joins: ranks ⋈ out-degree ⋈ edges →
   groupBy(dst).sum. One shuffle for the contribution aggregate per
   superstep; the edges table is persisted and its shuffle exchange
   reused across supersteps. Whole-stage-codegen'd end to end, no
-  Python in the loop.
+  Python in the loop. ``sources=`` personalizes the teleport vector,
+  ``weight=`` splits rank across out-edges by an edge weight column.
 * ``pagerank_csr`` — the north-star gather-scatter: ranks join the
   per-block CSR adjacency (one row per *vertex*, not per edge), and an
   Arrow-batched ``applyInPandas`` scatters rank/outdeg over each
@@ -15,17 +17,20 @@ d·(Σ in-contribs + dangling/N)):
   shrinks the shuffle from O(edges) rows to O(distinct dst per block).
 
 Dangling vertices (no out-links — very common on the web) surrender
-their mass to the uniform distribution each superstep; the scalar is a
-single ``agg(sum)`` folded into the next iteration's constant term, so
+their mass to the teleport vector each superstep; the scalar rides the
+superstep's single fused aggregate (L1 delta + next dangling mass,
+LMFAO-style: all of a pass's aggregates in one scan), so
 ``sum(rank) == 1`` holds at every step (asserted in tests).
 
-Convergence: L1 delta < tol (north rule: per-vertex allclose 1e-6).
-State checkpoints via :class:`CheckpointManager` → resumable.
+Convergence: L1 delta < tol (north rule: per-vertex allclose 1e-6);
+``tol=0.0`` runs exactly ``max_iter`` supersteps. State checkpoints via
+:class:`CheckpointManager` → resumable.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from typing import Callable
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -42,14 +47,27 @@ class PageRankResult:
     deltas: list[float] = field(default_factory=list)
 
 
-def _prepare(edges: DataFrame, vertices: DataFrame):
-    out_deg = edges.groupBy(F.col("src").alias("id")).agg(
-        F.count("*").alias("out_deg")
-    )
+def _vertex_state(
+    vertices: DataFrame, out_deg: DataFrame, sources: DataFrame | None
+) -> DataFrame:
+    """``(id, out_deg[, s])`` hash-partitioned by id: the per-superstep
+    rank-update join reuses this layout with NO exchange on the verts
+    side and NO broadcast (a 10^9-vertex table can't be broadcast, and
+    broadcasting even a small one serializes through the driver every
+    superstep). The source indicator ``s`` is folded in ONCE, so
+    personalization adds no per-superstep join."""
     verts = vertices.select("id").join(out_deg, "id", "left").select(
         "id", F.coalesce("out_deg", F.lit(0)).alias("out_deg")
     )
-    return verts
+    if sources is not None:
+        # distinct() so duplicate ids in an arbitrary caller-supplied
+        # source set can't fan out vertex rows through the left join
+        # (which would inflate |S| and corrupt rank mass)
+        sflag = sources.select("id").distinct().withColumn("s", F.lit(1.0))
+        verts = verts.join(sflag, "id", "left").select(
+            "id", "out_deg", F.coalesce("s", F.lit(0.0)).alias("s")
+        )
+    return verts.repartition("id").persist()
 
 
 def pagerank(
@@ -60,8 +78,9 @@ def pagerank(
     max_iter: int = 100,
     checkpointer: CheckpointManager | None = None,
     resume: bool = False,
-    lineage_every: int = 1,
     init_ranks: DataFrame | None = None,
+    sources: DataFrame | None = None,
+    weight: str | None = None,
 ) -> PageRankResult:
     """Directed PageRank over ``edges(src,dst)`` / ``vertices(id)``.
 
@@ -72,308 +91,45 @@ def pagerank(
     vertices, new vertices get 1/n, the vector renormalizes, and
     degrees re-derive from the current edges — typically a fraction of
     the cold-start iterations to the same tolerance.
-    ``lineage_every`` > 1 (fixed-iteration dangling-free fast path
-    only) truncates lineage every K supersteps instead of every one —
-    fewer barrier jobs; plan depth stays bounded at K supersteps.
+
+    ``sources(id)`` gives Personalized PageRank: teleport and dangling
+    mass return to the source set instead of the uniform distribution
+    (Page et al. §6; Jeh & Widom WWW'03) — the related-pages /
+    seeded-relevance primitive. ``weight`` names an edge weight column:
+    each vertex splits its rank across out-edges proportionally to it
+    (contrib = rank·w/W_out(src); the Common-Crawl host-rank recipe).
     """
-    spark = edges.sparkSession
-    ckpt = checkpointer or CheckpointManager(None, release_chain=True)
+    cols = ["src", "dst"] + ([weight] if weight else [])
+    deg = F.count("*") if weight is None else F.sum(weight)
+    share = F.col("share") if weight is None else F.col("share") * F.col(weight)
     n = vertices.count()
-    # verts(id, out_deg) hash-partitioned by id and persisted: the per-
-    # superstep rank-update join reuses this layout with NO exchange on
-    # the verts side and NO broadcast (a 10^9-vertex table can't be
-    # broadcast, and broadcasting even a small one serializes through
-    # the driver every superstep).
-    verts = _prepare(edges, vertices).repartition("id").persist()
-    verts.count()
-    # edges partitioned by src and persisted likewise.
-    e = edges.select("src", "dst").repartition("src").persist()
-    m = e.count()
+    verts = _vertex_state(
+        vertices,
+        edges.groupBy(F.col("src").alias("id")).agg(deg.alias("out_deg")),
+        sources,
+    )
+    # edges partitioned by src and persisted likewise
+    e = edges.select(*cols).repartition("src").persist()
 
-    n_dangling = verts.filter(F.col("out_deg") == 0).count()
-
-    start_iter = 0
-    state = None  # (id, rank, out_deg)
-    if resume:
-        latest = ckpt.latest(spark)
-        if latest is not None:
-            start_iter, state = latest
-            if "out_deg" not in state.columns:  # older checkpoint layout
-                state = state.join(verts, "id")
-    if state is None and init_ranks is not None:
-        # incremental warm start on a (possibly changed) graph: seed
-        # existing vertices with their previous rank, new vertices with
-        # 1/n, renormalize to sum 1; out_deg comes from the CURRENT
-        # edge table (stale degrees would mis-split rank — the reason
-        # plain resume= is wrong across graph deltas)
-        seeded = verts.join(
-            init_ranks.select("id", F.col("rank").alias("r0")), "id", "left"
-        ).select(
-            "id", F.coalesce("r0", F.lit(1.0 / n)).alias("r0"), "out_deg"
-        )
-        total = float(seeded.agg(F.sum("r0")).collect()[0][0])
-        state = seeded.select(
-            "id", (F.col("r0") / total).alias("rank"), "out_deg"
-        )
-        state = ckpt.save(state, 0, {"algo": "pagerank", "delta": float("inf")})
-        dangling = float(
-            state.filter(F.col("out_deg") == 0)
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)))
-            .collect()[0][0]
-        )
-    elif state is None:
-        state = verts.select("id", F.lit(1.0 / n).alias("rank"), "out_deg")
-        state = ckpt.save(state, 0, {"algo": "pagerank", "delta": float("inf")})
-        dangling = n_dangling / n
-    else:
-        dangling = (
-            state.filter(F.col("out_deg") == 0)
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)))
-            .collect()[0][0]
+    def contribs(state: DataFrame) -> DataFrame:
+        return (
+            state.filter(F.col("out_deg") > 0)
+            .select(
+                F.col("id").alias("src"),
+                (F.col("rank") / F.col("out_deg")).alias("share"),
+            )
+            .join(e, "src")
+            .groupBy(F.col("dst").alias("id"))
+            .agg(F.sum(share).alias("contrib"))
         )
 
-    deltas: list[float] = []
-    converged = False
-    it = start_iter
-    # ONE action per superstep: the new state is lazily checkpointed and
-    # a single fused aggregate — L1 delta AND the next iteration's
-    # dangling mass — materializes it (save_and_agg). Fixed-iteration
-    # dangling-free runs skip the aggregate and checkpoint every
-    # lineage_every. AQE is cost-gated for the loop (superstep_planning:
-    # per-action re-planning dominates sub-second supersteps on small
-    # graphs; stays ON at web scale where it pays).
-    with superstep_planning(edges.sparkSession, m):
-        for it in range(start_iter + 1, max_iter + 1):
-            contribs = (
-                state.filter(F.col("out_deg") > 0)
-                .select(
-                    F.col("id").alias("src"),
-                    (F.col("rank") / F.col("out_deg")).alias("share"),
-                )
-                .join(e, "src")
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.sum("share").alias("contrib"))
-            )
-            base = (1.0 - damping) / n + damping * dangling / n
-            if tol <= 0 and n_dangling == 0:
-                new_state = (
-                    verts.join(contribs.hint("shuffle_hash"), "id", "left")
-                    .select(
-                        "id",
-                        (
-                            F.lit(base)
-                            + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))
-                        ).alias("rank"),
-                        "out_deg",
-                    )
-                )
-                if it % lineage_every == 0 or it == max_iter:
-                    state = ckpt.save(new_state, it, {"algo": "pagerank"})
-                else:
-                    state = new_state
-                continue
-            # carry prev_rank inside the new state so the delta/dangling
-            # aggregate is one SCAN of the checkpointed state — no per-
-            # superstep state⋈prev join (each such join cost two exchanges,
-            # doubling superstep latency at low scale and shuffle volume at
-            # high scale)
-            new_state = (
-                state.join(contribs.hint("shuffle_hash"), "id", "left")
-                .select(
-                    "id",
-                    (
-                        F.lit(base)
-                        + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))
-                    ).alias("rank"),
-                    "out_deg",
-                    F.col("rank").alias("prev_rank"),
-                )
-            )
-            state, row = ckpt.save_and_agg(
-                new_state,
-                it,
-                {"algo": "pagerank"},
-                [
-                    F.sum(F.abs(F.col("rank") - F.col("prev_rank"))).alias("delta"),
-                    F.coalesce(
-                        F.sum(F.when(F.col("out_deg") == 0, F.col("rank"))),
-                        F.lit(0.0),
-                    ).alias("dangling"),
-                ],
-            )
-            delta, dangling = float(row["delta"]), float(row["dangling"])
-            deltas.append(delta)
-            ckpt.log(it, {"algo": "pagerank", "delta": delta})
-            if delta < tol:
-                converged = True
-                break
-        if ckpt.base_dir and it % ckpt.every != 0:
-            # last iteration fell between durable checkpoints — persist it
-            # (same-iteration re-save would overwrite the path being read)
-            state = ckpt.save(
-                state, it, {"algo": "pagerank", "final": True}, force=True
-            )
-    # state is checkpoint-materialized (the loop saves at it==max_iter
-    # in the fixed-iteration path and every superstep in the tol path);
-    # release the superstep inputs so
-    # long-lived sessions (and 100 TB executors) don't accumulate them
-    verts.unpersist()
-    e.unpersist()
-    return PageRankResult(state.select("id", "rank"), it, converged, deltas)
-
-
-def personalized_pagerank(
-    edges: DataFrame,
-    vertices: DataFrame,
-    sources: DataFrame,
-    damping: float = 0.85,
-    n_iter: int = 5,
-    checkpointer: CheckpointManager | None = None,
-) -> PageRankResult:
-    """Personalized PageRank: teleport (and dangling mass) return to
-    the ``sources(id)`` set instead of the uniform distribution —
-    rank' (v) = (1−d)·1[v∈S]/|S| + d·(Σ in-contribs + dangling·1[v∈S]/|S|).
-
-    The related-pages / seeded-relevance primitive for link graphs
-    (Page et al. §6 "personalized" vector; Jeh & Widom WWW'03). Same
-    superstep plan as ``pagerank`` — the source indicator is folded
-    into the persisted vertex state once, so personalization adds NO
-    join: the teleport term is a per-row expression.
-    """
-    spark = edges.sparkSession
-    ckpt = checkpointer or CheckpointManager(None, release_chain=True)
-    # distinct() so duplicate ids in an arbitrary caller-supplied source
-    # set can't fan out vertex rows through the left join (which would
-    # inflate ns and corrupt rank mass)
-    sflag = sources.select("id").distinct().withColumn("s", F.lit(1.0))
-    verts = (
-        _prepare(edges, vertices)
-        .join(sflag, "id", "left")
-        .select("id", "out_deg", F.coalesce("s", F.lit(0.0)).alias("s"))
-        .repartition("id")
-        .persist()
-    )
-    ns = verts.agg(F.sum("s")).collect()[0][0]
-    if not ns:
-        raise ValueError("personalized_pagerank needs a non-empty source set")
-    e = edges.select("src", "dst").repartition("src").persist()
-    m2 = e.count()
-
-    _dangling_agg = F.coalesce(
-        F.sum(F.when(F.col("out_deg") == 0, F.col("rank"))), F.lit(0.0)
-    ).alias("dangling")
-    state = verts.select(
-        "id", (F.col("s") / ns).alias("rank"), "out_deg", "s"
-    )
-    # ONE action per superstep: the save's materializing aggregate also
-    # computes the NEXT superstep's dangling mass (same fusion as
-    # `pagerank`) — no separate collect before the update join
-    state, row = ckpt.save_and_agg(state, 0, {"algo": "ppr"}, [_dangling_agg])
-    dangling = float(row["dangling"])
-    with superstep_planning(edges.sparkSession, m2):
-        for it in range(1, n_iter + 1):
-            contribs = (
-                state.filter(F.col("out_deg") > 0)
-                .select(
-                    F.col("id").alias("src"),
-                    (F.col("rank") / F.col("out_deg")).alias("share"),
-                )
-                .join(e, "src")
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.sum("share").alias("contrib"))
-            )
-            # teleport+dangling return ONLY to sources: a per-row scalar
-            # multiple of the s indicator — no extra join for personalization
-            back = (1.0 - damping) / ns + damping * dangling / ns
-            state, row = ckpt.save_and_agg(
-                state.join(contribs.hint("shuffle_hash"), "id", "left").select(
-                    "id",
-                    (
-                        F.lit(back) * F.col("s")
-                        + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))
-                    ).alias("rank"),
-                    "out_deg",
-                    "s",
-                ),
-                it,
-                {"algo": "ppr"},
-                [_dangling_agg],
-            )
-            dangling = float(row["dangling"])
-    verts.unpersist()
-    e.unpersist()
-    return PageRankResult(state.select("id", "rank"), n_iter, False, [])
-
-
-def pagerank_weighted(
-    wedges: DataFrame,
-    vertices: DataFrame,
-    damping: float = 0.85,
-    n_iter: int = 5,
-    checkpointer: CheckpointManager | None = None,
-) -> PageRankResult:
-    """Weighted PageRank over ``wedges(src, dst, w)``: each vertex
-    splits its rank across out-edges proportionally to edge weight
-    (contrib = rank·w/W_out(src)); teleport and dangling mass stay
-    uniform. Identical superstep shape to ``pagerank`` — the weight
-    ratio rides along the same join, no extra shuffle.
-    """
-    ckpt = checkpointer or CheckpointManager(None, release_chain=True)
-    n = vertices.count()
-    w_out = wedges.groupBy(F.col("src").alias("id")).agg(
-        F.sum("w").alias("w_out")
-    )
-    verts = (
-        vertices.select("id")
-        .join(w_out, "id", "left")
-        .select("id", F.coalesce("w_out", F.lit(0)).alias("w_out"))
-        .repartition("id")
-        .persist()
-    )
-    e = wedges.select("src", "dst", "w").repartition("src").persist()
-    m3 = e.count()
-
-    _dangling_agg = F.coalesce(
-        F.sum(F.when(F.col("w_out") == 0, F.col("rank"))), F.lit(0.0)
-    ).alias("dangling")
-    state = verts.select("id", F.lit(1.0 / n).alias("rank"), "w_out")
-    # fused superstep: the materializing aggregate carries the next
-    # superstep's dangling mass — ONE action per superstep
-    state, row = ckpt.save_and_agg(state, 0, {"algo": "wpr"}, [_dangling_agg])
-    dangling = float(row["dangling"])
-    with superstep_planning(wedges.sparkSession, m3):
-        for it in range(1, n_iter + 1):
-            contribs = (
-                state.filter(F.col("w_out") > 0)
-                .select(
-                    F.col("id").alias("src"),
-                    (F.col("rank") / F.col("w_out")).alias("per_w"),
-                )
-                .join(e, "src")
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.sum(F.col("per_w") * F.col("w")).alias("contrib"))
-            )
-            base = (1.0 - damping) / n + damping * dangling / n
-            state, row = ckpt.save_and_agg(
-                state.join(contribs.hint("shuffle_hash"), "id", "left").select(
-                    "id",
-                    (
-                        F.lit(base)
-                        + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))
-                    ).alias("rank"),
-                    "w_out",
-                ),
-                it,
-                {"algo": "wpr"},
-                [_dangling_agg],
-            )
-            dangling = float(row["dangling"])
-    verts.unpersist()
-    e.unpersist()
-    return PageRankResult(state.select("id", "rank"), n_iter, False, [])
-
-
-# ------------------------------------------------------------------ CSR path
+    try:
+        return _iterate(
+            verts, n, e.count(), contribs, damping, tol, max_iter,
+            checkpointer, resume, init_ranks, "pagerank",
+        )
+    finally:
+        e.unpersist()
 
 
 def pagerank_csr(
@@ -385,7 +141,8 @@ def pagerank_csr(
     checkpointer: CheckpointManager | None = None,
 ) -> PageRankResult:
     """Gather-scatter PageRank over CSR blocks (``graph.build.csr_blocks``
-    output: ``(block, src, nbrs)`` with nbrs = sorted out-neighbors).
+    output: ``(block, src, nbrs, out_deg)`` with nbrs = sorted
+    out-neighbors).
 
     Each superstep: ranks join CSR rows on src (one row per vertex),
     then per-block ``applyInPandas`` scatters ``rank/out_deg`` to every
@@ -395,12 +152,10 @@ def pagerank_csr(
     """
     import numpy as np
 
-    spark = csr.sparkSession
-    ckpt = checkpointer or CheckpointManager(None, release_chain=True)
     n = vertices.count()
     csr = csr.persist()
     csr.count()
-    m4 = csr.agg(F.sum("out_deg")).collect()[0][0] or 0
+    m = csr.agg(F.sum("out_deg")).collect()[0][0] or 0
 
     def scatter(pdf: pd.DataFrame) -> pd.DataFrame:
         if pdf.empty:
@@ -417,69 +172,125 @@ def pagerank_csr(
         np.add.at(sums, inv, share)
         return pd.DataFrame({"id": ids, "contrib": sums})
 
-    # has_out is folded into the rank state ONCE so the per-superstep
-    # dangling mass is a scan of the checkpointed ranks, not a
-    # left_anti join
-    has_out = csr.select(F.col("src").alias("id")).distinct().withColumn(
-        "has_out", F.lit(True)
-    )
-    _dangling_agg = F.coalesce(
-        F.sum(F.when(~F.col("has_out"), F.col("rank"))), F.lit(0.0)
+    def contribs(state: DataFrame) -> DataFrame:
+        ranks = state.select("id", "rank")
+        joined = csr.join(ranks, csr["src"] == ranks["id"]).select(
+            "block", "nbrs", "out_deg", "rank"
+        )
+        partials = joined.groupBy("block").applyInPandas(
+            scatter, schema="id long, contrib double"
+        )
+        return partials.groupBy("id").agg(F.sum("contrib").alias("contrib"))
+
+    # shard rows of one vertex all carry its true degree
+    deg = csr.select(F.col("src").alias("id"), "out_deg").distinct()
+    try:
+        return _iterate(
+            _vertex_state(vertices, deg, None), n, m, contribs, damping,
+            tol, max_iter, checkpointer, False, None, "pagerank_csr",
+        )
+    finally:
+        csr.unpersist()
+
+
+def _iterate(
+    verts: DataFrame,
+    n: int,
+    m: int,
+    contribs: Callable[[DataFrame], DataFrame],
+    damping: float,
+    tol: float,
+    max_iter: int,
+    checkpointer: CheckpointManager | None,
+    resume: bool,
+    init_ranks: DataFrame | None,
+    algo: str,
+) -> PageRankResult:
+    """The PageRank superstep loop over the persisted vertex state
+    ``verts(id, out_deg[, s])`` (unpersisted on return); ``contribs``
+    maps a rank state to ``(id, contrib)``, the one step the physical
+    strategies do differently. ``m`` (edges) gates AQE for the loop."""
+    spark = verts.sparkSession
+    ckpt = checkpointer or CheckpointManager(None, release_chain=True)
+    personal = "s" in verts.columns
+    if personal:
+        n_tele = verts.agg(F.sum("s")).collect()[0][0]
+        if not n_tele:
+            verts.unpersist()
+            raise ValueError("pagerank needs a non-empty source set")
+    else:
+        verts.count()
+        n_tele = n
+    carry = verts.columns[1:]  # out_deg[, s]
+    dangling_agg = F.coalesce(
+        F.sum(F.when(F.col("out_deg") == 0, F.col("rank"))), F.lit(0.0)
     ).alias("dangling")
-    ranks = (
-        vertices.select("id", F.lit(1.0 / n).alias("rank"))
-        .join(has_out, "id", "left")
-        .select("id", "rank", F.coalesce("has_out", F.lit(False)).alias("has_out"))
-    )
-    # fused supersteps (same as `pagerank`): the materializing aggregate
-    # computes BOTH the L1 delta and the NEXT superstep's dangling mass
-    # — one driver action instead of three (dangling collect + save +
-    # delta collect)
-    ranks, row = ckpt.save_and_agg(
-        ranks, 0, {"algo": "pagerank_csr"}, [_dangling_agg]
-    )
+    delta_agg = F.sum(F.abs(F.col("rank") - F.col("prev_rank"))).alias("delta")
+
+    # one starting state per path (resume / warm start / cold start);
+    # its dangling mass comes from the same aggregate as every superstep's
+    latest = ckpt.latest(spark) if resume else None
+    if latest is not None:
+        start_iter, state = latest
+        if set(carry) - set(state.columns):  # older checkpoint layout
+            state = state.select("id", "rank").join(verts, "id")
+        row = state.agg(dangling_agg).collect()[0]
+    else:
+        start_iter = 0
+        tele = F.col("s") / n_tele if personal else F.lit(1.0 / n)
+        state = verts.select("id", tele.alias("rank"), *carry)
+        if init_ranks is not None:
+            # incremental warm start on a (possibly changed) graph: seed
+            # existing vertices with their previous rank, new vertices
+            # with the cold-start rank, renormalize to sum 1; out_deg
+            # comes from the CURRENT edge table (stale degrees would
+            # mis-split rank — why plain resume= is wrong across deltas)
+            state = state.join(
+                init_ranks.select("id", F.col("rank").alias("r0")), "id", "left"
+            ).select("id", F.coalesce("r0", "rank").alias("rank"), *carry)
+            total = float(state.agg(F.sum("rank")).collect()[0][0])
+            state = state.withColumn("rank", F.col("rank") / total)
+        state, row = ckpt.save_and_agg(state, 0, {"algo": algo}, [dangling_agg])
     dangling = float(row["dangling"])
+
     deltas: list[float] = []
     converged = False
-    it = 0
-    with superstep_planning(csr.sparkSession, m4):
-        for it in range(1, max_iter + 1):
-            joined = csr.join(ranks, csr["src"] == ranks["id"]).select(
-                "block", "nbrs", "out_deg", "rank"
+    it = start_iter
+    # ONE action per superstep: the new state is lazily checkpointed and
+    # a single fused aggregate — L1 delta AND the next superstep's
+    # dangling mass — materializes it (save_and_agg). prev_rank rides
+    # inside the new state so that aggregate is one SCAN of the
+    # checkpointed state — no per-superstep state⋈prev join (each cost
+    # two exchanges). AQE is cost-gated for the loop (superstep_planning:
+    # per-action re-planning dominates sub-second supersteps on small
+    # graphs; stays ON at web scale where it pays).
+    with superstep_planning(spark, m):
+        for it in range(start_iter + 1, max_iter + 1):
+            back = F.lit((1.0 - damping) / n_tele + damping * dangling / n_tele)
+            new_state = state.join(
+                contribs(state).hint("shuffle_hash"), "id", "left"
+            ).select(
+                "id",
+                ((back * F.col("s") if personal else back)
+                 + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))).alias("rank"),
+                *carry,
+                F.col("rank").alias("prev_rank"),
             )
-            partials = joined.groupBy("block").applyInPandas(
-                scatter, schema="id long, contrib double"
-            )
-            contribs = partials.groupBy("id").agg(F.sum("contrib").alias("contrib"))
-            base = (1.0 - damping) / n + damping * dangling / n
-            # carry prev_rank in the state: the L1-delta check is a single
-            # scan of the checkpointed ranks (same fusion as `pagerank`)
-            new_ranks = (
-                ranks.join(contribs, "id", "left")
-                .select(
-                    "id",
-                    (
-                        F.lit(base)
-                        + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))
-                    ).alias("rank"),
-                    "has_out",
-                    F.col("rank").alias("prev_rank"),
-                )
-            )
-            ranks, row = ckpt.save_and_agg(
-                new_ranks,
-                it,
-                {"algo": "pagerank_csr"},
-                [
-                    F.sum(F.abs(F.col("rank") - F.col("prev_rank"))).alias("delta"),
-                    _dangling_agg,
-                ],
+            state, row = ckpt.save_and_agg(
+                new_state, it, {"algo": algo}, [delta_agg, dangling_agg]
             )
             delta, dangling = float(row["delta"]), float(row["dangling"])
-            deltas.append(float(delta))
-            ckpt.log(it, {"algo": "pagerank_csr", "delta": float(delta)})
+            deltas.append(delta)
             if delta < tol:
                 converged = True
                 break
-    csr.unpersist()
-    return PageRankResult(ranks.select("id", "rank"), it, converged, deltas)
+        if ckpt.base_dir and it % ckpt.every != 0:
+            # last superstep fell between durable checkpoints — persist
+            # it (same-iteration re-save would overwrite the path being
+            # read, hence only off-cadence)
+            state = ckpt.save(state, it, {"algo": algo, "final": True}, force=True)
+    # the returned state must outlive this manager's release chain, and
+    # long-lived sessions must not accumulate the superstep inputs
+    ckpt.detach_chain()
+    verts.unpersist()
+    return PageRankResult(state.select("id", "rank"), it, converged, deltas)

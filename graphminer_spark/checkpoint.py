@@ -11,6 +11,9 @@ state through a :class:`CheckpointManager`:
   ``metrics.jsonl`` carrying the convergence metric *and* per-partition
   lineage (partition → row count), then returns a fresh DataFrame read
   back from disk (lineage truncated to one scan).
+* ``save_and_agg(state, iteration, metrics, aggs)`` does the same and
+  computes the superstep's convergence scalars in the materializing
+  action; they join ``metrics`` in the superstep's one record.
 * ``latest()`` finds the newest checkpoint so a killed run resumes at
   iteration k+1 instead of restarting — the north rule's
   checkpoint/resume requirement.
@@ -24,13 +27,17 @@ For cheap intra-job truncation without durability,
 from __future__ import annotations
 
 import json
+import logging
 import os
 import threading
 import time
 from contextlib import contextmanager
+from decimal import Decimal
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+_log = logging.getLogger(__name__)
 
 # Below this edge count, AQE's per-action re-planning latency dominates
 # a superstep (measured: PageRank at 600k edges runs ~25% faster with
@@ -41,6 +48,14 @@ SUPERSTEP_AQE_MIN_EDGES = 50_000_000
 # serializes AQE-gated superstep loops within one driver process so
 # overlapping loops cannot restore each other's stale conf value
 _AQE_GATE_LOCK = threading.Lock()
+
+
+def _json_scalar(o):
+    """JSON form of aggregate values ``json`` does not know: exact
+    ``decimal`` sums (e.g. CC's decimal(38,0) hash fingerprints)."""
+    if isinstance(o, Decimal):
+        return int(o) if o == o.to_integral_value() else float(o)
+    raise TypeError(f"{type(o).__name__} is not JSON serializable")
 
 
 @contextmanager
@@ -117,6 +132,9 @@ class CheckpointManager:
         self.truncate = truncate
         self.release_chain = release_chain
         self._chain: list[DataFrame] = []
+        self._release_warned = False
+        # (record, byte offset) of the last metrics line written
+        self._last: tuple[dict, int] | None = None
         if base_dir:
             os.makedirs(base_dir, exist_ok=True)
 
@@ -130,8 +148,15 @@ class CheckpointManager:
             old = self._chain.pop(0)
             try:
                 old._jdf.queryExecution().analyzed().rdd().unpersist(False)
-            except Exception:
-                pass  # never let bookkeeping break the algorithm
+            except Exception as e:  # bookkeeping never breaks the algorithm
+                if not self._release_warned:
+                    self._release_warned = True
+                    _log.warning(
+                        "release_chain: unpersist of a superseded state "
+                        "failed (%s); further failures of this manager "
+                        "are not logged and their blocks stay cached", e,
+                        exc_info=True,
+                    )
 
     def detach_chain(self) -> None:
         """Forget (without releasing) the tracked states — call when a
@@ -158,6 +183,43 @@ class CheckpointManager:
             and (force or iteration % self.every == 0)
         )
 
+    def _write(self, state: DataFrame, iteration: int) -> tuple[DataFrame, dict]:
+        """Durable commit: write ``state`` as parquet, read it back
+        (lineage truncated to one scan) and describe the checkpoint."""
+        path = self._iter_dir(iteration)
+        state.write.mode("overwrite").parquet(path)
+        out = state.sparkSession.read.parquet(path)
+        lineage = [
+            {"partition": int(r["p"]), "rows": int(r["rows"])}
+            for r in out.groupBy(F.spark_partition_id().alias("p"))
+            .agg(F.count("*").alias("rows"))
+            .collect()
+        ]
+        # column layout of the saved state (ADVICE r04): a consumer
+        # resuming a directory written by an older code era detects
+        # schema drift from the meta instead of misreading positional
+        # columns (e.g. hits' r03 (id, hub, auth) -> r04 (id, auth,
+        # h_raw) change)
+        return out, {"checkpoint": path, "layout": list(state.columns), "partitions": lineage}
+
+    def _record(self, iteration: int, fields: dict) -> None:
+        """Append the superstep's one metrics record. A re-save of the
+        iteration recorded last (the forced final checkpoint of a loop
+        that stopped between durable saves) amends that record instead
+        of appending a second one."""
+        if self.base_dir is None:
+            return
+        rec = {"iteration": iteration, "ts": time.time(), **fields}
+        with open(self._metrics_path(), "a") as f:
+            if self._last is not None and self._last[0]["iteration"] == iteration:
+                prev, off = self._last
+                rec = {**prev, **rec}
+                f.truncate(off)
+            f.seek(0, os.SEEK_END)
+            off = f.tell()
+            f.write(json.dumps(rec, default=_json_scalar) + "\n")
+        self._last = (rec, off)
+
     def save(
         self,
         state: DataFrame,
@@ -168,40 +230,14 @@ class CheckpointManager:
         """Persist state if due, log metrics, return lineage-truncated
         state DataFrame."""
         if self._durable(iteration, force):
-            path = self._iter_dir(iteration)
-            state.write.mode("overwrite").parquet(path)
-            out = state.sparkSession.read.parquet(path)
-            lineage = [
-                {"partition": int(r["p"]), "rows": int(r["rows"])}
-                for r in out.groupBy(F.spark_partition_id().alias("p"))
-                .agg(F.count("*").alias("rows"))
-                .collect()
-            ]
-            record = {
-                "iteration": iteration,
-                "ts": time.time(),
-                "checkpoint": path,
-                # column layout of the saved state (ADVICE r04): a
-                # consumer resuming a directory written by an older
-                # code era detects schema drift from the meta instead
-                # of misreading positional columns (e.g. hits' r03
-                # (id, hub, auth) -> r04 (id, auth, h_raw) change)
-                "layout": list(state.columns),
-                "partitions": lineage,
-                **metrics,
-            }
-            with open(self._metrics_path(), "a") as f:
-                f.write(json.dumps(record) + "\n")
-            return out
-        # truncate lineage every superstep — plans re-analyze whole
-        # iteration chains otherwise (measured 5-18× slower with cache-
-        # only truncation every 5 steps)
-        out = state.localCheckpoint(eager=True)
-        self._note(out)
-        if self.base_dir is not None:
-            record = {"iteration": iteration, "ts": time.time(), **metrics}
-            with open(self._metrics_path(), "a") as f:
-                f.write(json.dumps(record) + "\n")
+            out, meta = self._write(state, iteration)
+        else:
+            # truncate lineage every superstep — plans re-analyze whole
+            # iteration chains otherwise (measured 5-18× slower with
+            # cache-only truncation every 5 steps)
+            out, meta = state.localCheckpoint(eager=True), {}
+            self._note(out)
+        self._record(iteration, {**meta, **metrics})
         return out
 
     def save_and_agg(
@@ -213,34 +249,26 @@ class CheckpointManager:
         force: bool = False,
     ):
         """Materialize ``state`` AND compute aggregate scalars in ONE
-        driver action: ``(state', Row)``.
+        driver action: ``(state', Row)``. The aggregate row joins
+        ``metrics`` in the superstep's single metrics record.
 
         Non-durable supersteps mark the state with a *lazy*
         ``localCheckpoint`` and run the aggregate on it — the aggregate
         job materializes the checkpoint blocks as a side effect, so the
         superstep costs one barrier instead of save-then-collect's two.
-        Durable supersteps fall back to ``save`` (the parquet write is
-        itself the materializing action) plus a cheap scan of the
-        freshly written files for the aggregate.
+        Durable supersteps write parquet (itself the materializing
+        action) and run the aggregate as a cheap scan of the freshly
+        written files.
         """
         if self._durable(iteration, force):
-            out = self.save(state, iteration, metrics, force=force)
-            return out, out.agg(*aggs).collect()[0]
-        out, row = materialize_with_agg(state, *aggs)
-        self._note(out)
-        if self.base_dir is not None:
-            record = {"iteration": iteration, "ts": time.time(), **metrics}
-            with open(self._metrics_path(), "a") as f:
-                f.write(json.dumps(record) + "\n")
+            out, meta = self._write(state, iteration)
+            row = out.agg(*aggs).collect()[0]
+        else:
+            out, row = materialize_with_agg(state, *aggs)
+            meta = {}
+            self._note(out)
+        self._record(iteration, {**meta, **metrics, **row.asDict()})
         return out, row
-
-    def log(self, iteration: int, metrics: dict[str, float | int | str]) -> None:
-        """Append a metrics-only record (no state write)."""
-        if self.base_dir is None:
-            return
-        record = {"iteration": iteration, "ts": time.time(), **metrics}
-        with open(self._metrics_path(), "a") as f:
-            f.write(json.dumps(record) + "\n")
 
     # ----------------------------------------------------------- resume
     def latest(self, spark: SparkSession) -> tuple[int, DataFrame] | None:

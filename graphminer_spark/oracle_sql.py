@@ -292,7 +292,7 @@ def pagerank_sql(n_iter: int, damping: float = 0.85, decimals: int = 6) -> str:
 def wpr_sql(n_iter: int, damping: float = 0.85, decimals: int = 6) -> str:
     """Unrolled weighted PageRank (edge weight = 1 + (src+dst) % 5;
     contrib ∝ w/W_out) — oracle for
-    ``algorithms.pagerank.pagerank_weighted``."""
+    ``algorithms.pagerank.pagerank(weight="w")``."""
     parts = [
         GRAPH_CTES,
         "verts AS (SELECT id FROM deg)",
@@ -332,7 +332,7 @@ def ppr_sql(
     n_iter: int, mod: int = 50, damping: float = 0.85, decimals: int = 6
 ) -> str:
     """Unrolled personalized PageRank (teleport set = ids ≡ 0 mod
-    ``mod``): oracle for ``algorithms.pagerank.personalized_pagerank``."""
+    ``mod``): oracle for ``algorithms.pagerank.pagerank(sources=...)``."""
     parts = [
         GRAPH_CTES,
         f"sv AS (SELECT id, (CASE WHEN id % {mod} = 0 THEN 1.0 ELSE 0.0 END) AS s FROM deg)",

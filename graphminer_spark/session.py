@@ -15,10 +15,13 @@ here is chosen to also be correct at 1000-executor / 100 TB scale:
 
 from __future__ import annotations
 
+import logging
 import os
 import time
 
 from pyspark.sql import SparkSession
+
+_log = logging.getLogger(__name__)
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
@@ -142,7 +145,12 @@ def get_spark(
     app_id = spark.sparkContext.applicationId
     if warmup_s > 0 and app_id not in _WARMED_APP_IDS:
         _WARMED_APP_IDS.add(app_id)
-        _jit_warmup(spark, warmup_s)
+        try:
+            _jit_warmup(spark, warmup_s)
+        except Exception as e:  # a cold JIT is slower, never fatal
+            _log.warning(
+                "session JIT warm-up failed, continuing cold: %s", e, exc_info=True
+            )
     return spark
 
 

@@ -144,15 +144,15 @@ def host_pagerank(
 ) -> DataFrame:
     """Host-level weighted PageRank → ``(host, rank)``: rank splits
     across host out-links proportionally to link count (the
-    Common-Crawl host-rank recipe), via :func:`pagerank_weighted` —
+    Common-Crawl host-rank recipe), via :func:`pagerank` with ``weight`` —
     same fused superstep, dangling-mass redistribution and checkpoint
     lineage as the page-level path."""
-    from graphminer_spark.algorithms.pagerank import pagerank_weighted
+    from graphminer_spark.algorithms.pagerank import pagerank
 
     hosts, hedges = build_host_graph(pages)
     # both tables are dimension-sized — cut lineage once so the
-    # Arrow extraction pass runs exactly once (pagerank_weighted
-    # derives w_out AND its persisted edge table from hedges, which
+    # Arrow extraction pass runs exactly once (pagerank derives the
+    # weighted out-degree AND its persisted edge table from hedges, which
     # would otherwise re-run extract_pages per derivation)
     hosts = hosts.localCheckpoint(eager=True)
     hedges = hedges.localCheckpoint(eager=True)
@@ -162,7 +162,7 @@ def host_pagerank(
         F.xxhash64("dst_host").alias("dst"),
         "w",
     )
-    ranks = pagerank_weighted(wedges, verts, damping, n_iter).ranks
+    ranks = pagerank(wedges, verts, damping, tol=0.0, max_iter=n_iter, weight="w").ranks
     return (
         hosts.select("host", F.xxhash64("host").alias("id"))
         .join(ranks, "id")

@@ -1,5 +1,8 @@
 from __future__ import annotations
 
+import os
+from pathlib import Path
+
 import pytest
 
 from graphminer_spark.session import get_spark
@@ -9,6 +12,30 @@ from graphminer_spark.session import get_spark
 def spark():
     s = get_spark("graphminer-tests", cores=8, shuffle_partitions=8)
     yield s
+
+
+# The reference repository's bundled inputs (checked out next to this
+# repository); GRAPHMINER_REFERENCE_INPUTS points elsewhere. They are not
+# vendored here, so golden-parity tests fail loudly when they are absent.
+REFERENCE_INPUTS = Path(
+    os.environ.get(
+        "GRAPHMINER_REFERENCE_INPUTS",
+        Path(__file__).resolve().parents[2] / "reference" / "inputs",
+    )
+)
+
+
+def citeseer_dir() -> str:
+    """Path of the reference citeseer graph; fails the calling test with
+    the missing path when the graph is not there."""
+    path = REFERENCE_INPUTS / "citeseer"
+    if not (path / "graph.meta.txt").is_file():
+        pytest.fail(
+            f"citeseer input missing: {path / 'graph.meta.txt'} not found "
+            "(set GRAPHMINER_REFERENCE_INPUTS to the reference inputs dir)",
+            pytrace=False,
+        )
+    return str(path)
 
 
 def edges_df(spark, edges):

@@ -1,0 +1,102 @@
+"""CheckpointManager bookkeeping: one metrics record per superstep, the
+release chain's effect on persisted RDDs, and a warm-up that can fail
+without blocking session creation."""
+
+from __future__ import annotations
+
+import logging
+import random
+
+import pytest
+from pyspark.sql import functions as F
+
+from graphminer_spark.algorithms.components import connected_components
+from graphminer_spark.algorithms.pagerank import pagerank
+from graphminer_spark.checkpoint import CheckpointManager
+
+
+def _graph(spark, n=40, m=160, seed=7):
+    rng = random.Random(seed)
+    edges = sorted({(rng.randrange(n), rng.randrange(n)) for _ in range(m)})
+    edges = [(a, b) for a, b in edges if a != b]
+    return (
+        spark.createDataFrame(edges, "src long, dst long"),
+        spark.range(n).select("id"),
+    )
+
+
+def _iterations(ck):
+    return [r["iteration"] for r in ck.metrics()]
+
+
+def test_one_record_per_superstep(spark, tmp_path):
+    edges, verts = _graph(spark)
+
+    ck = CheckpointManager(str(tmp_path / "cc"), every=1)
+    connected_components(edges, verts, checkpointer=ck).count()
+    its = _iterations(ck)
+    assert its == list(range(len(its))) and len(its) > 1
+    # decimal(38,0) fingerprint sums land in the record as exact ints
+    assert all(isinstance(r["h1"], int) for r in ck.metrics())
+
+    ck = CheckpointManager(str(tmp_path / "pr"), every=1)
+    res = pagerank(edges, verts, tol=1e-8, checkpointer=ck)
+    recs = ck.metrics()
+    assert _iterations(ck) == list(range(res.iterations + 1))
+    assert [r["delta"] for r in recs[1:]] == res.deltas
+    assert all("partitions" in r for r in recs)
+
+
+def test_final_checkpoint_amends_its_superstep_record(spark, tmp_path):
+    """A loop stopping between durable saves checkpoints its last state
+    once more; that save joins the superstep's record."""
+    edges, verts = _graph(spark)
+    ck = CheckpointManager(str(tmp_path / "pr"), every=4)
+    res = pagerank(edges, verts, tol=0.0, max_iter=6, checkpointer=ck)
+    recs = ck.metrics()
+    assert _iterations(ck) == list(range(7))
+    last = recs[-1]
+    assert last["final"] and last["delta"] == res.deltas[-1]
+    assert last["checkpoint"].endswith("iter=000006")
+
+
+@pytest.mark.parametrize("release_chain, kept", [(True, 2), (False, 13)])
+def test_release_chain_persistent_rdds(spark, release_chain, kept):
+    """12 supersteps + the start state are 13 localCheckpoints; the
+    release chain keeps only the last two (the returned state and its
+    predecessor), and the persisted edge/vertex inputs are released."""
+    edges, verts = _graph(spark)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    ck = CheckpointManager(None, release_chain=release_chain)
+    res = pagerank(edges, verts, tol=0.0, max_iter=12, checkpointer=ck)
+    assert res.iterations == 12
+    assert len(set(jsc.getPersistentRDDs().keySet()) - before) == kept
+    assert abs(res.ranks.agg(F.sum("rank")).collect()[0][0] - 1.0) < 1e-9
+
+
+def test_failed_warmup_does_not_block_session(spark, monkeypatch, caplog):
+    from graphminer_spark import session
+
+    def boom(*_):
+        raise RuntimeError("warm-up failed")
+
+    monkeypatch.setattr(session, "_jit_warmup", boom)
+    monkeypatch.setattr(session, "_WARMED_APP_IDS", set())
+    with caplog.at_level(logging.WARNING, logger="graphminer_spark.session"):
+        s = session.get_spark("graphminer-tests", cores=8, shuffle_partitions=8)
+    assert s is spark
+    assert "warm-up failed" in caplog.text
+
+
+def test_release_failure_is_logged_once(caplog):
+    class Gone:
+        @property
+        def _jdf(self):
+            raise RuntimeError("state already gone")
+
+    ck = CheckpointManager(None, release_chain=True)
+    with caplog.at_level(logging.WARNING, logger="graphminer_spark.checkpoint"):
+        for _ in range(6):
+            ck._note(Gone())
+    assert [r.getMessage().startswith("release_chain") for r in caplog.records] == [True]

@@ -180,15 +180,13 @@ def test_personalized_pagerank_semantics(spark):
     PPR power iteration."""
     import numpy as np
 
-    from graphminer_spark.algorithms.pagerank import personalized_pagerank
-
     # component A: 0-1-2 path + dangling 2; component B: 3<->4 (no sources)
     edges = [(0, 1), (1, 2), (3, 4), (4, 3)]
     n, n_iter, d = 5, 8, 0.85
     verts = spark.createDataFrame([(i,) for i in range(n)], "id long")
     srcs = spark.createDataFrame([(0,)], "id long")
     edf = spark.createDataFrame(edges, "src long, dst long")
-    res = personalized_pagerank(edf, verts, srcs, damping=d, n_iter=n_iter)
+    res = pagerank(edf, verts, damping=d, tol=0.0, max_iter=n_iter, sources=srcs)
     got = {r["id"]: r["rank"] for r in res.ranks.collect()}
 
     # dense reference
@@ -336,15 +334,13 @@ def test_weighted_pagerank_vs_dense(spark):
     reduce to plain PageRank."""
     import numpy as np
 
-    from graphminer_spark.algorithms.pagerank import pagerank, pagerank_weighted
-
     edges = [(0, 1, 3), (0, 2, 1), (1, 2, 2), (3, 0, 5)]  # vertex 2 dangling
     n, iters, d = 4, 6, 0.85
     verts = spark.createDataFrame([(i,) for i in range(n)], "id long")
     wdf = spark.createDataFrame(edges, "src long, dst long, w long")
     got = {
         r["id"]: r["rank"]
-        for r in pagerank_weighted(wdf, verts, n_iter=iters).ranks.collect()
+        for r in pagerank(wdf, verts, tol=0.0, max_iter=iters, weight="w").ranks.collect()
     }
 
     W = np.zeros((n, n))
@@ -368,7 +364,7 @@ def test_weighted_pagerank_vs_dense(spark):
     uw = uni.select("src", "dst", F.lit(1).alias("w"))
     a1 = {
         r["id"]: r["rank"]
-        for r in pagerank_weighted(uw, verts, n_iter=4).ranks.collect()
+        for r in pagerank(uw, verts, tol=0.0, max_iter=4, weight="w").ranks.collect()
     }
     a2 = {
         r["id"]: r["rank"]

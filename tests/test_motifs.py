@@ -22,9 +22,7 @@ from graphminer_spark.algorithms.motifs import (
 from graphminer_spark.algorithms.triangles import clique4_count, triangle_count
 from graphminer_spark.graph.build import build_dag, degrees, symmetrize
 from graphminer_spark.oracles import brute_pattern_counts
-from tests.conftest import edges_df
-
-CITESEER = "/root/reference/inputs/citeseer"
+from tests.conftest import citeseer_dir, edges_df
 
 
 def _random_graph(n, m, seed):
@@ -62,9 +60,9 @@ def test_citeseer_golden_counts(spark):
     reference uses (SURVEY §5)."""
     from graphminer_spark.sources.refgraph import load_ref_graph, read_meta
 
-    meta = read_meta(CITESEER)
+    meta = read_meta(citeseer_dir())
     assert meta["nv"] == 3312 and meta["ne"] == 9072
-    vertices, directed = load_ref_graph(spark, CITESEER, with_vlabels=True)
+    vertices, directed = load_ref_graph(spark, citeseer_dir(), with_vlabels=True)
     # stored directed both ways → canonical undirected edge list
     edges = directed.filter(F.col("src") < F.col("dst")).distinct().persist()
     assert edges.count() == 9072 / 2

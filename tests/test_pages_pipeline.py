@@ -186,7 +186,7 @@ def test_host_graph_rollup_and_pagerank(spark):
     assert got_hosts == exp_hosts
     assert got_edges == exp_edges
 
-    # dense mirror of pagerank_weighted semantics on the host graph
+    # dense mirror of weighted pagerank semantics on the host graph
     names = sorted(exp_hosts)
     ix = {h: i for i, h in enumerate(names)}
     n, iters, d = len(names), 5, 0.85

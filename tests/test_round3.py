@@ -11,7 +11,7 @@ from itertools import combinations
 import pytest
 from pyspark.sql import functions as F
 
-from graphminer_spark.algorithms.pagerank import personalized_pagerank
+from graphminer_spark.algorithms.pagerank import pagerank
 from graphminer_spark.algorithms.patterns import (
     clique_count,
     fsm_edge_support,
@@ -30,9 +30,7 @@ from graphminer_spark.graph.labels import (
     with_synthetic_elabels,
     with_synthetic_labels,
 )
-from tests.conftest import edges_df
-
-CITESEER = "/root/reference/inputs/citeseer"
+from tests.conftest import citeseer_dir, edges_df
 
 
 def _random_graph(n, m, seed):
@@ -66,7 +64,7 @@ def test_citeseer_kclique_chain(spark):
     DFS count on the same DAG."""
     from graphminer_spark.sources.refgraph import load_ref_graph
 
-    _, directed = load_ref_graph(spark, CITESEER)
+    _, directed = load_ref_graph(spark, citeseer_dir())
     edges = directed.filter(F.col("src") < F.col("dst")).distinct()
     dag = build_dag(edges).persist()
     dag_edges = [(r["src"], r["dst"]) for r in dag.collect()]
@@ -390,7 +388,7 @@ def test_pangolin_citeseer_level3(spark):
     from graphminer_spark.algorithms.pangolin import mine_motifs
     from graphminer_spark.sources.refgraph import load_ref_graph
 
-    _, directed = load_ref_graph(spark, CITESEER)
+    _, directed = load_ref_graph(spark, citeseer_dir())
     edges = directed.filter(SF.col("src") < SF.col("dst")).distinct()
     sym = symmetrize(edges, dedup=False)
     got = {r["pattern"]: r["n"] for r in mine_motifs(sym, 3).collect()}
@@ -511,12 +509,12 @@ def test_ppr_duplicate_sources_are_deduplicated(spark):
     dup_srcs = srcs.unionByName(srcs)  # every source twice
     a = {
         r["id"]: r["rank"]
-        for r in personalized_pagerank(df, verts, srcs, n_iter=3).ranks.collect()
+        for r in pagerank(df, verts, tol=0.0, max_iter=3, sources=srcs).ranks.collect()
     }
     b = {
         r["id"]: r["rank"]
-        for r in personalized_pagerank(
-            df, verts, dup_srcs, n_iter=3
+        for r in pagerank(
+            df, verts, tol=0.0, max_iter=3, sources=dup_srcs
         ).ranks.collect()
     }
     assert a.keys() == b.keys()

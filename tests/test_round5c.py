@@ -204,6 +204,36 @@ def test_coloring_deterministic_across_parallelism(spark):
     )
 
 
+def _jp_rounds(edges) -> int:
+    """Jones–Plassmann rounds to color every vertex, replayed in Python
+    with the engine's md5 priorities (ties by id)."""
+    import hashlib
+
+    nbrs = collections.defaultdict(set)
+    for a, b in edges:
+        nbrs[a].add(b)
+        nbrs[b].add(a)
+    key = {v: (int(hashlib.md5(str(v).encode()).hexdigest()[:8], 16), v) for v in nbrs}
+    left, rounds = set(nbrs), 0
+    while left:
+        left -= {v for v in left if all(key[v] > key[u] for u in nbrs[v] & left)}
+        rounds += 1
+    return rounds
+
+
+def test_coloring_completing_at_max_rounds_is_not_exhaustion(spark):
+    """A coloring that finishes in exactly ``max_rounds`` rounds is
+    complete; one round fewer leaves vertices uncolored and raises."""
+    edges = [(i, i + 1) for i in range(12)] + TWO_TRIANGLES
+    need = _jp_rounds(edges)
+    assert need > 1
+    sym = _sym(spark, edges)
+    out, rounds = greedy_coloring(sym, max_rounds=need)
+    assert rounds == need and out.count() == 13
+    with pytest.raises(RuntimeError, match="uncolored"):
+        greedy_coloring(sym, max_rounds=need - 1)
+
+
 def test_coloring_mex_takes_smallest_free_color(spark):
     # star: center adjacent to 3 leaves — leaves all get color 0 or
     # the center does, and the other side gets 1; total colors = 2

@@ -22,9 +22,7 @@ from graphminer_spark.algorithms.subgraph import (
     parse_pattern,
 )
 from graphminer_spark.graph.build import symmetrize
-from tests.conftest import edges_df
-
-CITESEER = "/root/reference/inputs/citeseer"
+from tests.conftest import citeseer_dir, edges_df
 
 
 def _random_graph(n=24, p=0.25, seed=11):
@@ -322,7 +320,7 @@ def test_citeseer_goldens(spark):
     src/count/README.md:44 (hourglass 16,034)."""
     from graphminer_spark.sources.refgraph import load_ref_graph
 
-    _, directed = load_ref_graph(spark, CITESEER)
+    _, directed = load_ref_graph(spark, citeseer_dir())
     sym = directed.persist()  # citeseer stores both directions
     goldens = {
         "rectangle": 6_059,
@@ -451,7 +449,7 @@ def test_motif4_formula_citeseer_goldens(spark):
     from graphminer_spark.sources.refgraph import load_ref_graph
     from pyspark.sql import functions as F
 
-    _, directed = load_ref_graph(spark, CITESEER)
+    _, directed = load_ref_graph(spark, citeseer_dir())
     canon = directed.filter(F.col("src") < F.col("dst"))
     row = motif4_counts(canon, build_dag(canon)).collect()[0]
     assert row["n_4paths_ind"] == 111_153
