@@ -140,9 +140,8 @@ def louvain_one_level(
     Common-Crawl link graph are the canonical application).
     """
     from graphminer_spark.algorithms.mis import _prio
-    from graphminer_spark.checkpoint import CheckpointManager, superstep_planning
+    from graphminer_spark.checkpoint import run_supersteps
 
-    ckpt = checkpointer or CheckpointManager(None, release_chain=True)
     w = (
         F.col(weight_col).cast("long")
         if weight_col
@@ -166,132 +165,130 @@ def louvain_one_level(
     comm = deg.select(
         "id", "deg", F.col("id").alias("c"), (_prio(F.col("id")) % 2).alias("p")
     )
-    comm = ckpt.save(comm, 0, {"algo": "louvain"})
-    # |V| from the materialized round-0 state: gates whether the
-    # per-round community dimension table (tot strength + size, ≤ |V|
-    # rows, shrinking with merges) is broadcast into the propose/commit
-    # joins or shuffle-joined. Broadcasting removes three exchanges per
-    # round; above the cap (a dimension table no executor should hold)
-    # the plan falls back to the shuffle join unchanged.
-    nv = comm.count()
-    broadcast_dims = nv <= 5_000_000
-    with superstep_planning(sym_edges.sparkSession, s_total):
-        for t in range(1, n_rounds + 1):
-            par_t = (t - 1) % 2
-            # ONE community dimension table per round carrying both the
-            # total strength (propose phase) and the member count
-            # (commit guard) — the old plan aggregated comm twice
-            dims = comm.groupBy("c").agg(
-                F.sum("deg").alias("tot"), F.count("*").alias("csz")
-            )
-            if broadcast_dims:
-                dims = F.broadcast(dims)
-            tot = dims.select("c", "tot")
-            # propose: k_vc over neighbor communities — computed only
-            # for THIS round's parity class (the md5 parity is a pure
-            # function of the id, so the restriction is a map-side
-            # filter, not a join; the oracle computes all vertices and
-            # filters at `want`, which is the same result). The current
-            # community is always a candidate (kvc may be 0 when no
-            # neighbor shares it; the groupBy-sum dedups it).
-            nbr_c = comm.select(F.col("id").alias("dst"), F.col("c").alias("nc"))
-            kvc = (
-                e.join(nbr_c, "dst")
-                .filter(F.col("ps") == par_t)
-                .groupBy(F.col("src").alias("id"), F.col("nc").alias("c"))
-                .agg(F.sum("w").cast("long").alias("kvc"))
-            )
-            movers_cur = comm.filter(F.col("p") == par_t)
-            # repartition by id BEFORE the (id, c) aggregate: the
-            # hashpartitioning(id) layout satisfies the (id, c) grouping
-            # by the subset rule AND the downstream joins/argmax keyed
-            # by id — one exchange where the old plan shuffled by
-            # (id, c) and then again by id for the scored join
-            cand = (
-                kvc.unionByName(
-                    movers_cur.select(
-                        "id", "c", F.lit(0).cast("long").alias("kvc")
-                    )
-                )
-                .repartition("id")
-                .groupBy("id", "c")
-                .agg(F.sum("kvc").alias("kvc"))
-            )
-            scored = (
-                cand.join(
-                    movers_cur.select(
-                        "id", "deg", F.col("c").alias("c_cur")
-                    ).hint("shuffle_hash"),
-                    "id",
-                )
-                .join(tot, "c")
-                .select(
-                    "id",
-                    "c",
-                    "c_cur",
-                    (
-                        F.lit(s_total) * F.col("kvc")
-                        - (
-                            F.col("tot")
-                            - F.when(F.col("c") == F.col("c_cur"), F.col("deg"))
-                            .otherwise(F.lit(0))
-                        )
-                        * F.col("deg")
-                    ).alias("gain"),
-                    (F.col("c") == F.col("c_cur")).cast("int").alias("stay"),
+
+    def step(comm: DataFrame, t: int, prev) -> DataFrame:
+        # |V| from the previous round's state: gates whether the
+        # per-round community dimension table (tot strength + size, ≤ |V|
+        # rows, shrinking with merges) is broadcast into the propose/commit
+        # joins or shuffle-joined. Broadcasting removes three exchanges per
+        # round; above the cap (a dimension table no executor should hold)
+        # the plan falls back to the shuffle join unchanged.
+        broadcast_dims = prev["nv"] <= 5_000_000
+        par_t = (t - 1) % 2
+        # ONE community dimension table per round carrying both the
+        # total strength (propose phase) and the member count
+        # (commit guard) — the old plan aggregated comm twice
+        dims = comm.groupBy("c").agg(
+            F.sum("deg").alias("tot"), F.count("*").alias("csz")
+        )
+        if broadcast_dims:
+            dims = F.broadcast(dims)
+        tot = dims.select("c", "tot")
+        # propose: k_vc over neighbor communities — computed only
+        # for THIS round's parity class (the md5 parity is a pure
+        # function of the id, so the restriction is a map-side
+        # filter, not a join; the oracle computes all vertices and
+        # filters at `want`, which is the same result). The current
+        # community is always a candidate (kvc may be 0 when no
+        # neighbor shares it; the groupBy-sum dedups it).
+        nbr_c = comm.select(F.col("id").alias("dst"), F.col("c").alias("nc"))
+        kvc = (
+            e.join(nbr_c, "dst")
+            .filter(F.col("ps") == par_t)
+            .groupBy(F.col("src").alias("id"), F.col("nc").alias("c"))
+            .agg(F.sum("w").cast("long").alias("kvc"))
+        )
+        movers_cur = comm.filter(F.col("p") == par_t)
+        # repartition by id BEFORE the (id, c) aggregate: the
+        # hashpartitioning(id) layout satisfies the (id, c) grouping
+        # by the subset rule AND the downstream joins/argmax keyed
+        # by id — one exchange where the old plan shuffled by
+        # (id, c) and then again by id for the scored join
+        cand = (
+            kvc.unionByName(
+                movers_cur.select(
+                    "id", "c", F.lit(0).cast("long").alias("kvc")
                 )
             )
-            # the argmax payload carries (c, stay, c_cur) so `want`
-            # needs no re-join against comm
-            best = scored.groupBy("id").agg(
-                F.max_by(
-                    F.struct(F.col("c"), F.col("stay"), F.col("c_cur")),
-                    F.struct(
-                        F.col("gain"), F.col("stay"), (-F.col("c")).alias("nc")
-                    ),
-                ).alias("b")
-            )
-            want = best.filter(F.col("b.stay") == 0).select(
+            .repartition("id")
+            .groupBy("id", "c")
+            .agg(F.sum("kvc").alias("kvc"))
+        )
+        scored = (
+            cand.join(
+                movers_cur.select(
+                    "id", "deg", F.col("c").alias("c_cur")
+                ).hint("shuffle_hash"),
                 "id",
-                F.col("b.c").alias("c_new"),
-                F.col("b.c_cur").alias("c_cur"),
             )
-            # commit: every strict-improvement proposal EXCEPT the
-            # singleton↔singleton swap (Grappolo's heuristic): two
-            # adjacent singletons each targeting the other oscillate
-            # forever under synchronous updates, so singleton→singleton
-            # moves only go toward the SMALLER community label. The
-            # sizes come from the round's shared dims table (broadcast
-            # below the nv gate), not a second aggregation of comm.
-            csize = dims.select("c", "csz")
-            movers = (
-                want.join(
-                    csize.select(F.col("c").alias("c_cur"), F.col("csz").alias("sz_cur")),
-                    "c_cur",
-                )
-                .join(
-                    csize.select(F.col("c").alias("c_new"), F.col("csz").alias("sz_new")),
-                    "c_new",
-                )
-                .filter(
-                    ~(
-                        (F.col("sz_cur") == 1)
-                        & (F.col("sz_new") == 1)
-                        & (F.col("c_new") > F.col("c_cur"))
+            .join(tot, "c")
+            .select(
+                "id",
+                "c",
+                "c_cur",
+                (
+                    F.lit(s_total) * F.col("kvc")
+                    - (
+                        F.col("tot")
+                        - F.when(F.col("c") == F.col("c_cur"), F.col("deg"))
+                        .otherwise(F.lit(0))
                     )
-                )
-                .select("id", "c_new")
+                    * F.col("deg")
+                ).alias("gain"),
+                (F.col("c") == F.col("c_cur")).cast("int").alias("stay"),
             )
-            comm = ckpt.save(
-                comm.join(movers.hint("shuffle_hash"), "id", "left").select(
-                    "id",
-                    "deg",
-                    F.coalesce("c_new", F.col("c")).alias("c"),
-                    "p",
+        )
+        # the argmax payload carries (c, stay, c_cur) so `want`
+        # needs no re-join against comm
+        best = scored.groupBy("id").agg(
+            F.max_by(
+                F.struct(F.col("c"), F.col("stay"), F.col("c_cur")),
+                F.struct(
+                    F.col("gain"), F.col("stay"), (-F.col("c")).alias("nc")
                 ),
-                t,
-                {"algo": "louvain"},
+            ).alias("b")
+        )
+        want = best.filter(F.col("b.stay") == 0).select(
+            "id",
+            F.col("b.c").alias("c_new"),
+            F.col("b.c_cur").alias("c_cur"),
+        )
+        # commit: every strict-improvement proposal EXCEPT the
+        # singleton↔singleton swap (Grappolo's heuristic): two
+        # adjacent singletons each targeting the other oscillate
+        # forever under synchronous updates, so singleton→singleton
+        # moves only go toward the SMALLER community label. The
+        # sizes come from the round's shared dims table (broadcast
+        # below the nv gate), not a second aggregation of comm.
+        csize = dims.select("c", "csz")
+        movers = (
+            want.join(
+                csize.select(F.col("c").alias("c_cur"), F.col("csz").alias("sz_cur")),
+                "c_cur",
             )
+            .join(
+                csize.select(F.col("c").alias("c_new"), F.col("csz").alias("sz_new")),
+                "c_new",
+            )
+            .filter(
+                ~(
+                    (F.col("sz_cur") == 1)
+                    & (F.col("sz_new") == 1)
+                    & (F.col("c_new") > F.col("c_cur"))
+                )
+            )
+            .select("id", "c_new")
+        )
+        return comm.join(movers.hint("shuffle_hash"), "id", "left").select(
+            "id", "deg", F.coalesce("c_new", F.col("c")).alias("c"), "p"
+        )
+
+    # the vertex count rides every round's materializing aggregate
+    nv = [F.count("*").alias("nv")]
+    comm, *_ = run_supersteps(
+        checkpointer, "louvain", comm, step, nv, None, n_rounds, s_total,
+        init_aggs=nv,
+    )
     e.unpersist()
     return comm.select("id", "c")
 

@@ -1,6 +1,6 @@
 """Connected components: large-star/small-star hash-min (Kiveris et
-al., "Connected Components in MapReduce and Beyond", SoCC'14) plus a
-simple hash-min fallback.
+al., "Connected Components in MapReduce and Beyond", SoCC'14), plus
+unweighted BFS distances.
 
 The alternating algorithm converges in O(log² n) supersteps regardless
 of diameter — the scale path for web graphs where plain hash-min needs
@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graphminer_spark.checkpoint import CheckpointManager, superstep_planning
+from graphminer_spark.checkpoint import CheckpointManager, run_supersteps
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -83,32 +83,20 @@ def connected_components(
     treats edges as undirected. ``vertices(id)`` optionally supplies
     isolated vertices (label = self).
     """
-    ckpt = checkpointer or CheckpointManager(None, release_chain=True)
     edges = (
         sym_edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
     # ONE action per round: the convergence fingerprint aggregates run
-    # in the same job that materializes the round's checkpointed state
-    edges, row = ckpt.save_and_agg(
-        edges, 0, {"algo": "cc", "phase": "init"}, _fingerprint_aggs()
+    # in the same job that materializes the round's checkpointed state;
+    # AQE is gated on the init fingerprint's first field, the edge count
+    edges, *_ = run_supersteps(
+        checkpointer, "cc", edges,
+        lambda edges, it, prev: _small_star(_large_star(edges)),
+        _fingerprint_aggs(), lambda row, prev: _fp_of(row) == _fp_of(prev),
+        max_iter, lambda row: row["n"], init_aggs=_fingerprint_aggs(),
     )
-    prev_fp = _fp_of(row)
-    # AQE cost-gated for the loop (the init fingerprint's first field
-    # IS the edge count — the gate is free)
-    with superstep_planning(sym_edges.sparkSession, prev_fp[0]):
-        for it in range(1, max_iter + 1):
-            edges, row = ckpt.save_and_agg(
-                _small_star(_large_star(edges)),
-                it,
-                {"algo": "cc", "edges": prev_fp[0]},
-                _fingerprint_aggs(),
-            )
-            fp = _fp_of(row)
-            if fp == prev_fp:
-                break
-            prev_fp = fp
     # converged: edges form stars (u → component-min); roots label selves
     members = edges.select(F.col("u").alias("id"), F.col("v").alias("component"))
     roots = edges.select(F.col("v").alias("id"), F.col("v").alias("component"))
@@ -121,56 +109,6 @@ def connected_components(
     return labels
 
 
-def cc_hashmin(
-    sym_edges: DataFrame,
-    vertices: DataFrame,
-    checkpointer: CheckpointManager | None = None,
-    max_iter: int = 100,
-) -> DataFrame:
-    """Plain hash-min CC (O(diameter) rounds): label(v) ← min(label(v),
-    min_{u∈N(v)} label(u)). Kept as an independent implementation for
-    cross-checking (the reference ships ≥2 kernels per workload for the
-    same reason — e.g. ``src/triangle/omp_base.cc`` vs ``gpu_base.cu``)."""
-    ckpt = checkpointer or CheckpointManager(None, release_chain=True)
-    labels = vertices.select("id", F.col("id").alias("component"))
-    labels = ckpt.save(labels, 0, {"algo": "cc_hashmin"})
-    with superstep_planning(sym_edges.sparkSession, sym_edges.count()):
-        for it in range(1, max_iter + 1):
-            nbr_min = (
-                sym_edges.join(labels, sym_edges["src"] == labels["id"])
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.min("component").alias("nbr_min"))
-            )
-            # carry prev inside the state; changed-count rides the
-            # materializing aggregate — ONE action per round, and no
-            # new⋈old join (which recomputed the superstep a second time)
-            new = (
-                labels.join(nbr_min, "id", "left")
-                .select(
-                    "id",
-                    F.least(
-                        "component", F.coalesce("nbr_min", F.col("component"))
-                    ).alias("component"),
-                    F.col("component").alias("prev"),
-                )
-            )
-            state, row = ckpt.save_and_agg(
-                new,
-                it,
-                {"algo": "cc_hashmin"},
-                [
-                    F.sum(
-                        F.when(F.col("component") != F.col("prev"), 1).otherwise(0)
-                    ).alias("changed")
-                ],
-            )
-            changed = int(row["changed"] or 0)
-            labels = state.select("id", "component")
-            if changed == 0:
-                break
-    return labels
-
-
 def bfs_distances(
     sym_edges: DataFrame,
     source: int,
@@ -180,60 +118,14 @@ def bfs_distances(
     """Unweighted single-source shortest-path distances →
     ``(id, dist)`` over vertices reachable from ``source``.
 
-    Hash-min relaxation (the CC pattern specialized to distances):
-    each round extends the reached set one hop — reached ⋈ edges →
-    candidate dist+1, union, min per vertex — and stops when the
-    reached count and the distance sum are both stable (distances are
-    monotone non-increasing and the reached set monotone growing, so
-    the pair is an exact fixpoint witness). Rounds = eccentricity of
-    the source, each one join + one aggregate — the textbook Pregel
-    BFS as DataFrames.
+    The weighted relaxation of :func:`sssp.sssp` with every edge
+    weight 1: each round extends the reached set one hop from the
+    vertices that changed last round, and stops when no distance
+    changes. Rounds = eccentricity of the source, each one join + one
+    aggregate — the textbook Pregel BFS as DataFrames.
     """
-    ckpt = checkpointer or CheckpointManager(None, release_chain=True)
-    spark = sym_edges.sparkSession
-    d = spark.createDataFrame([(source, 0)], "id long, dist long")
-    d = ckpt.save(d, 0, {"algo": "bfs"})
-    # frontier-restricted expansion: unweighted BFS only ever improves a
-    # vertex once, so candidates need come only from vertices that
-    # changed last round — identical per-round distance tables (an
-    # unchanged u's dist+1 offer was already applied the round u
-    # settled), the oracle unroll matches round-for-round, and each
-    # round joins one frontier's edges instead of the whole reached set
-    frontier = d
-    with superstep_planning(spark, sym_edges.count()):
-        for it in range(1, max_iter + 1):
-            cand_min = (
-                frontier.join(
-                    sym_edges.select(F.col("src").alias("id"), "dst"), "id"
-                )
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.min(F.col("dist") + 1).alias("nd"))
-            )
-            new_d = (
-                d.join(cand_min.hint("shuffle_hash"), "id", "full_outer")
-                .select(
-                    "id",
-                    F.least(
-                        F.coalesce("dist", F.col("nd")),
-                        F.coalesce("nd", F.col("dist")),
-                    ).alias("dist"),
-                    F.coalesce(
-                        F.col("dist").isNull()
-                        | (F.col("nd") < F.col("dist")),
-                        F.lit(False),
-                    ).alias("chg"),
-                )
-            )
-            # changed-count rides the materializing aggregate — ONE
-            # action per round
-            state, row = ckpt.save_and_agg(
-                new_d,
-                it,
-                {"algo": "bfs"},
-                [F.sum(F.col("chg").cast("long")).alias("changed")],
-            )
-            d = state.select("id", "dist")
-            if not int(row["changed"] or 0):
-                break
-            frontier = state.filter("chg").select("id", "dist")
-    return d
+    from graphminer_spark.algorithms.sssp import _relax
+
+    seed = sym_edges.sparkSession.createDataFrame([(source, 0)], "id long, dist long")
+    edges = sym_edges.select("src", "dst", F.lit(1).cast("long").alias("w"))
+    return _relax(edges, seed, sym_edges.count(), checkpointer, max_iter, "bfs")

@@ -3,16 +3,91 @@
 Link-graph companions to PageRank (Kleinberg JACM'99): authority =
 in-sum of hub scores, hub = out-sum of authority scores, L1-normalized
 each half-step. Same superstep shape as ``pagerank`` — one equi-join +
-one aggregate per half-step over the persisted edge table — so the
-plan scales identically.
+one aggregate per half-step over the persisted edge tables, one driver
+action per iteration — so the plan scales identically.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from graphminer_spark.checkpoint import CheckpointManager, superstep_planning
+from graphminer_spark.checkpoint import CheckpointManager, run_supersteps
+
+
+def _iterate(
+    ew: DataFrame,
+    vertices: DataFrame,
+    n_iter: int,
+    checkpointer: CheckpointManager | None,
+    algo: str,
+    to_auth: Column,
+    to_hub: Column,
+) -> DataFrame:
+    """The HITS/SALSA superstep over the edge table ``ew(src, dst, ...)``
+    → ``(id, hub, auth)``. ``to_auth`` is an edge's contribution to its
+    dst's authority (over ``hub`` and the edge's columns), ``to_hub``
+    its contribution to its src's hub score (over ``a_raw``).
+
+    ONE action per iteration: the L1 normalization of ``auth`` cancels
+    out of the next normalized hub score (hub ∝ Σ a_raw, SALSA's
+    hub ∝ Σ a_raw/idg), so an iteration commits the UNnormalized
+    ``(id, a_raw, h_raw)`` and its one fused aggregate returns both
+    sums; the next iteration and the result normalize by them.
+
+    Durable-checkpoint layout: EVERY saved iteration is
+    ``(id, a_raw, h_raw)`` (all ones at iteration 0). A consumer of
+    ``CheckpointManager.latest()`` derives ``hub = h_raw / sum(h_raw)``
+    and ``auth = a_raw / sum(a_raw)`` with one scan, at any iteration."""
+    verts = vertices.select("id").repartition("id").persist()
+    # the two gathers join on DIFFERENT keys (src for the authority
+    # gather, dst for the hub gather) — persist one copy per layout so
+    # neither re-shuffles the edge table (the score side is one row
+    # per vertex and already arrives partitioned by id)
+    e_src = ew.repartition("src").persist()
+    e_dst = ew.repartition("dst").persist()
+    m = e_src.count()
+    e_dst.count()
+
+    def step(state: DataFrame, it: int, prev) -> DataFrame:
+        hub = state.select(
+            F.col("id").alias("src"), (F.col("h_raw") / (prev["sh"] or 1.0)).alias("hub")
+        )
+        a_raw = (
+            e_src.join(hub, "src")
+            .groupBy(F.col("dst").alias("id"))
+            .agg(F.sum(to_auth).alias("a_raw"))
+        )
+        h_raw = (
+            e_dst.join(a_raw.withColumnRenamed("id", "dst"), "dst")
+            .groupBy(F.col("src").alias("id"))
+            .agg(F.sum(to_hub).alias("h_raw"))
+        )
+        return (
+            state.select("id")
+            .join(a_raw, "id", "left")
+            .join(h_raw, "id", "left")
+            .select(
+                "id",
+                F.coalesce("a_raw", F.lit(0.0)).alias("a_raw"),
+                F.coalesce("h_raw", F.lit(0.0)).alias("h_raw"),
+            )
+        )
+
+    sums = [F.sum("a_raw").alias("sa"), F.sum("h_raw").alias("sh")]
+    state, row, *_ = run_supersteps(
+        checkpointer, algo,
+        verts.select("id", F.lit(1.0).alias("a_raw"), F.lit(1.0).alias("h_raw")),
+        step, sums, None, n_iter, m, init_aggs=sums,
+    )
+    verts.unpersist()
+    e_src.unpersist()
+    e_dst.unpersist()
+    return state.select(
+        "id",
+        (F.col("h_raw") / (row["sh"] or 1.0)).alias("hub"),
+        (F.col("a_raw") / (row["sa"] or 1.0)).alias("auth"),
+    )
 
 
 def hits(
@@ -23,90 +98,12 @@ def hits(
 ) -> DataFrame:
     """``(id, hub, auth)`` after ``n_iter`` HITS iterations over the
     directed ``edges(src, dst)``; both score vectors L1-normalize to
-    1.0 every half-step (the convergent formulation).
-
-    Durable-checkpoint layout: EVERY saved iteration (including 0) is
-    ``(id, auth, h_raw)`` — ``h_raw`` UNnormalized (its sum is computed
-    in the same materializing aggregate; at iteration 0 the uniform
-    scores already sum to 1, so h_raw = hub there). A consumer resuming
-    from ``CheckpointManager.latest()`` derives
-    ``hub = h_raw / sum(h_raw)`` with one scan, at any iteration —
-    one schema, no per-iteration branching."""
-    from graphminer_spark.checkpoint import materialize_with_agg
-
-    ckpt = checkpointer or CheckpointManager(None, release_chain=True)
-    verts = vertices.select("id").repartition("id").persist()
-    n = verts.count()
-    # the two half-steps join on DIFFERENT keys (src for the authority
-    # gather, dst for the hub gather) — persist one copy per layout so
-    # neither half-step re-shuffles the edge table (the score side is
-    # one row per vertex and already arrives partitioned by id)
-    e_src = edges.select("src", "dst").repartition("src").persist()
-    e_dst = edges.select("src", "dst").repartition("dst").persist()
-    m = e_src.count()
-    e_dst.count()
-
-    # saved in the SAME (id, auth, h_raw) layout as every fused
-    # iteration (uniform scores sum to 1, so h_raw IS the hub score);
-    # the in-loop state derives hub from it
-    state0 = verts.select(
-        "id", F.lit(1.0 / n).alias("auth"), F.lit(1.0 / n).alias("h_raw")
+    1.0 every half-step (the convergent formulation). Durable
+    checkpoints hold ``(id, a_raw, h_raw)`` (see ``_iterate``)."""
+    return _iterate(
+        edges.select("src", "dst"), vertices, n_iter, checkpointer, "hits",
+        F.col("hub"), F.col("a_raw"),
     )
-    state = ckpt.save(state0, 0, {"algo": "hits"}).select(
-        "id", F.col("h_raw").alias("hub"), "auth"
-    )
-    # ONE action per half-step (2 per iteration): the half-step state is
-    # materialized with the UNnormalized score column, and the same
-    # aggregate job returns the normalization sum — the next projection
-    # divides by it as a literal, so there is no separate collect.
-    with superstep_planning(edges.sparkSession, m):
-        for it in range(1, n_iter + 1):
-            auth_raw = (
-                e_src.join(
-                    state.select(F.col("id").alias("src"), "hub"), "src"
-                )
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.sum("hub").alias("a_raw"))
-            )
-            half, row = materialize_with_agg(
-                state.select("id", "hub").join(auth_raw, "id", "left"),
-                F.sum("a_raw").alias("s"),
-            )
-            ckpt._note(half)  # read only by this iteration's full step
-            a_sum = row["s"] or 1.0
-            with_auth = half.select(
-                "id",
-                "hub",
-                (F.coalesce("a_raw", F.lit(0.0)) / a_sum).alias("auth"),
-            )
-            hub_raw = (
-                e_dst.join(
-                    with_auth.select(F.col("id").alias("dst"), "auth"), "dst"
-                )
-                .groupBy(F.col("src").alias("id"))
-                .agg(F.sum("auth").alias("h_raw"))
-            )
-            # full step goes through the CheckpointManager so durable
-            # cadence still lands parquet states (the saved layout carries
-            # the UNnormalized h_raw + its sum is re-derivable by scan)
-            full, row = ckpt.save_and_agg(
-                with_auth.select("id", "auth")
-                .join(hub_raw, "id", "left")
-                .withColumn("h_raw", F.coalesce("h_raw", F.lit(0.0))),
-                it,
-                {"algo": "hits"},
-                [F.sum("h_raw").alias("s")],
-            )
-            h_sum = row["s"] or 1.0
-            state = full.select(
-                "id",
-                (F.col("h_raw") / h_sum).alias("hub"),
-                "auth",
-            )
-    verts.unpersist()
-    e_src.unpersist()
-    e_dst.unpersist()
-    return state
 
 
 def salsa(
@@ -128,73 +125,17 @@ def salsa(
     the convergent formulation, as in :func:`hits`).
 
     Plan: the degree-annotated edge table ``(src, dst, od, idg)`` is
-    built ONCE and persisted; each half-step is then one equi-join +
-    one partial-combinable aggregate — identical shuffle shape and
-    superstep fusion (ONE driver action per half-step) as
-    :func:`hits`/PageRank, so it scales the same way.
+    built ONCE and persisted; the iteration is then :func:`hits`'s —
+    identical shuffle shape and superstep fusion (ONE driver action per
+    iteration), so it scales the same way.
     """
-    from graphminer_spark.checkpoint import materialize_with_agg
-
-    ckpt = checkpointer or CheckpointManager(None, release_chain=True)
-    verts = vertices.select("id").repartition("id").persist()
-    n = verts.count()
     od = edges.groupBy("src").agg(F.count("*").alias("od"))
     idg = edges.groupBy("dst").agg(F.count("*").alias("idg"))
     ew = edges.select("src", "dst").join(od, "src").join(idg, "dst")
-    # one persisted copy per half-step join key (see `hits`): the
-    # degree-annotated edge table never re-shuffles inside the loop
-    e_src = ew.repartition("src").persist()
-    e_dst = ew.repartition("dst").persist()
-    m = e_src.count()
-    e_dst.count()
-    state = ckpt.save(
-        verts.select(
-            "id", F.lit(1.0 / n).alias("hub"), F.lit(1.0 / n).alias("auth")
-        ),
-        0,
-        {"algo": "salsa"},
+    return _iterate(
+        ew, vertices, n_iter, checkpointer, "salsa",
+        F.col("hub") / F.col("od"), F.col("a_raw") / F.col("idg"),
     )
-    with superstep_planning(edges.sparkSession, m):
-        for it in range(1, n_iter + 1):
-            a_raw = (
-                e_src.join(state.select(F.col("id").alias("src"), "hub"), "src")
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.sum(F.col("hub") / F.col("od")).alias("a_raw"))
-            )
-            half, row = materialize_with_agg(
-                state.select("id", "hub").join(a_raw, "id", "left"),
-                F.sum("a_raw").alias("s"),
-            )
-            ckpt._note(half)  # read only by this iteration's full step
-            a_sum = row["s"] or 1.0
-            with_auth = half.select(
-                "id",
-                "hub",
-                (F.coalesce("a_raw", F.lit(0.0)) / a_sum).alias("auth"),
-            )
-            h_raw = (
-                e_dst.join(
-                    with_auth.select(F.col("id").alias("dst"), "auth"), "dst"
-                )
-                .groupBy(F.col("src").alias("id"))
-                .agg(F.sum(F.col("auth") / F.col("idg")).alias("h_raw"))
-            )
-            full, row = ckpt.save_and_agg(
-                with_auth.select("id", "auth")
-                .join(h_raw, "id", "left")
-                .withColumn("h_raw", F.coalesce("h_raw", F.lit(0.0))),
-                it,
-                {"algo": "salsa"},
-                [F.sum("h_raw").alias("s")],
-            )
-            h_sum = row["s"] or 1.0
-            state = full.select(
-                "id", (F.col("h_raw") / h_sum).alias("hub"), "auth"
-            )
-    verts.unpersist()
-    e_src.unpersist()
-    e_dst.unpersist()
-    return state
 
 
 def clustering_coefficient(

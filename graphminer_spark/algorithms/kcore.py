@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graphminer_spark.checkpoint import CheckpointManager, superstep_planning
+from graphminer_spark.checkpoint import CheckpointManager, run_supersteps
 from graphminer_spark.graph.build import degrees
 
 
@@ -26,29 +26,23 @@ def kcore(
     max_iter: int = 100,
 ) -> DataFrame:
     """Vertices of the k-core → ``(id,)``."""
-    ckpt = checkpointer or CheckpointManager(None, release_chain=True)
+
+    def step(edges: DataFrame, it: int, prev) -> DataFrame:
+        deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
+        keep = deg.filter(F.col("deg") >= k).select("src")
+        return (
+            edges.join(keep, "src", "left_semi")
+            .join(keep.select(F.col("src").alias("dst")), "dst", "left_semi")
+        )
+
     # ONE action per round: the fixpoint check (edge count unchanged)
     # rides the same aggregate that materializes the round's state
-    edges, row = ckpt.save_and_agg(
-        sym_edges.select("src", "dst"), 0, {"algo": f"kcore{k}"},
-        [F.count("*").alias("n")],
+    count = [F.count("*").alias("n")]
+    edges, *_ = run_supersteps(
+        checkpointer, f"kcore{k}", sym_edges.select("src", "dst"), step,
+        count, lambda row, prev: row["n"] == prev["n"], max_iter,
+        lambda row: row["n"], init_aggs=count,
     )
-    old_n = row["n"]
-    with superstep_planning(sym_edges.sparkSession, old_n):
-        for it in range(1, max_iter + 1):
-            deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
-            keep = deg.filter(F.col("deg") >= k).select("src")
-            new_edges = (
-                edges.join(keep, "src", "left_semi")
-                .join(keep.select(F.col("src").alias("dst")), "dst", "left_semi")
-            )
-            edges, row = ckpt.save_and_agg(
-                new_edges, it, {"algo": f"kcore{k}"}, [F.count("*").alias("n")]
-            )
-            new_n = row["n"]
-            if new_n == old_n:
-                break
-            old_n = new_n
     return edges.select(F.col("src").alias("id")).distinct()
 
 
@@ -83,7 +77,6 @@ def core_numbers_hindex(
     can bound ahead of time — changed counts stay 1-27% of |V| for
     most of the 15-round trajectory measured at sf0.1.
     """
-    ckpt = checkpointer or CheckpointManager(None, release_chain=True)
     from pyspark.sql import Window
 
     # edge table persisted in the per-round JOIN key's layout (dst):
@@ -99,49 +92,41 @@ def core_numbers_hindex(
         edges.groupBy(F.col("src").alias("id"))
         .agg(F.count("*").alias("core"))
     )
-    c = ckpt.save(c, 0, {"algo": "coreness_hindex"})
-    m = edges.count()
-    with superstep_planning(sym_edges.sparkSession, m):
-        for it in range(1, max_iter + 1):
-            vals = (
-                edges.join(c.select(F.col("id").alias("dst"), "core"), "dst")
-                .repartition("src")
-                .groupBy("src", "core")
-                .agg(F.count("*").alias("n"))
-            )
-            w = (
-                Window.partitionBy("src")
-                .orderBy(F.col("core").desc())
-                .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            )
-            # h-index over distinct values: cum = #neighbors with value >=
-            # core; candidate h = min(core, cum); h-index = max candidate
-            h = (
-                vals.withColumn("cum", F.sum("n").over(w))
-                .groupBy(F.col("src").alias("id"))
-                .agg(F.max(F.least("core", "cum")).alias("h"))
-            )
-            # h(v) can only decrease; carry prev inside the state AND fold
-            # the changed-count into the materializing aggregate — ONE
-            # driver action per round (same fusion as pagerank)
-            new_c = c.join(h.hint("shuffle_hash"), "id").select(
-                "id", F.col("h").alias("core"), F.col("core").alias("prev")
-            )
-            new_c, row = ckpt.save_and_agg(
-                new_c,
-                it,
-                {"algo": "coreness_hindex"},
-                [
-                    F.sum(
-                        F.when(F.col("core") != F.col("prev"), 1).otherwise(0)
-                    ).alias("changed")
-                ],
-            )
-            c = new_c.select("id", "core")
-            if not row["changed"]:
-                break
+    w = (
+        Window.partitionBy("src")
+        .orderBy(F.col("core").desc())
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+
+    def step(c: DataFrame, it: int, prev) -> DataFrame:
+        c = c.select("id", "core")
+        vals = (
+            edges.join(c.select(F.col("id").alias("dst"), "core"), "dst")
+            .repartition("src")
+            .groupBy("src", "core")
+            .agg(F.count("*").alias("n"))
+        )
+        # h-index over distinct values: cum = #neighbors with value >=
+        # core; candidate h = min(core, cum); h-index = max candidate
+        h = (
+            vals.withColumn("cum", F.sum("n").over(w))
+            .groupBy(F.col("src").alias("id"))
+            .agg(F.max(F.least("core", "cum")).alias("h"))
+        )
+        # h(v) can only decrease; carry prev inside the state so the
+        # changed-count is one scan of the materializing aggregate —
+        # ONE driver action per round (same fusion as pagerank)
+        return c.join(h.hint("shuffle_hash"), "id").select(
+            "id", F.col("h").alias("core"), F.col("core").alias("prev")
+        )
+
+    c, *_ = run_supersteps(
+        checkpointer, "coreness_hindex", c, step,
+        [F.sum(F.when(F.col("core") != F.col("prev"), 1).otherwise(0)).alias("changed")],
+        lambda row, _: not row["changed"], max_iter, edges.count(),
+    )
     edges.unpersist()
-    return c
+    return c.select("id", "core")
 
 
 def core_numbers(

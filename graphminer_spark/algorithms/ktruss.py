@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graphminer_spark.checkpoint import CheckpointManager, superstep_planning
+from graphminer_spark.checkpoint import CheckpointManager, run_supersteps
 from graphminer_spark.graph.build import build_dag
 
 
@@ -91,59 +91,45 @@ def ktruss(
     und = sym_edges.filter(F.col("src") < F.col("dst")).select("src", "dst")
     if k <= 2:
         return und
-    ckpt = checkpointer or CheckpointManager(None, release_chain=True)
-    und, row = ckpt.save_and_agg(
-        und, 0, {"algo": f"ktruss{k}"}, [F.count("*").alias("n")]
-    )
-    old_n = row["n"]
-    # orientation is built ONCE: acyclicity is inherited by every
-    # surviving subset, so each round only semi-joins the oriented
-    # table against the survivors (by the canonical key) instead of
-    # re-aggregating degrees. The wedge bound degrades gracefully —
-    # it holds w.r.t. the ORIGINAL degree order, which upper-bounds
-    # the shrinking subgraph's.
+    # orientation is built ONCE and kept out of the release chain (every
+    # round reads it): acyclicity is inherited by every surviving
+    # subset, so each round only semi-joins the oriented table against
+    # the survivors (by the canonical key) instead of re-aggregating
+    # degrees. The wedge bound degrades gracefully — it holds w.r.t.
+    # the ORIGINAL degree order, which upper-bounds the shrinking
+    # subgraph's.
     dag0 = build_dag(und).select(
         "src",
         "dst",
         F.least("src", "dst").alias("ksrc"),
         F.greatest("src", "dst").alias("kdst"),
-    )
-    dag0 = ckpt.save(dag0, 0, {"algo": f"ktruss{k}_dag"})
-    # dag0 (and the round-0 edge set) are read by EVERY round — keep
-    # them out of the release chain; the per-round survivor states
-    # tracked from here on are strictly linear
-    ckpt.detach_chain()
+    ).localCheckpoint(eager=True)
     # surviving-edge count is KNOWN before every round (it rides the
     # materializing aggregate) — below the cap the whole round runs as
     # broadcast joins with zero wedge shuffles, the same plan shape the
     # persisted tc_total cache gets from the planner; above it the
     # shuffle plan is unchanged (a 10^9-edge truss can't broadcast)
     BCAST_MAX_EDGES = 2_000_000
-    with superstep_planning(sym_edges.sparkSession, old_n * 2):
-        for it in range(1, max_iter + 1):
-            small = old_n <= BCAST_MAX_EDGES
-            surv = und.select(
-                F.col("src").alias("ksrc"), F.col("dst").alias("kdst")
-            )
-            dag = dag0.join(
-                F.broadcast(surv) if small else surv,
-                ["ksrc", "kdst"],
-                "left_semi",
-            ).select("src", "dst")
-            sup = _support(dag, broadcast_dag=small)
-            new_und = (
-                und.join(sup, ["src", "dst"])
-                .filter(F.col("cnt") >= k - 2)
-                .select("src", "dst")
-            )
-            und, row = ckpt.save_and_agg(
-                new_und, it, {"algo": f"ktruss{k}"},
-                [F.count("*").alias("n")],
-            )
-            new_n = row["n"]
-            if new_n == old_n:
-                break
-            old_n = new_n
+
+    def step(und: DataFrame, it: int, prev) -> DataFrame:
+        small = prev["n"] <= BCAST_MAX_EDGES
+        surv = und.select(F.col("src").alias("ksrc"), F.col("dst").alias("kdst"))
+        dag = dag0.join(
+            F.broadcast(surv) if small else surv, ["ksrc", "kdst"], "left_semi"
+        ).select("src", "dst")
+        sup = _support(dag, broadcast_dag=small)
+        return (
+            und.join(sup, ["src", "dst"])
+            .filter(F.col("cnt") >= k - 2)
+            .select("src", "dst")
+        )
+
+    count = [F.count("*").alias("n")]
+    und, *_ = run_supersteps(
+        checkpointer, f"ktruss{k}", und, step, count,
+        lambda row, prev: row["n"] == prev["n"], max_iter,
+        lambda row: row["n"] * 2, init_aggs=count,
+    )
     return und
 
 

@@ -19,7 +19,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graphminer_spark.checkpoint import CheckpointManager, superstep_planning
+from graphminer_spark.checkpoint import CheckpointManager, run_supersteps
 
 
 @dataclass
@@ -39,76 +39,56 @@ def label_propagation(
 ) -> LabelPropResult:
     """LP over a symmetric edge table. ``until_stable`` stops early when
     no label changes (convergence metric = changed-vertex count)."""
-    ckpt = checkpointer or CheckpointManager(None, release_chain=True)
     # partitioned by the JOIN key (src): the per-superstep label fetch
     # then reuses this layout with no exchange on the edge side — the
     # old repartition("dst") layout matched neither the join key nor
     # (alone) the aggregate and re-shuffled the edge table every round
     e = sym_edges.select("src", "dst").repartition("src").persist()
     m = e.count()
-    labels = vertices.select("id", F.col("id").alias("label"))
-    labels = ckpt.save(labels, 0, {"algo": "lp"})
-    changed_hist: list[int] = []
-    converged = False
-    it = 0
-    with superstep_planning(sym_edges.sparkSession, m):
-        for it in range(1, n_iter + 1):
-            # ONE exchange per superstep: the edge⋈labels join reuses
-            # both persisted layouts (e by src, labels by id from the
-            # previous round's join output), the explicit repartition
-            # by dst is the superstep's single shuffle, and BOTH
-            # aggregations reuse it — hashpartitioning(dst) satisfies
-            # the (dst, label) grouping by the subset rule, and the
-            # argmax groups by dst itself. (The old plan shuffled three
-            # times: edges to the join key, counts to (dst, label),
-            # then counts again to dst.)
-            counts = (
-                e.join(labels, e["src"] == labels["id"])
-                .repartition("dst")
-                .groupBy(F.col("dst"), F.col("label"))
-                .agg(F.count("*").alias("cnt"))
-            )
-            # argmax by (cnt, -label): max count, ties → smallest label
-            best = counts.groupBy(F.col("dst").alias("id")).agg(
-                F.max_by(
-                    F.col("label"), F.struct(F.col("cnt"), (-F.col("label")).alias("nl"))
-                ).alias("new_label")
-            )
-            # the changed-count is the convergence METRIC — in fixed-
-            # iteration mode it buys nothing, so it only runs when the
-            # caller asked to stop on stability. It reads the prev label
-            # carried INSIDE the saved state (one scan of the checkpoint),
-            # not a new⋈old join, which would both add two exchanges and
-            # recompute the superstep a second time before the save.
-            if until_stable:
-                new = labels.join(best.hint("shuffle_hash"), "id", "left").select(
-                    "id",
-                    F.coalesce("new_label", F.col("label")).alias("label"),
-                    F.col("label").alias("prev_label"),
-                )
-                # ONE action: the changed-count aggregate materializes the
-                # lazily-checkpointed state (save_and_agg fusion)
-                labels, row = ckpt.save_and_agg(
-                    new,
-                    it,
-                    {"algo": "lp"},
-                    [
-                        F.sum(
-                            F.when(
-                                F.col("label") != F.col("prev_label"), 1
-                            ).otherwise(0)
-                        ).alias("changed")
-                    ],
-                )
-                changed = int(row["changed"] or 0)
-                changed_hist.append(changed)
-                if changed == 0:
-                    converged = True
-                    break
-            else:
-                new = labels.join(best.hint("shuffle_hash"), "id", "left").select(
-                    "id", F.coalesce("new_label", F.col("label")).alias("label")
-                )
-                labels = ckpt.save(new, it, {"algo": "lp"})
+
+    def step(labels: DataFrame, it: int, prev) -> DataFrame:
+        # ONE exchange per superstep: the edge⋈labels join reuses
+        # both persisted layouts (e by src, labels by id from the
+        # previous round's join output), the explicit repartition
+        # by dst is the superstep's single shuffle, and BOTH
+        # aggregations reuse it — hashpartitioning(dst) satisfies
+        # the (dst, label) grouping by the subset rule, and the
+        # argmax groups by dst itself. (The old plan shuffled three
+        # times: edges to the join key, counts to (dst, label),
+        # then counts again to dst.)
+        labels = labels.select("id", "label")
+        counts = (
+            e.join(labels, e["src"] == labels["id"])
+            .repartition("dst")
+            .groupBy(F.col("dst"), F.col("label"))
+            .agg(F.count("*").alias("cnt"))
+        )
+        # argmax by (cnt, -label): max count, ties → smallest label
+        best = counts.groupBy(F.col("dst").alias("id")).agg(
+            F.max_by(
+                F.col("label"), F.struct(F.col("cnt"), (-F.col("label")).alias("nl"))
+            ).alias("new_label")
+        )
+        new = labels.join(best.hint("shuffle_hash"), "id", "left")
+        label = F.coalesce("new_label", F.col("label")).alias("label")
+        if until_stable:
+            # the prev label rides INSIDE the saved state, so the
+            # changed-count is one scan of the checkpoint, not a
+            # new⋈old join (which would add two exchanges and recompute
+            # the superstep a second time before the save)
+            return new.select("id", label, F.col("label").alias("prev_label"))
+        return new.select("id", label)
+
+    # the changed-count is the convergence METRIC — in fixed-iteration
+    # mode it buys nothing, so it only runs when the caller asked to
+    # stop on stability (then ONE action: it materializes the state)
+    changed = F.sum(F.when(F.col("label") != F.col("prev_label"), 1).otherwise(0))
+    labels, _, rows, it, converged = run_supersteps(
+        checkpointer, "lp", vertices.select("id", F.col("id").alias("label")),
+        step, [changed.alias("changed")] if until_stable else [],
+        (lambda row, _: not row["changed"]) if until_stable else None,
+        n_iter, m,
+    )
     e.unpersist()
-    return LabelPropResult(labels.select("id", "label"), it, converged, changed_hist)
+    hist = [int(r["changed"] or 0) for r in rows] if until_stable else []
+    return LabelPropResult(labels.select("id", "label"), it, converged, hist)

@@ -23,8 +23,9 @@ LMFAO-style: all of a pass's aggregates in one scan), so
 ``sum(rank) == 1`` holds at every step (asserted in tests).
 
 Convergence: L1 delta < tol (north rule: per-vertex allclose 1e-6);
-``tol=0.0`` runs exactly ``max_iter`` supersteps. State checkpoints via
-:class:`CheckpointManager` → resumable.
+``tol=0.0`` runs exactly ``max_iter`` supersteps. The loop runs through
+:func:`checkpoint.run_supersteps`; with a durable
+:class:`CheckpointManager` a killed run resumes from its latest state.
 """
 
 from __future__ import annotations
@@ -36,7 +37,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graphminer_spark.checkpoint import CheckpointManager, superstep_planning
+from graphminer_spark.checkpoint import CheckpointManager, run_supersteps
 
 
 @dataclass
@@ -206,7 +207,7 @@ def _iterate(
     init_ranks: DataFrame | None,
     algo: str,
 ) -> PageRankResult:
-    """The PageRank superstep loop over the persisted vertex state
+    """The PageRank superstep over the persisted vertex state
     ``verts(id, out_deg[, s])`` (unpersisted on return); ``contribs``
     maps a rank state to ``(id, contrib)``, the one step the physical
     strategies do differently. ``m`` (edges) gates AQE for the loop."""
@@ -234,7 +235,6 @@ def _iterate(
         start_iter, state = latest
         if set(carry) - set(state.columns):  # older checkpoint layout
             state = state.select("id", "rank").join(verts, "id")
-        row = state.agg(dangling_agg).collect()[0]
     else:
         start_iter = 0
         tele = F.col("s") / n_tele if personal else F.lit(1.0 / n)
@@ -250,47 +250,31 @@ def _iterate(
             ).select("id", F.coalesce("r0", "rank").alias("rank"), *carry)
             total = float(state.agg(F.sum("rank")).collect()[0][0])
             state = state.withColumn("rank", F.col("rank") / total)
-        state, row = ckpt.save_and_agg(state, 0, {"algo": algo}, [dangling_agg])
-    dangling = float(row["dangling"])
 
-    deltas: list[float] = []
-    converged = False
-    it = start_iter
-    # ONE action per superstep: the new state is lazily checkpointed and
-    # a single fused aggregate — L1 delta AND the next superstep's
-    # dangling mass — materializes it (save_and_agg). prev_rank rides
-    # inside the new state so that aggregate is one SCAN of the
-    # checkpointed state — no per-superstep state⋈prev join (each cost
-    # two exchanges). AQE is cost-gated for the loop (superstep_planning:
-    # per-action re-planning dominates sub-second supersteps on small
-    # graphs; stays ON at web scale where it pays).
-    with superstep_planning(spark, m):
-        for it in range(start_iter + 1, max_iter + 1):
-            back = F.lit((1.0 - damping) / n_tele + damping * dangling / n_tele)
-            new_state = state.join(
-                contribs(state).hint("shuffle_hash"), "id", "left"
-            ).select(
-                "id",
-                ((back * F.col("s") if personal else back)
-                 + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))).alias("rank"),
-                *carry,
-                F.col("rank").alias("prev_rank"),
-            )
-            state, row = ckpt.save_and_agg(
-                new_state, it, {"algo": algo}, [delta_agg, dangling_agg]
-            )
-            delta, dangling = float(row["delta"]), float(row["dangling"])
-            deltas.append(delta)
-            if delta < tol:
-                converged = True
-                break
-        if ckpt.base_dir and it % ckpt.every != 0:
-            # last superstep fell between durable checkpoints — persist
-            # it (same-iteration re-save would overwrite the path being
-            # read, hence only off-cadence)
-            state = ckpt.save(state, it, {"algo": algo, "final": True}, force=True)
-    # the returned state must outlive this manager's release chain, and
-    # long-lived sessions must not accumulate the superstep inputs
-    ckpt.detach_chain()
+    def step(state: DataFrame, it: int, prev) -> DataFrame:
+        # prev_rank rides inside the new state, so the fused aggregate
+        # (L1 delta AND the next superstep's dangling mass) is one SCAN
+        # of the checkpointed state — no per-superstep state⋈prev join
+        # (each cost two exchanges)
+        dangling = float(prev["dangling"])
+        back = F.lit((1.0 - damping) / n_tele + damping * dangling / n_tele)
+        return state.join(
+            contribs(state).hint("shuffle_hash"), "id", "left"
+        ).select(
+            "id",
+            ((back * F.col("s") if personal else back)
+             + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))).alias("rank"),
+            *carry,
+            F.col("rank").alias("prev_rank"),
+        )
+
+    # resume needs the last superstep durable even off the cadence
+    state, _, rows, it, converged = run_supersteps(
+        ckpt, algo, state, step, [delta_agg, dangling_agg],
+        lambda row, _: row["delta"] < tol, max_iter, m,
+        init_aggs=[dangling_agg], start=start_iter, final_save=True,
+    )
     verts.unpersist()
-    return PageRankResult(state.select("id", "rank"), it, converged, deltas)
+    return PageRankResult(
+        state.select("id", "rank"), it, converged, [float(r["delta"]) for r in rows]
+    )

@@ -19,10 +19,11 @@ Algorithm — iterated min-label forward/backward intersection (the
 Each outer round settles at least every SCC that is the minimum-id
 "color root" of its reachability region (many per round in practice);
 the expected outer-round count is logarithmic on web-like graphs.
-Inner supersteps are one equi-join + one min-groupBy each — the CC
-plan — with labels monotone non-increasing, so Σlabel is an exact
-fixpoint witness and the check rides the materializing aggregate
-(ONE driver action per superstep).
+Inner supersteps are the frontier relaxation of :func:`sssp.sssp` with
+zero weights — one equi-join + one min-groupBy each — with labels
+monotone non-increasing, so a round that changes no label is an exact
+fixpoint witness and the check rides the materializing aggregate (ONE
+driver action per superstep).
 
 The DuckDB oracle is algorithm-independent: exact SCC ids via
 recursive reachability, ``scc(v) = min{r : v→*r ∧ r→*v}`` — it cannot
@@ -39,63 +40,29 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from graphminer_spark.algorithms.sssp import _relax
 from graphminer_spark.checkpoint import CheckpointManager, superstep_planning
 
 
 def _min_label_fixpoint(
     dedges: DataFrame,
     verts: DataFrame,
+    m: int,
     ckpt: CheckpointManager,
     algo: str,
     max_iter: int = 100,
 ) -> DataFrame:
     """min-label propagation along edge direction to fixpoint →
     ``(id, lbl)`` where lbl = min id with a directed path TO id
-    (including id itself)."""
-    lbl = verts.select("id", F.col("id").alias("lbl"))
-    lbl, row = ckpt.save_and_agg(
-        lbl, 0, {"algo": algo}, [F.sum("lbl").alias("s")]
-    )
-    # frontier-restricted propagation: labels are monotone
-    # non-increasing, so a push from an unchanged u repeats an offer
-    # already applied — per-round label tables are IDENTICAL to the
-    # full-relaxation loop (the oracle is reachability-based and
-    # algorithm-independent anyway) while each round joins only the
-    # out-edges of last round's changed vertices
-    frontier = lbl
-    for it in range(1, max_iter + 1):
-        pushed = (
-            frontier.join(
-                dedges.select("src", "dst"), frontier["id"] == dedges["src"]
-            )
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min("lbl").alias("in_lbl"))
-        )
-        new_lbl = (
-            lbl.join(pushed.hint("shuffle_hash"), "id", "left")
-            .select(
-                "id",
-                F.least(
-                    "lbl", F.coalesce("in_lbl", F.col("lbl"))
-                ).alias("lbl"),
-                F.coalesce(
-                    F.col("in_lbl") < F.col("lbl"), F.lit(False)
-                ).alias("chg"),
-            )
-        )
-        state, row = ckpt.save_and_agg(
-            new_lbl, it, {"algo": algo},
-            [F.sum(F.col("chg").cast("long")).alias("changed")],
-        )
-        lbl = state.select("id", "lbl")
-        if not int(row["changed"] or 0):
-            break
-        frontier = state.filter("chg").select("id", "lbl")
-    # the returned fixpoint outlives the NEXT fixpoint's loop (fwd is
-    # joined with bwd after bwd finishes) — stop tracking it so the
-    # shared manager's release chain can never free it
-    ckpt.detach_chain()
-    return lbl
+    (including id itself): the shared relaxation with w = 0 and every
+    vertex seeded at its own id. ``run_supersteps`` detaches the returned
+    fixpoint from the release chain, so it outlives the NEXT fixpoint's
+    loop (fwd is joined with bwd after bwd finishes)."""
+    return _relax(
+        dedges.select("src", "dst", F.lit(0).cast("long").alias("w")),
+        verts.select("id", F.col("id").alias("dist")),
+        m, ckpt, max_iter, algo,
+    ).withColumnRenamed("dist", "lbl")
 
 
 def strongly_connected_components(
@@ -115,16 +82,17 @@ def strongly_connected_components(
         .localCheckpoint(eager=True)
     )
     assigned = spark.createDataFrame([], "id long, scc long")
-    with superstep_planning(spark, edges.count()):
+    m = edges.count()
+    with superstep_planning(spark, m):
         for outer in range(1, max_outer + 1):
             fwd = _min_label_fixpoint(
-                edges, verts, ckpt, f"scc_f{outer}"
+                edges, verts, m, ckpt, f"scc_f{outer}"
             ).withColumnRenamed("lbl", "f")
             rev = edges.select(
                 F.col("dst").alias("src"), F.col("src").alias("dst")
             )
             bwd = _min_label_fixpoint(
-                rev, verts, ckpt, f"scc_b{outer}"
+                rev, verts, m, ckpt, f"scc_b{outer}"
             ).withColumnRenamed("lbl", "b")
             both = fwd.join(bwd, "id")
             done = both.filter(F.col("f") == F.col("b")).select(

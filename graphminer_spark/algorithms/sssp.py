@@ -12,8 +12,8 @@ Each superstep is one full min-plus relaxation:
 
 — one equi-join + one min-groupBy, the BFS plan with ``+ w`` instead
 of ``+ 1``. Distances are monotone non-increasing and the reached set
-monotone growing, so (count, sum) is an exact fixpoint witness and a
-generous oracle unroll is exact (asserted in pytest).
+monotone growing, so a round that changes nothing is an exact fixpoint
+witness and a generous oracle unroll is exact (asserted in pytest).
 
 Scale: identical shuffle shape to one PageRank superstep. Rounds are
 bounded by the maximum HOP count of a min-weight path (not by total
@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from graphminer_spark.checkpoint import CheckpointManager, superstep_planning
+from graphminer_spark.checkpoint import CheckpointManager, run_supersteps
 
 W_MOD = 9  # weights in [1, 1 + W_MOD - 1] = [1, 9] + 1 → [1, 10)
 
@@ -65,6 +65,62 @@ def weighted_edges(sym_edges: DataFrame) -> DataFrame:
     )
 
 
+def _relax(
+    edges: DataFrame,
+    seeds: DataFrame,
+    m: int,
+    checkpointer: CheckpointManager | None,
+    max_iter: int,
+    algo: str,
+) -> DataFrame:
+    """Min-plus relaxation to fixpoint over ``edges(src, dst, w)`` from
+    ``seeds(id, dist)`` → ``(id, dist)`` — the one loop behind SSSP,
+    BFS (w = 1) and SCC's min-label reachability (w = 0, every vertex
+    seeded with its own id). ``m`` gates AQE for the loop.
+
+    Frontier-restricted (the queue form of Bellman–Ford): only vertices
+    whose distance improved last round emit candidates. The per-round
+    distance table is IDENTICAL to the full relaxation — a candidate
+    from an unchanged u, dist_{t-1}(u) + w, was already offered the
+    round u last changed and applied by monotonicity — so the unrolled
+    oracles still match round-for-round, while each round joins only
+    the frontier's edges instead of all of them (measured: the frontier
+    falls below 1% of |V| within a few rounds on the sf0.1 divisor-6
+    graph; full-relax rounds were the entire cost of the 8.7 s SSSP
+    bench row). The changed-count rides the materializing aggregate —
+    ONE action per round — and doubles as the fixpoint test."""
+    e = edges.select(F.col("src").alias("id"), "dst", "w")
+
+    def step(state: DataFrame, it: int, prev) -> DataFrame:
+        cand_min = (
+            state.filter("chg").select("id", "dist").join(e, "id")
+            .groupBy(F.col("dst").alias("id"))
+            .agg(F.min(F.col("dist") + F.col("w")).alias("nd"))
+        )
+        return (
+            state.select("id", "dist")
+            .join(cand_min.hint("shuffle_hash"), "id", "full_outer")
+            .select(
+                "id",
+                F.least(
+                    F.coalesce("dist", F.col("nd")),
+                    F.coalesce("nd", F.col("dist")),
+                ).alias("dist"),
+                F.coalesce(
+                    F.col("dist").isNull() | (F.col("nd") < F.col("dist")),
+                    F.lit(False),
+                ).alias("chg"),
+            )
+        )
+
+    state, *_ = run_supersteps(
+        checkpointer, algo, seeds.withColumn("chg", F.lit(True)), step,
+        [F.sum(F.col("chg").cast("long")).alias("changed")],
+        lambda row, _: not row["changed"], max_iter, m,
+    )
+    return state.select("id", "dist")
+
+
 def sssp(
     sym_edges: DataFrame,
     source: int,
@@ -73,59 +129,12 @@ def sssp(
 ) -> DataFrame:
     """Weighted shortest-path distances from ``source`` →
     ``(id, dist)`` over reachable vertices."""
-    ckpt = checkpointer or CheckpointManager(None, release_chain=True)
-    spark = sym_edges.sparkSession
+    seed = sym_edges.sparkSession.createDataFrame([(source, 0)], "id long, dist long")
     ew = weighted_edges(sym_edges).repartition("src").persist()
-    m = ew.count()
-    d = spark.createDataFrame([(source, 0)], "id long, dist long")
-    d = ckpt.save(d, 0, {"algo": "sssp"})
-    # frontier-restricted relaxation (the queue form of Bellman–Ford):
-    # only vertices whose distance improved last round emit candidates.
-    # The per-round distance table is IDENTICAL to the full relaxation
-    # — a candidate from an unchanged u, dist_{t-1}(u) + w, was already
-    # offered the round u last changed and applied by monotonicity — so
-    # the unrolled oracle still matches round-for-round, while each
-    # round joins only the frontier's edges instead of all of them
-    # (measured: the frontier falls below 1% of |V| within a few rounds
-    # on the sf0.1 divisor-6 graph; full-relax rounds were the entire
-    # cost of the 8.7 s bench row).
-    frontier = d
-    with superstep_planning(spark, m):
-        for it in range(1, max_iter + 1):
-            cand_min = (
-                frontier.join(
-                    ew.select(F.col("src").alias("id"), "dst", "w"), "id"
-                )
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.min(F.col("dist") + F.col("w")).alias("nd"))
-            )
-            new_d = (
-                d.join(cand_min.hint("shuffle_hash"), "id", "full_outer")
-                .select(
-                    "id",
-                    F.least(
-                        F.coalesce("dist", F.col("nd")),
-                        F.coalesce("nd", F.col("dist")),
-                    ).alias("dist"),
-                    F.coalesce(
-                        F.col("dist").isNull()
-                        | (F.col("nd") < F.col("dist")),
-                        F.lit(False),
-                    ).alias("chg"),
-                )
-            )
-            state, row = ckpt.save_and_agg(
-                new_d,
-                it,
-                {"algo": "sssp"},
-                [F.sum(F.col("chg").cast("long")).alias("changed")],
-            )
-            d = state.select("id", "dist")
-            if not int(row["changed"] or 0):
-                break
-            frontier = state.filter("chg").select("id", "dist")
-    ew.unpersist()
-    return d
+    try:
+        return _relax(ew, seed, ew.count(), checkpointer, max_iter, "sssp")
+    finally:
+        ew.unpersist()
 
 
 _W_SQL = (

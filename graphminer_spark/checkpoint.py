@@ -3,20 +3,26 @@
 Iterative DataFrame programs grow their lineage (logical plan) every
 superstep; without truncation the plan explodes and the driver OOMs —
 a failure mode the reference never faces (it mutates in-place arrays,
-``src/common/graph.cc``). Every iterative algorithm here routes its
-state through a :class:`CheckpointManager`:
+``src/common/graph.cc``). Every single-state iterative algorithm here
+runs its loop through :func:`run_supersteps`, which routes the state
+through a :class:`CheckpointManager`:
 
+* ``run_supersteps(ckpt, algo, state, step, aggs, stop, ...)`` owns the
+  loop: the default manager, AQE gating (``superstep_planning``), the
+  iteration-0 save, one ``save_and_agg`` per superstep, the stop test
+  and ``detach_chain()`` on return. An algorithm supplies only its step
+  function, its aggregates and its stop predicate.
 * ``save(state, iteration, metrics)`` writes the state DataFrame to
   ``{dir}/iter=NNNNNN`` as parquet, appends a JSON line to
   ``metrics.jsonl`` carrying the convergence metric *and* per-partition
   lineage (partition → row count), then returns a fresh DataFrame read
   back from disk (lineage truncated to one scan).
 * ``save_and_agg(state, iteration, metrics, aggs)`` does the same and
-  computes the superstep's convergence scalars in the materializing
-  action; they join ``metrics`` in the superstep's one record.
-* ``latest()`` finds the newest checkpoint so a killed run resumes at
-  iteration k+1 instead of restarting — the north rule's
-  checkpoint/resume requirement.
+  computes the superstep's aggregates in the materializing action
+  (LMFAO's fused aggregates, SIGMOD'19); they join ``metrics`` in the
+  superstep's one record.
+* ``latest()`` finds the newest checkpoint so a killed PageRank run
+  resumes at iteration k+1 instead of restarting.
 
 In local mode this is plain parquet; on a cluster the same layout
 lands on HDFS/S3/Iceberg (path-addressed, atomic via directory commit).
@@ -33,8 +39,9 @@ import threading
 import time
 from contextlib import contextmanager
 from decimal import Decimal
+from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 _log = logging.getLogger(__name__)
@@ -46,8 +53,9 @@ _log = logging.getLogger(__name__)
 SUPERSTEP_AQE_MIN_EDGES = 50_000_000
 
 # serializes AQE-gated superstep loops within one driver process so
-# overlapping loops cannot restore each other's stale conf value
-_AQE_GATE_LOCK = threading.Lock()
+# overlapping loops cannot restore each other's stale conf value;
+# re-entrant because SCC runs its gated fixpoints inside its gated peel
+_AQE_GATE_LOCK = threading.RLock()
 
 
 def _json_scalar(o):
@@ -86,18 +94,6 @@ def superstep_planning(spark: SparkSession, n_edges: int):
             yield
         finally:
             spark.conf.set("spark.sql.adaptive.enabled", old)
-
-
-def materialize_with_agg(state: DataFrame, *aggs):
-    """Lazy-localCheckpoint ``state`` then run ONE aggregate job that
-    both materializes the checkpoint (truncating lineage) and returns
-    the scalar ``Row`` — one driver action where an eager save followed
-    by a collect would cost two. The building block for fused
-    supersteps (convergence delta / dangling mass / normalization sums
-    computed in the same barrier that commits the new state)."""
-    out = state.localCheckpoint(eager=False)
-    row = out.agg(*aggs).collect()[0]
-    return out, row
 
 
 class CheckpointManager:
@@ -147,7 +143,13 @@ class CheckpointManager:
         if len(self._chain) > 2:
             old = self._chain.pop(0)
             try:
-                old._jdf.queryExecution().analyzed().rdd().unpersist(False)
+                # only a checkpoint's own LogicalRDD is ours to free; any
+                # other plan would unpersist some RDD the caller may hold
+                plan = old._jdf.queryExecution().analyzed()
+                kind = plan.getClass().getSimpleName()
+                if kind != "LogicalRDD":
+                    raise TypeError(f"superseded state is a {kind}, not a LogicalRDD")
+                plan.rdd().unpersist(False)
             except Exception as e:  # bookkeeping never breaks the algorithm
                 if not self._release_warned:
                     self._release_warned = True
@@ -264,8 +266,8 @@ class CheckpointManager:
             out, meta = self._write(state, iteration)
             row = out.agg(*aggs).collect()[0]
         else:
-            out, row = materialize_with_agg(state, *aggs)
-            meta = {}
+            out, meta = state.localCheckpoint(eager=False), {}
+            row = out.agg(*aggs).collect()[0]
             self._note(out)
         self._record(iteration, {**meta, **metrics, **row.asDict()})
         return out, row
@@ -294,3 +296,69 @@ class CheckpointManager:
             return []
         with open(path) as f:
             return [json.loads(line) for line in f if line.strip()]
+
+
+def run_supersteps(
+    checkpointer: CheckpointManager | None,
+    algo: str,
+    state: DataFrame,
+    step: Callable[[DataFrame, int, Row | None], DataFrame],
+    aggs: list,
+    stop: Callable[[Row | None, Row | None], bool] | None,
+    max_iter: int,
+    n_edges: int | Callable[[Row | None], int],
+    init_aggs: list | None = None,
+    start: int = 0,
+    final_save: bool = False,
+) -> tuple[DataFrame, Row | None, list[Row | None], int, bool]:
+    """Run one single-state superstep loop →
+    ``(state, last_row, rows, iterations, converged)``.
+
+    At ``start == 0`` the start ``state`` is saved as iteration 0, with
+    ``save_and_agg(init_aggs)`` when ``init_aggs`` is given and ``save``
+    otherwise; a resumed state (``start = k``) is already committed and
+    only runs ``init_aggs``. Superstep ``it`` then commits
+    ``step(state, it, prev_row)`` — ``prev_row`` is the previous
+    superstep's aggregate row — in ONE ``save_and_agg(aggs)`` action
+    (``save`` when ``aggs`` is empty, and its row is None). The loop
+    converges when ``stop(row, prev_row)`` holds and otherwise ends after
+    ``max_iter``; ``rows`` holds every superstep's row. ``final_save``
+    also commits the last state durably when it fell between durable
+    saves, so a killed run can resume from it (PageRank's contract).
+
+    ``n_edges`` gates AQE for the loop (:func:`superstep_planning`); it
+    may be a function of the iteration-0 row when that row counts the
+    edges. The tracked chain is detached on return, so a shared
+    manager's later loops can never free the returned state."""
+    ckpt = checkpointer or CheckpointManager(None, release_chain=True)
+    meta = {"algo": algo}
+    if start:
+        row = state.agg(*init_aggs).collect()[0] if init_aggs else None
+    elif init_aggs:
+        state, row = ckpt.save_and_agg(state, 0, meta, init_aggs)
+    else:
+        state, row = ckpt.save(state, 0, meta), None
+    if callable(n_edges):
+        n_edges = n_edges(row)
+    rows: list[Row | None] = []
+    converged = False
+    it = start
+    with superstep_planning(state.sparkSession, n_edges):
+        for it in range(start + 1, max_iter + 1):
+            prev, new = row, step(state, it, row)
+            if aggs:
+                state, row = ckpt.save_and_agg(new, it, meta, aggs)
+            else:
+                state, row = ckpt.save(new, it, meta), None
+            rows.append(row)
+            if stop is not None and stop(row, prev):
+                converged = True
+                break
+        if final_save and ckpt.base_dir and it % ckpt.every != 0:
+            # inside the gate like every save of the loop (with AQE on,
+            # the lineage aggregate of the write runs as two jobs); a
+            # same-iteration re-save would overwrite the path being
+            # read, hence only off-cadence
+            state = ckpt.save(state, it, {**meta, "final": True}, force=True)
+    ckpt.detach_chain()
+    return state, row, rows, it, converged

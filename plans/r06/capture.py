@@ -9,9 +9,10 @@ once with the optimized tree (``suffix=after``); the files land as
 ``<outdir>/<query>_<suffix>.txt``.
 
 Loop superstep plans are captured by patching the checkpoint layer: each
-``save``/``save_and_agg``/``materialize_with_agg`` dumps the incoming
-state's formatted plan under the active tag, and the LAST dump per tag
-(the steady-state superstep, where partition-reuse is visible) is kept.
+``save``/``save_and_agg`` (and ``materialize_with_agg`` on trees that
+still have it) dumps the incoming state's formatted plan under the
+active tag, and the LAST dump per tag (the steady-state superstep,
+where partition-reuse is visible) is kept.
 Non-loop queries are explained directly.
 """
 
@@ -50,7 +51,8 @@ def _record(state):
 
 _orig_save = cp.CheckpointManager.save
 _orig_sagg = cp.CheckpointManager.save_and_agg
-_orig_mwa = cp.materialize_with_agg
+# trees before checkpoint.run_supersteps had a third entry point
+_orig_mwa = getattr(cp, "materialize_with_agg", None)
 
 
 def _save(self, state, iteration, metrics, force=False):
@@ -70,17 +72,18 @@ def _mwa(state, *aggs):
 
 cp.CheckpointManager.save = _save
 cp.CheckpointManager.save_and_agg = _sagg
-cp.materialize_with_agg = _mwa
-# algorithms that did `from ... import materialize_with_agg` at module load
-for modname in ("coloring", "hits"):
-    try:
-        mod = __import__(
-            f"graphminer_spark.algorithms.{modname}", fromlist=[modname]
-        )
-        if hasattr(mod, "materialize_with_agg"):
-            mod.materialize_with_agg = _mwa
-    except Exception:
-        pass
+if _orig_mwa is not None:
+    cp.materialize_with_agg = _mwa
+    # algorithms that did `from ... import materialize_with_agg` at module load
+    for modname in ("coloring", "hits"):
+        try:
+            mod = __import__(
+                f"graphminer_spark.algorithms.{modname}", fromlist=[modname]
+            )
+            if hasattr(mod, "materialize_with_agg"):
+                mod.materialize_with_agg = _mwa
+        except Exception:
+            pass
 
 from graphminer_spark.algorithms.coloring import greedy_coloring  # noqa: E402
 from graphminer_spark.algorithms.community import louvain_one_level  # noqa: E402

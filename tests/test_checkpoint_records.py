@@ -11,8 +11,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from graphminer_spark.algorithms.components import connected_components
+from graphminer_spark.algorithms.hits import hits
+from graphminer_spark.algorithms.kcore import kcore
+from graphminer_spark.algorithms.labelprop import label_propagation
 from graphminer_spark.algorithms.pagerank import pagerank
 from graphminer_spark.checkpoint import CheckpointManager
+from graphminer_spark.graph.build import symmetrize
 
 
 def _graph(spark, n=40, m=160, seed=7):
@@ -31,13 +35,26 @@ def _iterations(ck):
 
 def test_one_record_per_superstep(spark, tmp_path):
     edges, verts = _graph(spark)
+    sym = symmetrize(edges, dedup=True)
 
-    ck = CheckpointManager(str(tmp_path / "cc"), every=1)
-    connected_components(edges, verts, checkpointer=ck).count()
-    its = _iterations(ck)
-    assert its == list(range(len(its))) and len(its) > 1
-    # decimal(38,0) fingerprint sums land in the record as exact ints
-    assert all(isinstance(r["h1"], int) for r in ck.metrics())
+    # (name, run the loop on manager ck, check (records, run's result))
+    cases = [
+        ("cc", lambda ck: connected_components(edges, verts, checkpointer=ck).count(),
+         # decimal(38,0) fingerprint sums land in the record as exact ints
+         lambda recs, _: all(isinstance(r["h1"], int) for r in recs)),
+        ("lp", lambda ck: label_propagation(sym, verts, 10, ck, until_stable=True),
+         lambda recs, res: [r["changed"] for r in recs[1:]] == res.changed),
+        ("kcore", lambda ck: kcore(sym, 3, checkpointer=ck).count(),
+         lambda recs, _: recs[-1]["n"] == recs[-2]["n"] > 0),
+        ("hits", lambda ck: hits(edges, verts, 4, ck).count(),
+         lambda recs, _: len(recs) == 5 and all(r["sa"] > 0 for r in recs)),
+    ]
+    for name, run, check in cases:
+        ck = CheckpointManager(str(tmp_path / name), every=1)
+        res = run(ck)
+        its = _iterations(ck)
+        assert its == list(range(len(its))) and len(its) > 1, name
+        assert check(ck.metrics(), res), name
 
     ck = CheckpointManager(str(tmp_path / "pr"), every=1)
     res = pagerank(edges, verts, tol=1e-8, checkpointer=ck)
@@ -45,6 +62,24 @@ def test_one_record_per_superstep(spark, tmp_path):
     assert _iterations(ck) == list(range(res.iterations + 1))
     assert [r["delta"] for r in recs[1:]] == res.deltas
     assert all("partitions" in r for r in recs)
+
+
+def test_shared_manager_keeps_returned_state(spark):
+    """A state returned by one loop survives a later loop on the same
+    release-chain manager (its chain is detached on return)."""
+    edges, _ = _graph(spark)
+    sym = symmetrize(edges, dedup=True)
+    ck = CheckpointManager(None, release_chain=True)
+    core = kcore(sym, 3, checkpointer=ck)
+    connected_components(edges, checkpointer=ck).count()
+    adj: dict[int, set[int]] = {}
+    for r in sym.collect():
+        adj.setdefault(r["src"], set()).add(r["dst"])
+    while low := [v for v, ns in adj.items() if len(ns) < 3]:
+        for v in low:
+            for u in adj.pop(v):
+                adj.get(u, set()).discard(v)
+    assert {r["id"] for r in core.collect()} == set(adj)
 
 
 def test_final_checkpoint_amends_its_superstep_record(spark, tmp_path):
@@ -64,11 +99,21 @@ def test_final_checkpoint_amends_its_superstep_record(spark, tmp_path):
 def test_release_chain_persistent_rdds(spark, release_chain, kept):
     """12 supersteps + the start state are 13 localCheckpoints; the
     release chain keeps only the last two (the returned state and its
-    predecessor), and the persisted edge/vertex inputs are released."""
+    predecessor), and the persisted edge/vertex inputs are released.
+    The manager holds every state it returns, so the count does not
+    depend on when the JVM garbage-collects unreachable states."""
+
+    class Holding(CheckpointManager):
+        def save_and_agg(self, *args, **kwargs):
+            out, row = super().save_and_agg(*args, **kwargs)
+            self.held.append(out)
+            return out, row
+
     edges, verts = _graph(spark)
     jsc = spark.sparkContext._jsc
     before = set(jsc.getPersistentRDDs().keySet())
-    ck = CheckpointManager(None, release_chain=release_chain)
+    ck = Holding(None, release_chain=release_chain)
+    ck.held = []
     res = pagerank(edges, verts, tol=0.0, max_iter=12, checkpointer=ck)
     assert res.iterations == 12
     assert len(set(jsc.getPersistentRDDs().keySet()) - before) == kept

@@ -9,7 +9,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from graphminer_spark.algorithms.components import cc_hashmin, connected_components
+from graphminer_spark.algorithms.components import connected_components
 from graphminer_spark.algorithms.labelprop import label_propagation
 from graphminer_spark.algorithms.pagerank import pagerank, pagerank_csr
 from graphminer_spark.checkpoint import CheckpointManager
@@ -60,11 +60,6 @@ def test_cc_random_vs_union_find(spark, seed):
     vdf = _verts(spark, 300)
     got = {r["id"]: r["component"] for r in connected_components(df, vdf).collect()}
     assert got == oracle
-    got2 = {
-        r["id"]: r["component"]
-        for r in cc_hashmin(symmetrize(df, dedup=False), vdf).collect()
-    }
-    assert got2 == oracle
 
 
 def test_cc_long_path(spark):
@@ -320,9 +315,9 @@ def test_bfs_rounds_within_oracle_unroll(spark):
     class CountingCkpt(CheckpointManager):
         rounds = 0
 
-        def save(self, df, it, meta=None):
-            CountingCkpt.rounds = max(CountingCkpt.rounds, it)
-            return super().save(df, it, meta)
+        def save_and_agg(self, state, iteration, metrics, aggs, force=False):
+            CountingCkpt.rounds = max(CountingCkpt.rounds, iteration)
+            return super().save_and_agg(state, iteration, metrics, aggs, force)
 
     d = bfs_distances(sym, source=0, checkpointer=CountingCkpt(None))
     assert d.count() > 1

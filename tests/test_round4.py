@@ -608,8 +608,9 @@ def test_pangolin_atlas_rejects_out_of_range_k(spark, k):
 
 def test_hits_checkpoints_have_one_schema(spark, tmp_path):
     """Every durable HITS checkpoint (including iteration 0) has the
-    (id, auth, h_raw) layout, and hub = h_raw / sum(h_raw) at any
-    iteration reproduces the returned scores."""
+    (id, a_raw, h_raw) layout, and hub = h_raw / sum(h_raw),
+    auth = a_raw / sum(a_raw) at any iteration reproduce the returned
+    scores."""
     from graphminer_spark.algorithms.hits import hits
     from graphminer_spark.checkpoint import CheckpointManager
 
@@ -628,13 +629,13 @@ def test_hits_checkpoints_have_one_schema(spark, tmp_path):
     assert iter_dirs[0] == "iter=000000"
     for d in iter_dirs:
         df = spark.read.parquet(str(tmp_path / "hits" / d))
-        assert sorted(df.columns) == ["auth", "h_raw", "id"]
+        assert sorted(df.columns) == ["a_raw", "h_raw", "id"]
     # latest() resumes with ONE derivation rule, no iteration branching
     last = spark.read.parquet(str(tmp_path / "hits" / iter_dirs[-1]))
-    s = last.agg(F.sum("h_raw")).collect()[0][0]
+    sa, sh = last.agg(F.sum("a_raw"), F.sum("h_raw")).collect()[0]
     for r in last.collect():
-        assert abs(r["h_raw"] / s - out[r["id"]]["hub"]) < 1e-12
-        assert abs(r["auth"] - out[r["id"]]["auth"]) < 1e-12
+        assert abs(r["h_raw"] / sh - out[r["id"]]["hub"]) < 1e-12
+        assert abs(r["a_raw"] / sa - out[r["id"]]["auth"]) < 1e-12
 
 
 # --------------------------------------------- dedup persist lifecycle
