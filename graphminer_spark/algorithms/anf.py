@@ -64,6 +64,48 @@ def _low_zero(m: Column) -> Column:
     return t.bitwiseAND(-t)
 
 
+def _pow(masks) -> Column:
+    """Σ_r 2^{R_r} over the k register masks of one vertex."""
+    return sum((_low_zero(m) for m in masks), F.lit(0))
+
+
+def _init(sym_edges: DataFrame, k: int, *extra: Column):
+    """The superstep inputs shared by every FM read-out →
+    ``(edges, state)``: the edge table partitioned by the join key ONCE
+    and persisted (without this every superstep re-scans and
+    re-shuffles it — measured 2.6 s/superstep vs PageRank's 0.44 s),
+    and the start state ``(id, m0..m{k-1}, *extra)`` of singleton
+    sketches."""
+    edges = sym_edges.select("src", "dst").repartition("src").persist()
+    edges.count()
+    verts = edges.select(F.col("src").alias("id")).distinct()
+    state = verts.select(
+        "id",
+        *[_fm_mask(F.col("id"), r).alias(f"m{r}") for r in range(k)],
+        *extra,
+    )
+    return edges, state
+
+
+def _step(state: DataFrame, edges: DataFrame, k: int, extra=lambda m: []):
+    """One superstep, un-checkpointed: OR every vertex's masks with its
+    neighbors' (one join + a partial-combinable ``bit_or`` groupBy) →
+    ``(id, m0..m{k-1}, *extra(merged))``; ``extra`` derives further
+    columns from the merged mask expressions and the previous state."""
+    nbr = (
+        state.join(edges, state["id"] == edges["src"])
+        .groupBy(F.col("dst").alias("id"))
+        .agg(*[F.bit_or(f"m{r}").alias(f"n{r}") for r in range(k)])
+    )
+    merged = [
+        F.coalesce(F.col(f"n{r}"), F.lit(0)).bitwiseOR(F.col(f"m{r}"))
+        for r in range(k)
+    ]
+    return state.join(nbr, "id", "left").select(
+        "id", *[m.alias(f"m{r}") for r, m in enumerate(merged)], *extra(merged)
+    )
+
+
 def neighborhood_function(
     sym_edges: DataFrame,
     h_max: int = 3,
@@ -78,15 +120,7 @@ def neighborhood_function(
     value); ``est_pairs_s`` = sum_pow / (k·0.77351) rendered ``%.4f`` —
     the estimated number of ordered pairs within distance ≤ h.
     """
-    # edges partitioned by the join key ONCE and persisted — without
-    # this every superstep re-scans and re-shuffles the edge table
-    # (measured 2.6 s/superstep vs PageRank's 0.44 s before the fix)
-    edges = sym_edges.select("src", "dst").repartition("src").persist()
-    edges.count()
-    verts = edges.select(F.col("src").alias("id")).distinct()
-    state = verts.select(
-        "id", *[_fm_mask(F.col("id"), r).alias(f"m{r}") for r in range(k)]
-    )
+    edges, state = _init(sym_edges, k)
 
     def curve_row(h: int, st: DataFrame) -> DataFrame:
         return st.agg(
@@ -104,31 +138,14 @@ def neighborhood_function(
 
     per_h = [curve_row(0, state)] if include_h0 else []
     for h in range(1, h_max + 1):
-        nbr = (
-            state.join(edges, state["id"] == edges["src"])
-            .groupBy(F.col("dst").alias("id"))
-            .agg(*[F.bit_or(f"m{r}").alias(f"n{r}") for r in range(k)])
-        )
-        state = (
-            state.join(nbr, "id", "left")
-            .select(
-                "id",
-                *[
-                    F.coalesce(F.col(f"n{r}"), F.lit(0))
-                    .bitwiseOR(F.col(f"m{r}"))
-                    .alias(f"m{r}")
-                    for r in range(k)
-                ],
-            )
-            # LAZY lineage cut: the loop has no convergence check, so
-            # nothing needs a per-superstep barrier — all h supersteps
-            # and every per-radius curve aggregate materialize inside
-            # the ONE final action (the checkpoint blocks dedup the
-            # shared states, and independent curve aggregates schedule
-            # concurrently with the next superstep's stages instead of
-            # serializing behind h job barriers)
-            .localCheckpoint(eager=False)
-        )
+        # LAZY lineage cut: the loop has no convergence check, so
+        # nothing needs a per-superstep barrier — all h supersteps and
+        # every per-radius curve aggregate materialize inside the ONE
+        # final action (the checkpoint blocks dedup the shared states,
+        # and independent curve aggregates schedule concurrently with
+        # the next superstep's stages instead of serializing behind h
+        # job barriers)
+        state = _step(state, edges, k).localCheckpoint(eager=False)
         per_h.append(curve_row(h, state))
     out = per_h[0]
     for df in per_h[1:]:
@@ -266,34 +283,10 @@ def ball_sizes(
     (exact integer) and ``est_ball_s = sum_pow/(k·0.77351)`` as
     ``%.4f``.  Same superstep dataflow as
     :func:`neighborhood_function`; the output is the h-th state."""
-    edges = sym_edges.select("src", "dst").repartition("src").persist()
-    edges.count()
-    verts = edges.select(F.col("src").alias("id")).distinct()
-    state = verts.select(
-        "id", *[_fm_mask(F.col("id"), r).alias(f"m{r}") for r in range(k)]
-    )
+    edges, state = _init(sym_edges, k)
     for _ in range(h):
-        nbr = (
-            state.join(edges, state["id"] == edges["src"])
-            .groupBy(F.col("dst").alias("id"))
-            .agg(*[F.bit_or(f"m{r}").alias(f"n{r}") for r in range(k)])
-        )
-        state = (
-            state.join(nbr, "id", "left")
-            .select(
-                "id",
-                *[
-                    F.coalesce(F.col(f"n{r}"), F.lit(0))
-                    .bitwiseOR(F.col(f"m{r}"))
-                    .alias(f"m{r}")
-                    for r in range(k)
-                ],
-            )
-            .localCheckpoint(eager=True)
-        )
-    sum_pow = sum(
-        (_low_zero(F.col(f"m{r}")) for r in range(k)), F.lit(0)
-    ).cast("long")
+        state = _step(state, edges, k).localCheckpoint(eager=True)
+    sum_pow = _pow(F.col(f"m{r}") for r in range(k)).cast("long")
     out = state.select(
         "id",
         sum_pow.alias("sum_pow"),
@@ -332,38 +325,15 @@ def harmonic_centrality(
     import math
 
     L = math.lcm(*range(1, h_max + 1))
-    edges = sym_edges.select("src", "dst").repartition("src").persist()
-    edges.count()
-    verts = edges.select(F.col("src").alias("id")).distinct()
-    state = verts.select(
-        "id",
-        *[_fm_mask(F.col("id"), r).alias(f"m{r}") for r in range(k)],
-        F.lit(0).cast("long").alias("num"),
-    )
+    edges, state = _init(sym_edges, k, F.lit(0).cast("long").alias("num"))
+    old_pow = _pow(F.col(f"m{r}") for r in range(k))
     for h in range(1, h_max + 1):
-        nbr = (
-            state.join(edges, state["id"] == edges["src"])
-            .groupBy(F.col("dst").alias("id"))
-            .agg(*[F.bit_or(f"m{r}").alias(f"n{r}") for r in range(k)])
-        )
-        merged = [
-            F.coalesce(F.col(f"n{r}"), F.lit(0)).bitwiseOR(F.col(f"m{r}"))
-            for r in range(k)
-        ]
-        cur_pow = sum((_low_zero(m) for m in merged), F.lit(0))
-        old_pow = sum((_low_zero(F.col(f"m{r}")) for r in range(k)), F.lit(0))
-        state = (
-            state.join(nbr, "id", "left")
-            .select(
-                "id",
-                *[m.alias(f"m{r}") for r, m in enumerate(merged)],
-                (
-                    F.col("num")
-                    + F.lit(L // h) * (cur_pow - old_pow)
-                ).alias("num"),
-            )
-            .localCheckpoint(eager=True)
-        )
+
+        def num(merged):
+            gain = F.lit(L // h) * (_pow(merged) - old_pow)
+            return [(F.col("num") + gain).alias("num")]
+
+        state = _step(state, edges, k, num).localCheckpoint(eager=True)
     out = state.select(
         "id",
         F.col("num").cast("long").alias("harm_num"),

@@ -6,8 +6,8 @@ standard iterate-until-fixpoint: repeatedly drop vertices with degree
 < k and recompute degrees — each round one join + one aggregate, state
 checkpointed like every other iterative algorithm here.
 
-``kcore(edges, k)`` returns the k-core's vertex set; ``core_numbers``
-returns every vertex's coreness (peel with increasing k).
+``kcore(edges, k)`` returns the k-core's vertex set;
+``core_numbers_hindex`` returns every vertex's coreness.
 """
 
 from __future__ import annotations
@@ -16,7 +16,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphminer_spark.checkpoint import CheckpointManager, run_supersteps
-from graphminer_spark.graph.build import degrees
 
 
 def kcore(
@@ -57,8 +56,8 @@ def core_numbers_hindex(
     and repeatedly set c(v) to the h-index of its neighbors' values —
     the unique fixpoint is the coreness.
 
-    Scale shape (the reason this replaces the per-k peeling loop of
-    ``core_numbers`` at 100 TB): every round is one equi-join
+    Scale shape (the reason this replaces a per-k peeling loop at
+    100 TB): every round is one equi-join
     (neighbor value fetch) + one (src, value) pre-aggregation + a
     per-vertex window over DISTINCT neighbor values — a hub with 10^6
     neighbors collapses to ≤ max-coreness window rows, so no
@@ -127,42 +126,3 @@ def core_numbers_hindex(
     )
     edges.unpersist()
     return c.select("id", "core")
-
-
-def core_numbers(
-    sym_edges: DataFrame, max_k: int = 64
-) -> DataFrame:
-    """Coreness per vertex → ``(id, core)``.
-
-    Driver loop over k (the coreness range of web graphs is modest);
-    each level reuses the previous core's edge set, so total work is
-    the telescoping sum the peeling algorithm does natively.
-    """
-    spark = sym_edges.sparkSession
-    edges = sym_edges.select("src", "dst").localCheckpoint(eager=True)
-    all_ids = edges.select(F.col("src").alias("id")).distinct()
-    result = all_ids.select("id", F.lit(0).alias("core")).localCheckpoint(True)
-    for k in range(1, max_k + 1):
-        core_ids = kcore(edges, k)
-        n = core_ids.count()
-        if n == 0:
-            break
-        result = (
-            result.join(core_ids.withColumnRenamed("id", "_kid"),
-                        result["id"] == F.col("_kid"), "left")
-            .select(
-                "id",
-                F.when(F.col("_kid").isNotNull(), F.lit(k))
-                .otherwise(F.col("core"))
-                .alias("core"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        # restrict further peeling to the current core's induced edges
-        keep = core_ids.select(F.col("id").alias("src"))
-        edges = (
-            edges.join(keep, "src", "left_semi")
-            .join(keep.select(F.col("src").alias("dst")), "dst", "left_semi")
-            .localCheckpoint(eager=True)
-        )
-    return result

@@ -545,7 +545,6 @@ def fsm_edge_support(
     sym_edges: DataFrame,
     labeled_vertices: DataFrame,
     minsup: int,
-    _approx_rsd: float | None = None,
 ) -> DataFrame:
     """Frequent single-edge patterns by MNI domain support →
     ``(la, lb, support)`` with la ≤ lb, support ≥ minsup.
@@ -553,15 +552,8 @@ def fsm_edge_support(
     MNI support of pattern (la)-(lb) = min(|distinct u mapped to
     position la|, |distinct v mapped to position lb|) over all edge
     embeddings — the anti-monotone support the reference uses
-    (``src/fsm/domain_support.h``). ``_approx_rsd`` switches the
-    domain counts to HyperLogLog (see :func:`fsm_edge_support_approx`).
+    (``src/fsm/domain_support.h``).
     """
-    if _approx_rsd is None:
-        d1 = F.countDistinct("src").alias("d1")
-        d2 = F.countDistinct("dst").alias("d2")
-    else:
-        d1 = F.approx_count_distinct("src", _approx_rsd).alias("d1")
-        d2 = F.approx_count_distinct("dst", _approx_rsd).alias("d2")
     lab = (
         _labeled_sym(sym_edges, labeled_vertices)
         .select("src", "dst", F.col("ls").alias("la"), F.col("ld").alias("lb"))
@@ -569,7 +561,10 @@ def fsm_edge_support(
     )
     support = (
         lab.groupBy("la", "lb")
-        .agg(d1, d2)
+        .agg(
+            F.countDistinct("src").alias("d1"),
+            F.countDistinct("dst").alias("d2"),
+        )
         .select(
             "la",
             "lb",
@@ -577,33 +572,6 @@ def fsm_edge_support(
         )
     )
     return support.filter(F.col("support") >= minsup)
-
-
-def fsm_edge_support_approx(
-    sym_edges: DataFrame,
-    labeled_vertices: DataFrame,
-    minsup: int,
-    rsd: float = 0.02,
-) -> DataFrame:
-    """Approximate single-edge MNI support via HyperLogLog++
-    (``approx_count_distinct``) — the scale analogue of the reference's
-    early-saturating domain sets (``src/fsm/domain_support.h`` stops
-    inserting once a domain reaches minsup; HLL keeps the per-group
-    state O(1) the same way, where an exact countDistinct shuffles
-    every distinct vertex id per pattern).
-
-    At 10^9+ vertices per frequent pattern the exact distinct count is
-    the FSM bottleneck; this path trades ~rsd relative error for
-    constant-size aggregation state. Support values are approximate —
-    use for the frequent-pattern FRONTIER decision (anti-monotone
-    pruning tolerates slack) and confirm the final level exactly, which
-    is what the reference's saturation trick also implies.
-
-    Delegates to :func:`fsm_edge_support` — one body, two aggregators.
-    """
-    return fsm_edge_support(
-        sym_edges, labeled_vertices, minsup, _approx_rsd=rsd
-    )
 
 
 def fsm_elabel_support(

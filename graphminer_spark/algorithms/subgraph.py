@@ -720,9 +720,7 @@ def canonical_edge_form(
     edges: tuple[tuple[int, int], ...], k: int
 ) -> tuple:
     """Canonical representative of an edge set over vertices 0..k-1:
-    min over all vertex permutations of the sorted pair tuple. The ONE
-    canonicalization shared by the graph atlas and the Pangolin
-    quick-pattern→canonical mapping (lockstep by construction)."""
+    min over all vertex permutations of the sorted pair tuple."""
     return min(
         tuple(sorted(tuple(sorted((p[u], p[v]))) for u, v in edges))
         for p in itertools.permutations(range(k))
@@ -780,15 +778,15 @@ def motif_counts_induced(
     induced matcher.
 
     The edge table is persisted across the per-pattern enumerations
-    (they all scan it; one materialization instead of 21). The
-    Pangolin shared-growth census (``pangolin.mine_motifs``) was
-    benchmarked head-to-head as the alternative and LOSES on the
-    path-dominated census graphs (174.8 s vs 160.2 s at the k=5 gate
-    scale): the symmetry-broken per-pattern joins are output-optimal,
+    (they all scan it; one materialization instead of 21). A
+    Pangolin-style shared-growth census (sorted ``array<long>`` vertex
+    sets grown one vertex per level, classified by an induced-adjacency
+    bitmask) was benchmarked head-to-head as the alternative and LOST
+    on the path-dominated census graphs (174.8 s vs 160.2 s at the k=5
+    gate scale): the symmetry-broken per-pattern joins are output-optimal,
     so their summed cost ≈ the total set count the shared growth also
     pays — plus the shared path's per-level array dedup shuffles.
-    Recorded in BENCH/BASELINE.md; agreement between the two engines
-    stays pytest-asserted.
+    Recorded in BENCH/BASELINE.md.
     """
     sym = sym_edges.persist()
     out = None

@@ -167,59 +167,6 @@ def per_edge_triangles(
     )
 
 
-def triangle_count_csr(dag: DataFrame, num_blocks: int = 32) -> DataFrame:
-    """Second, independent TC implementation: per-block numpy
-    merge-intersections over CSR rows (the reference's actual kernel
-    shape — ``intersection_num`` per DAG edge,
-    ``src/triangle/omp_base.cc:15-21`` — vectorized with
-    ``np.intersect1d`` inside Arrow batches).
-
-    TEST-ONLY: this variant collects the whole DAG adjacency to the
-    driver and broadcasts it — acceptable only for agreement-test
-    graphs that fit one machine. It exists to mirror the reference's
-    ≥2-kernels-per-workload redundancy (SURVEY §5); ``triangle_count``
-    (the join plan, no Python, no driver collect) is the ONLY
-    production path and the one every gate/bench query uses.
-
-    Output: single row ``(n_triangles: long)``.
-    """
-    import numpy as np
-    import pandas as pd
-
-    from graphminer_spark.graph.build import csr_blocks
-
-    spark = dag.sparkSession
-    blocks = csr_blocks(dag, num_blocks=num_blocks)
-    # adjacency of the DAG fits the driver comfortably for graphs whose
-    # vertex count fits one machine (out-deg ≤ O(sqrt m)); at true
-    # 100 TB scale the closing side would be a shuffled CSR partition.
-    # Hub adjacencies may arrive as multiple shard rows — merge them.
-    adj: dict[int, "np.ndarray"] = {}
-    for r in blocks.collect():
-        a = np.asarray(r["nbrs"], dtype=np.int64)
-        prev = adj.get(r["src"])
-        adj[r["src"]] = a if prev is None else np.sort(np.concatenate([prev, a]))
-    badj = spark.sparkContext.broadcast(adj)
-
-    def count_block(pdf: pd.DataFrame) -> pd.DataFrame:
-        a = badj.value
-        total = 0
-        for src, nbrs in zip(pdf["src"], pdf["nbrs"]):
-            # the row's nbrs may be one shard of src's adjacency; the
-            # intersection side must always use the FULL N+(src)
-            n_u = a[int(src)]
-            for v in np.asarray(nbrs, dtype=np.int64):
-                n_v = a.get(int(v))
-                if n_v is not None:
-                    total += len(np.intersect1d(n_u, n_v, assume_unique=True))
-        return pd.DataFrame({"n": [total]})
-
-    partials = blocks.groupBy("block").applyInPandas(
-        count_block, schema="n long"
-    )
-    return partials.agg(F.sum("n").alias("n_triangles"))
-
-
 def clique4_count(dag: DataFrame, tri: DataFrame | None = None) -> DataFrame:
     """4-clique count: extend each triangle by a common out-neighbor.
 

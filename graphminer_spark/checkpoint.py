@@ -149,7 +149,11 @@ class CheckpointManager:
                 kind = plan.getClass().getSimpleName()
                 if kind != "LogicalRDD":
                     raise TypeError(f"superseded state is a {kind}, not a LogicalRDD")
-                plan.rdd().unpersist(False)
+                # SparkContext.unpersistRDD frees the same blocks as
+                # RDD.unpersist without its WARN line, which that method
+                # prints for every locally checkpointed RDD
+                sc = old.sparkSession.sparkContext
+                sc._jsc.sc().unpersistRDD(plan.rdd().id(), False)
             except Exception as e:  # bookkeeping never breaks the algorithm
                 if not self._release_warned:
                     self._release_warned = True

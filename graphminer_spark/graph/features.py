@@ -7,15 +7,11 @@ both the column and the one operator a feature column needs at link-
 graph scale: k-hop neighborhood aggregation (mean/sum), the building
 block of feature smoothing / label-free GNN preprocessing.
 
-Two layouts:
-
-* array form ``(id, feat: array<float>)`` — the reference's per-vertex
-  layout, for API parity;
-* flat form ``(id, d, val)`` — one row per (vertex, dimension), what
-  the joins/aggregations actually consume. At 10^9 vertices × small d
-  the flat table is d·|V| rows partitioned by id — each hop is ONE
-  equi-join against the symmetric edge table plus ONE groupBy, both
-  hub-safe (cost Σ deg(v)·d, linear in |E|).
+Layout: flat ``(id, d, val)`` — one row per (vertex, dimension), what
+the joins/aggregations actually consume. At 10^9 vertices × small d
+the flat table is d·|V| rows partitioned by id — each hop is ONE
+equi-join against the symmetric edge table plus ONE groupBy, both
+hub-safe (cost Σ deg(v)·d, linear in |E|).
 
 Propagation arithmetic is integer basis points (``(10000·Σ) div deg``)
 so Spark and DuckDB agree bit-exactly; synthetic features are integers
@@ -44,19 +40,6 @@ def synthetic_features_flat(vertices: DataFrame, dim: int = FEAT_DIM) -> DataFra
     )
 
 
-def with_synthetic_features(vertices: DataFrame, dim: int = FEAT_DIM) -> DataFrame:
-    """Array layout ``(id, feat: array<float>)`` — the reference's
-    per-vertex ``feat_t`` shape (values = flat form / 1000)."""
-    return vertices.select(
-        "id",
-        F.transform(
-            F.sequence(F.lit(0), F.lit(dim - 1)),
-            lambda d: ((F.col("id") * 31 + d * 17) % 1000).cast("float")
-            / 1000.0,
-        ).alias("feat"),
-    )
-
-
 def propagate_features_flat(
     sym_edges: DataFrame, feats: DataFrame, hops: int = 1
 ) -> DataFrame:
@@ -76,25 +59,3 @@ def propagate_features_flat(
             )
         )
     return out
-
-
-def propagate_features(
-    sym_edges: DataFrame, features: DataFrame, hops: int = 1
-) -> DataFrame:
-    """Array-layout face of :func:`propagate_features_flat`:
-    ``(id, feat array<float>)`` in → same shape out, mean-aggregated
-    ``hops`` times (float values; the flat face is the exact-arithmetic
-    gate surface)."""
-    flat = features.select(
-        "id", F.posexplode("feat").alias("d", "fval")
-    ).select("id", "d", (F.col("fval") * 10000).cast("long").alias("val"))
-    out = propagate_features_flat(sym_edges, flat, hops)
-    # divide out the input scale (10^4) and each hop's basis-point
-    # factor (10^4 per hop) to return to the input's float scale
-    scale = float(10_000 ** (hops + 1))
-    return out.groupBy("id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("d", "val"))),
-            lambda s: (s["val"] / scale).cast("float"),
-        ).alias("feat")
-    )

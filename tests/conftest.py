@@ -5,6 +5,7 @@ from pathlib import Path
 
 import pytest
 
+from graphminer_spark.checkpoint import CheckpointManager
 from graphminer_spark.session import get_spark
 
 
@@ -42,3 +43,20 @@ def edges_df(spark, edges):
     """Canonical (src<dst) edge DataFrame from a python edge list."""
     canon = sorted({(min(a, b), max(a, b)) for a, b in edges if a != b})
     return spark.createDataFrame(canon, "src long, dst long")
+
+
+class CountingCkpt(CheckpointManager):
+    """Non-durable manager that records in ``rounds`` the highest
+    superstep committed through either ``save`` or ``save_and_agg``."""
+
+    def __init__(self):
+        super().__init__(None)
+        self.rounds = 0
+
+    def save(self, state, iteration, metrics, force=False):
+        self.rounds = max(self.rounds, iteration)
+        return super().save(state, iteration, metrics, force)
+
+    def save_and_agg(self, state, iteration, metrics, aggs, force=False):
+        self.rounds = max(self.rounds, iteration)
+        return super().save_and_agg(state, iteration, metrics, aggs, force)

@@ -19,7 +19,7 @@ from graphminer_spark.oracles import (
     sync_label_propagation,
     union_find_cc,
 )
-from tests.conftest import edges_df
+from tests.conftest import CountingCkpt, edges_df
 
 TWO_CLIQUES = [
     (a, b) for c in (0, 5) for a in range(c, c + 5) for b in range(a + 1, c + 5)
@@ -303,7 +303,6 @@ def test_bfs_distances_vs_brute(spark):
 
 def test_bfs_rounds_within_oracle_unroll(spark):
     from graphminer_spark.algorithms.components import bfs_distances
-    from graphminer_spark.checkpoint import CheckpointManager
     from graphminer_spark.graph.build import symmetrize
     from graphminer_spark.graph.tpch_edges import SPARSE_DIVISOR, tpch_edges
 
@@ -312,16 +311,11 @@ def test_bfs_rounds_within_oracle_unroll(spark):
     edges = tpch_edges(spark, "/root/testdata/sf0.001", divisor=SPARSE_DIVISOR)
     sym = symmetrize(edges, dedup=False)
 
-    class CountingCkpt(CheckpointManager):
-        rounds = 0
+    ckpt = CountingCkpt()
 
-        def save_and_agg(self, state, iteration, metrics, aggs, force=False):
-            CountingCkpt.rounds = max(CountingCkpt.rounds, iteration)
-            return super().save_and_agg(state, iteration, metrics, aggs, force)
-
-    d = bfs_distances(sym, source=0, checkpointer=CountingCkpt(None))
+    d = bfs_distances(sym, source=0, checkpointer=ckpt)
     assert d.count() > 1
-    assert CountingCkpt.rounds < entry_mod.BFS_ROUNDS
+    assert ckpt.rounds < entry_mod.BFS_ROUNDS
 
 
 def test_weighted_pagerank_vs_dense(spark):

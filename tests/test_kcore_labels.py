@@ -6,7 +6,7 @@ import random
 
 from pyspark.sql import functions as F
 
-from graphminer_spark.algorithms.kcore import core_numbers, kcore
+from graphminer_spark.algorithms.kcore import kcore
 from graphminer_spark.graph.build import symmetrize
 from graphminer_spark.graph.labels import (
     label_frequency,
@@ -15,7 +15,7 @@ from graphminer_spark.graph.labels import (
     with_synthetic_labels,
 )
 from graphminer_spark.oracles import brute_core_numbers
-from tests.conftest import edges_df
+from tests.conftest import CountingCkpt, edges_df
 
 
 def _random_graph(n, m, seed):
@@ -31,14 +31,6 @@ def test_kcore_vs_peeling_oracle(spark):
         want = {v for v, c in oracle.items() if c >= k}
         got = {r["id"] for r in kcore(sym, k).collect()}
         assert got == want, f"k={k}"
-
-
-def test_core_numbers(spark):
-    edges = _random_graph(80, 300, seed=5)
-    oracle = brute_core_numbers(edges)
-    sym = symmetrize(edges_df(spark, edges), dedup=False)
-    got = {r["id"]: r["core"] for r in core_numbers(sym).collect()}
-    assert got == oracle
 
 
 def test_label_ops(spark):
@@ -63,7 +55,6 @@ def test_kcore_sparse_graph_rounds_within_oracle_unroll(spark):
     Spark fixpoint on the sparse sf0.001 graph must converge well
     inside that bound, and with adaptive k the peel must be non-trivial
     (some vertices removed, some kept)."""
-    from graphminer_spark.checkpoint import CheckpointManager
     from graphminer_spark.graph.build import degrees
     from graphminer_spark.graph.tpch_edges import SPARSE_DIVISOR, tpch_edges
 
@@ -72,17 +63,12 @@ def test_kcore_sparse_graph_rounds_within_oracle_unroll(spark):
     m, n = sym.count(), degrees(sym).count()
     k = max(2, (m // n) * 2 // 3)
 
-    class CountingCkpt(CheckpointManager):
-        rounds = 0
+    ckpt = CountingCkpt()
 
-        def save(self, df, it, meta=None):
-            CountingCkpt.rounds = max(CountingCkpt.rounds, it)
-            return super().save(df, it, meta)
-
-    core = kcore(sym, k=k, checkpointer=CountingCkpt(None))
+    core = kcore(sym, k=k, checkpointer=ckpt)
     n_core = core.count()
     assert 0 < n_core < n
-    assert CountingCkpt.rounds <= 30
+    assert ckpt.rounds <= 30
 
 
 def test_core_numbers_hindex_matches_peeling(spark):
@@ -116,7 +102,6 @@ def test_coreness_hindex_rounds_within_oracle_unroll(spark):
     rounds; the Spark fixpoint on the sparse sf0.001 graph must
     converge inside that bound and produce a non-trivial spread."""
     from graphminer_spark.algorithms.kcore import core_numbers_hindex
-    from graphminer_spark.checkpoint import CheckpointManager
     from graphminer_spark.graph.tpch_edges import SPARSE_DIVISOR, tpch_edges
 
     import __spark_entry__ as entry_mod
@@ -124,16 +109,11 @@ def test_coreness_hindex_rounds_within_oracle_unroll(spark):
     edges = tpch_edges(spark, "/root/testdata/sf0.001", divisor=SPARSE_DIVISOR)
     sym = symmetrize(edges, dedup=False).persist()
 
-    class CountingCkpt(CheckpointManager):
-        rounds = 0
+    ckpt = CountingCkpt()
 
-        def save(self, df, it, meta=None):
-            CountingCkpt.rounds = max(CountingCkpt.rounds, it)
-            return super().save(df, it, meta)
-
-    cn = core_numbers_hindex(sym, checkpointer=CountingCkpt(None))
+    cn = core_numbers_hindex(sym, checkpointer=ckpt)
     cores = {r["core"] for r in cn.collect()}
     assert len(cores) > 1
     # the last round is the no-change confirmation; strict margin under
     # the oracle unroll
-    assert CountingCkpt.rounds < entry_mod.CORENESS_ROUNDS
+    assert ckpt.rounds < entry_mod.CORENESS_ROUNDS

@@ -11,7 +11,7 @@ from __future__ import annotations
 import hashlib
 import math
 
-from conftest import edges_df
+from conftest import CountingCkpt, edges_df
 
 from graphminer_spark.algorithms.ktruss import ktruss
 from graphminer_spark.graph.build import symmetrize
@@ -76,7 +76,6 @@ def test_ktruss_rounds_within_oracle_unroll(spark):
     """The graph_ktruss oracle unrolls KTRUSS_ROUNDS peels; the Spark
     fixpoint on the sf0.001 divisor-20 graph must converge strictly
     inside that bound (monotone peeling ⇒ generous unroll exact)."""
-    from graphminer_spark.checkpoint import CheckpointManager
     from graphminer_spark.graph.tpch_edges import tpch_edges
 
     import __spark_entry__ as entry_mod
@@ -86,15 +85,10 @@ def test_ktruss_rounds_within_oracle_unroll(spark):
     )
     sym = symmetrize(edges, dedup=False)
 
-    class CountingCkpt(CheckpointManager):
-        rounds = 0
+    ckpt = CountingCkpt()
 
-        def save_and_agg(self, state, iteration, metrics, aggs, force=False):
-            CountingCkpt.rounds = max(CountingCkpt.rounds, iteration)
-            return super().save_and_agg(state, iteration, metrics, aggs, force)
-
-    ktruss(sym, k=entry_mod.KTRUSS_K, checkpointer=CountingCkpt(None)).count()
-    assert 0 < CountingCkpt.rounds < entry_mod.KTRUSS_ROUNDS
+    ktruss(sym, k=entry_mod.KTRUSS_K, checkpointer=ckpt).count()
+    assert 0 < ckpt.rounds < entry_mod.KTRUSS_ROUNDS
 
 
 # ---------------------------------------------------------------- harmonic

@@ -278,29 +278,6 @@ def test_no_forced_broadcast_on_vertex_tables(spark):
             spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
 
 
-def test_fsm_approx_support_tracks_exact(spark):
-    """HLL-based support agrees with exact MNI within the configured
-    relative error on every frequent pattern (and finds the same
-    frequent set at a slack-adjusted threshold)."""
-    from graphminer_spark.algorithms.patterns import fsm_edge_support_approx
-
-    edges = _random_graph(200, 800, 21)
-    df = edges_df(spark, edges)
-    sym = symmetrize(df, dedup=False)
-    lv = with_synthetic_labels(degrees(sym).select("id"))
-    exact = {
-        (r["la"], r["lb"]): r["support"]
-        for r in fsm_edge_support(sym, lv, minsup=1).collect()
-    }
-    approx = {
-        (r["la"], r["lb"]): r["support"]
-        for r in fsm_edge_support_approx(sym, lv, minsup=1, rsd=0.02).collect()
-    }
-    assert approx.keys() == exact.keys()
-    for k, v in exact.items():
-        assert abs(approx[k] - v) <= max(3, 0.1 * v), (k, approx[k], v)
-
-
 def test_nlf_map_matches_flat(spark):
     from graphminer_spark.graph.labels import nlf_map
 
@@ -358,109 +335,6 @@ def test_bucketed_edges_aggregate_without_exchange(spark, tmp_path):
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     finally:
         spark.sql("DROP TABLE IF EXISTS bktest_edges")
-
-
-# ------------------------------------- Pangolin-style generic BFS engine
-
-
-@pytest.mark.parametrize("k", [3, 4])
-def test_pangolin_engine_matches_specialized_motifs(spark, k):
-    """The generic extend/reduce engine (BFS levels + quick-pattern
-    bitmask aggregation) agrees with the specialized induced matcher —
-    the Pangolin-vs-AutoMine agreement check, relational edition."""
-    from graphminer_spark.algorithms.pangolin import mine_motifs
-    from graphminer_spark.algorithms.subgraph import motif_counts_induced
-
-    edges = _random_graph(35, 120, 31)
-    df = edges_df(spark, edges)
-    sym = symmetrize(df, dedup=False)
-    want = motif_counts_induced(sym, k).collect()[0].asDict()
-    got = {r["pattern"]: r["n"] for r in mine_motifs(sym, k).collect()}
-    for name, n in want.items():
-        assert got.get(name.removeprefix("n_"), 0) == n, (name, got)
-
-
-def test_pangolin_citeseer_level3(spark):
-    """Citeseer golden parity through the generic engine: 23,380
-    induced wedges + 1,166 triangles (src/motif/README.md)."""
-    from pyspark.sql import functions as SF
-
-    from graphminer_spark.algorithms.pangolin import mine_motifs
-    from graphminer_spark.sources.refgraph import load_ref_graph
-
-    _, directed = load_ref_graph(spark, citeseer_dir())
-    edges = directed.filter(SF.col("src") < SF.col("dst")).distinct()
-    sym = symmetrize(edges, dedup=False)
-    got = {r["pattern"]: r["n"] for r in mine_motifs(sym, 3).collect()}
-    assert got == {"g3_00": 23380, "g3_01": 1166}
-
-
-def test_pangolin_frequent_filter(spark):
-    """FSM-mode filter on the generic engine: support counts match a
-    brute-force over the same (pattern, label-multiset) classes."""
-    from graphminer_spark.algorithms.pangolin import mine_frequent
-
-    edges = _random_graph(30, 80, 41)
-    df = edges_df(spark, edges)
-    sym = symmetrize(df, dedup=False)
-    lv = with_synthetic_labels(degrees(sym).select("id"))
-    out = mine_frequent(sym, lv, k=3, minsup=3).collect()
-    assert out, "expected at least one frequent 3-set class"
-    # every reported class honors the threshold, and support never
-    # exceeds the graph's vertex count
-    nv = degrees(sym).count()
-    for r in out:
-        assert 3 <= r["support"] <= nv
-
-
-# ------------------------------------------ streaming graph maintenance
-
-
-def test_stream_triangle_maintenance(spark, tmp_path):
-    """Micro-batched edge arrival: the running sum of per-batch deltas
-    equals the batch triangle count of the full accumulated graph, and
-    re-delivered edges don't double-count."""
-    from graphminer_spark.algorithms.triangles import triangle_count
-    from graphminer_spark.streaming.graphstream import (
-        stream_triangle_maintenance,
-    )
-
-    edges = sorted({(min(a, b), max(a, b)) for a, b in _random_graph(25, 120, 19) if a != b})
-    half = len(edges) // 2
-    src = tmp_path / "edge_stream"
-    state = tmp_path / "state"
-    src.mkdir()
-
-    def land(batch, name):
-        # the file stream source lists FILES in src_dir (no recursion):
-        # write the batch elsewhere and move its part file in
-        import glob
-        import shutil
-
-        tmp = tmp_path / f"w_{name}"
-        spark.createDataFrame(batch, "src long, dst long").coalesce(
-            1
-        ).write.mode("overwrite").parquet(str(tmp))
-        part = glob.glob(str(tmp / "part-*.parquet"))[0]
-        shutil.copy(part, str(src / f"{name}.parquet"))
-
-    land(edges[:half], "b1")
-    q = stream_triangle_maintenance(spark, str(src), str(state), "tm_test")
-    try:
-        q.processAllAvailable()
-        # second batch overlaps the first (re-delivery) + new edges
-        land(edges[half - 5 :], "b2")
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    deltas = spark.read.parquet(str(state / "deltas"))
-    total = deltas.agg(F.sum("n_new_triangles")).collect()[0][0]
-    acc = spark.read.parquet(str(state / "edges"))
-    want = triangle_count(build_dag(acc)).collect()[0]["n_triangles"]
-    assert total == want
-    # accumulated graph is exactly the distinct union (no duplicates)
-    assert acc.count() == len(edges)
-    assert acc.distinct().count() == len(edges)
 
 
 # --------------------------------------- engine-wide no-per-row-Python sweep

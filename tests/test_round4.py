@@ -1,106 +1,20 @@
-"""Round-4 additions: streaming-maintenance crash idempotency, pangolin
-atlas k-guard, HITS one-schema durable checkpoints, dedup persist
-lifecycle."""
+"""Round-4 additions: hub-safe FSM MNI, HITS one-schema durable
+checkpoints, dedup persist lifecycle."""
 
 from __future__ import annotations
 
-import glob
 import random
-import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
-from graphminer_spark.graph.build import build_dag, symmetrize
+from graphminer_spark.graph.build import symmetrize
 from tests.conftest import edges_df
 
 
 def _random_graph(n, m, seed):
     rng = random.Random(seed)
     return [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]
-
-
-# ---------------------------------------- streaming crash idempotency
-
-
-def test_stream_maintenance_survives_partial_edge_write(spark, tmp_path):
-    """Simulate a kill between the edges write and the deltas write: a
-    pre-existing UNCOMMITTED ``edges/b=0`` partition (no deltas row)
-    must be recomputed wholesale on replay — the total still exactly
-    matches the accumulated graph's triangle count."""
-    from graphminer_spark.algorithms.triangles import triangle_count
-    from graphminer_spark.streaming.graphstream import (
-        stream_triangle_maintenance,
-    )
-
-    edges = sorted(
-        {(min(a, b), max(a, b)) for a, b in _random_graph(20, 90, 7) if a != b}
-    )
-    src = tmp_path / "edge_stream"
-    state = tmp_path / "state"
-    src.mkdir()
-
-    tmp = tmp_path / "w_b1"
-    spark.createDataFrame(edges, "src long, dst long").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(str(tmp))
-    part = glob.glob(str(tmp / "part-*.parquet"))[0]
-    shutil.copy(part, str(src / "b1.parquet"))
-
-    # the "partial write from the killed first attempt": only a strict
-    # subset of batch 0's edges landed, and no deltas commit marker
-    (state / "edges").mkdir(parents=True)
-    spark.createDataFrame(edges[: len(edges) // 3], "src long, dst long").write.mode(
-        "overwrite"
-    ).parquet(str(state / "edges" / "b=0"))
-
-    q = stream_triangle_maintenance(spark, str(src), str(state), "tm_crash")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    deltas = spark.read.parquet(str(state / "deltas"))
-    total = deltas.agg(F.sum("n_new_triangles")).collect()[0][0]
-    acc = spark.read.parquet(str(state / "edges")).select("src", "dst")
-    want = triangle_count(build_dag(acc)).collect()[0]["n_triangles"]
-    assert total == want
-    # the partial partition was overwritten, not appended to
-    assert acc.count() == len(edges)
-    assert acc.distinct().count() == len(edges)
-
-
-def test_stream_maintenance_skips_committed_batch(spark, tmp_path):
-    """A batch whose batch_id already has a deltas row is fully
-    skipped on replay (commit marker wins — no recount)."""
-    from graphminer_spark.streaming.graphstream import (
-        stream_triangle_maintenance,
-    )
-
-    edges = [(0, 1), (1, 2), (0, 2)]
-    src = tmp_path / "edge_stream"
-    state = tmp_path / "state"
-    src.mkdir()
-
-    tmp = tmp_path / "w"
-    spark.createDataFrame(edges, "src long, dst long").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(str(tmp))
-    part = glob.glob(str(tmp / "part-*.parquet"))[0]
-    shutil.copy(part, str(src / "b1.parquet"))
-
-    # pre-commit batch 0 with a sentinel delta row; replay must keep it
-    spark.createDataFrame(
-        [(0, 3, 99)], "batch_id long, n_delta_edges long, n_new_triangles long"
-    ).write.mode("overwrite").parquet(str(state / "deltas"))
-
-    q = stream_triangle_maintenance(spark, str(src), str(state), "tm_skip")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    rows = spark.read.parquet(str(state / "deltas")).collect()
-    assert len(rows) == 1 and rows[0]["n_new_triangles"] == 99
 
 
 # --------------------------------------- hub-safe FSM MNI (round-4 ask)
@@ -546,14 +460,12 @@ def test_superstep_planning_gates_and_restores(spark):
 
 def test_feature_propagation_matches_brute(spark):
     """2-hop integer-basis-point neighbor mean equals a direct Python
-    computation, and the array face agrees with the flat face."""
+    computation."""
     from collections import defaultdict
 
     from graphminer_spark.graph.features import (
-        propagate_features,
         propagate_features_flat,
         synthetic_features_flat,
-        with_synthetic_features,
     )
 
     raw = _random_graph(30, 70, 3)
@@ -577,30 +489,6 @@ def test_feature_propagation_matches_brute(spark):
     )
     got = {(r["id"], r["d"]): r["val"] for r in flat.collect()}
     assert got == feat
-
-    # array face: same values back on the input's float scale
-    # (flat ints are the float features × 1000, so expected float
-    # result = flat result / 1000 / 10^(4·hops))
-    arr = propagate_features(
-        sym, with_synthetic_features(verts), hops=2
-    ).collect()
-    for r in arr:
-        for d, x in enumerate(r["feat"]):
-            e = feat[(r["id"], d)] / 1000.0 / 1e8
-            assert abs(x - e) < 1e-4 * max(1.0, abs(e))
-
-
-# ------------------------------------------------- pangolin atlas guard
-
-
-@pytest.mark.parametrize("k", [2, 6])
-def test_pangolin_atlas_rejects_out_of_range_k(spark, k):
-    from graphminer_spark.algorithms.pangolin import mine_motifs
-
-    sym = symmetrize(edges_df(spark, [(0, 1), (1, 2)]), dedup=False)
-    with pytest.raises(ValueError, match="3..5"):
-        # the guard fires in the driver-side atlas build, before any job
-        mine_motifs(sym, k).collect()
 
 
 # ------------------------------------- HITS durable checkpoint layout

@@ -6,7 +6,7 @@ import hashlib
 import heapq
 
 import numpy as np
-from conftest import edges_df
+from conftest import CountingCkpt, edges_df
 
 from graphminer_spark.graph.build import symmetrize
 
@@ -117,7 +117,6 @@ def test_sssp_rounds_within_oracle_unroll(spark):
     """Spark's fixpoint on the sf0.001 sparse graph must converge
     strictly inside the SSSP_ROUNDS oracle unroll."""
     from graphminer_spark.algorithms.sssp import sssp
-    from graphminer_spark.checkpoint import CheckpointManager
     from graphminer_spark.graph.tpch_edges import SPARSE_DIVISOR, tpch_edges
 
     import __spark_entry__ as entry_mod
@@ -125,16 +124,11 @@ def test_sssp_rounds_within_oracle_unroll(spark):
     edges = tpch_edges(spark, "/root/testdata/sf0.001", divisor=SPARSE_DIVISOR)
     sym = symmetrize(edges, dedup=False)
 
-    class CountingCkpt(CheckpointManager):
-        rounds = 0
+    ckpt = CountingCkpt()
 
-        def save_and_agg(self, state, iteration, metrics, aggs, force=False):
-            CountingCkpt.rounds = max(CountingCkpt.rounds, iteration)
-            return super().save_and_agg(state, iteration, metrics, aggs, force)
-
-    d = sssp(sym, source=entry_mod.SSSP_SOURCE, checkpointer=CountingCkpt(None))
+    d = sssp(sym, source=entry_mod.SSSP_SOURCE, checkpointer=ckpt)
     assert d.count() > 1
-    assert 0 < CountingCkpt.rounds < entry_mod.SSSP_ROUNDS
+    assert 0 < ckpt.rounds < entry_mod.SSSP_ROUNDS
     # weighted distances dominate hop counts: dist(v) >= bfs hops
     from graphminer_spark.algorithms.components import bfs_distances
 

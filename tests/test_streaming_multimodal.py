@@ -148,40 +148,6 @@ def test_unknown_and_corrupt_media_raise(spark):
         )
 
 
-def test_stateful_session_stream(spark, tmp_path):
-    """applyInPandasWithState: closed sessions emitted across
-    micro-batches match the batch sessionizer for closed sessions."""
-    import datetime as dt
-
-    base = dt.datetime(2024, 1, 1)
-    rows = [
-        # user 1: session A (2 events), 45-min gap, session B (1 event)
-        (1, base, 1, "a", 1.0, "{}"),
-        (2, base + dt.timedelta(minutes=10), 1, "a", 2.0, "{}"),
-        (3, base + dt.timedelta(minutes=55), 1, "a", 4.0, "{}"),
-        # user 2: one session, never closed by a later event
-        (4, base, 2, "a", 8.0, "{}"),
-    ]
-    df = spark.createDataFrame(rows, EVENTS_SCHEMA)
-    src = str(tmp_path / "stateful_src")
-    df.write.mode("overwrite").parquet(src)
-
-    from graphminer_spark.streaming.stateful import stream_sessions
-
-    q = stream_sessions(spark, src, EVENTS_SCHEMA, query_name="sess_test")
-    try:
-        q.processAllAvailable()
-        got = [
-            (r["user_id"], r["n_events"], r["total_value"])
-            for r in spark.sql("SELECT * FROM sess_test").collect()
-        ]
-    finally:
-        q.stop()
-    # only session A closes (gap exceeded within the data); open
-    # sessions for user 1B and user 2 remain in state
-    assert got == [(1, 2, 3.0)]
-
-
 def test_stream_dedup_with_watermark(spark, tmp_path):
     import datetime as dt
 

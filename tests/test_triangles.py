@@ -78,18 +78,6 @@ def test_tc_invariant_under_relabeling(spark):
     assert t1 == t2
 
 
-def test_tc_csr_variant_agrees_with_join_variant(spark):
-    """Cross-implementation agreement (reference ships >=2 kernels per
-    workload for the same reason, SURVEY §5)."""
-    from graphminer_spark.algorithms.triangles import triangle_count_csr
-
-    edges = _random_graph(n=150, m=1000, seed=31)
-    dag = build_dag(edges_df(spark, edges))
-    a = triangle_count(dag).collect()[0]["n_triangles"]
-    b = triangle_count_csr(dag, num_blocks=4).collect()[0]["n_triangles"]
-    assert a == b
-
-
 def test_tc_sampled_matches_brute_on_sample(spark):
     """Sampled estimator: the sampled-graph count must equal the brute
     count over the deterministically-kept edges, the estimate is the
