@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from graphminer_spark.checkpoint import run_supersteps
+
 K_REGS = 4
 _PHI = 0.77351  # Flajolet–Martin bias correction
 
@@ -69,41 +71,52 @@ def _pow(masks) -> Column:
     return sum((_low_zero(m) for m in masks), F.lit(0))
 
 
-def _init(sym_edges: DataFrame, k: int, *extra: Column):
-    """The superstep inputs shared by every FM read-out →
-    ``(edges, state)``: the edge table partitioned by the join key ONCE
-    and persisted (without this every superstep re-scans and
-    re-shuffles it — measured 2.6 s/superstep vs PageRank's 0.44 s),
-    and the start state ``(id, m0..m{k-1}, *extra)`` of singleton
-    sketches."""
+def _run(
+    sym_edges: DataFrame,
+    k: int,
+    h_max: int,
+    algo: str,
+    aggs: list | None = None,
+    start: tuple = (),
+    extra=lambda h, merged: [],
+) -> tuple[DataFrame, list]:
+    """The FM supersteps every read-out shares → ``(state, rows)``:
+    ``h_max`` supersteps through :func:`run_supersteps` from the
+    singleton sketches ``(id, m0..m{k-1}, *start)``; ``rows`` holds the
+    ``aggs`` row of every state, the start state's first.
+
+    Superstep h ORs every vertex's masks with its neighbors' (one join
+    + a partial-combinable ``bit_or`` groupBy) → ``(id, m0..m{k-1},
+    *extra(h, merged))``; ``extra`` derives further columns from the
+    merged mask expressions and the previous state. The edge table is
+    partitioned by the join key ONCE and persisted for the loop (without
+    this every superstep re-scans and re-shuffles it — measured 2.6
+    s/superstep vs PageRank's 0.44 s)."""
     edges = sym_edges.select("src", "dst").repartition("src").persist()
-    edges.count()
-    verts = edges.select(F.col("src").alias("id")).distinct()
-    state = verts.select(
-        "id",
-        *[_fm_mask(F.col("id"), r).alias(f"m{r}") for r in range(k)],
-        *extra,
+    m = edges.count()
+    state = edges.select(F.col("src").alias("id")).distinct().select(
+        "id", *[_fm_mask(F.col("id"), r).alias(f"m{r}") for r in range(k)], *start
     )
-    return edges, state
 
+    def step(state: DataFrame, h: int, _) -> DataFrame:
+        nbr = (
+            state.join(edges, state["id"] == edges["src"])
+            .groupBy(F.col("dst").alias("id"))
+            .agg(*[F.bit_or(f"m{r}").alias(f"n{r}") for r in range(k)])
+        )
+        merged = [
+            F.coalesce(F.col(f"n{r}"), F.lit(0)).bitwiseOR(F.col(f"m{r}"))
+            for r in range(k)
+        ]
+        return state.join(nbr, "id", "left").select(
+            "id", *[c.alias(f"m{r}") for r, c in enumerate(merged)], *extra(h, merged)
+        )
 
-def _step(state: DataFrame, edges: DataFrame, k: int, extra=lambda m: []):
-    """One superstep, un-checkpointed: OR every vertex's masks with its
-    neighbors' (one join + a partial-combinable ``bit_or`` groupBy) →
-    ``(id, m0..m{k-1}, *extra(merged))``; ``extra`` derives further
-    columns from the merged mask expressions and the previous state."""
-    nbr = (
-        state.join(edges, state["id"] == edges["src"])
-        .groupBy(F.col("dst").alias("id"))
-        .agg(*[F.bit_or(f"m{r}").alias(f"n{r}") for r in range(k)])
+    state, _, rows, *_ = run_supersteps(
+        None, algo, state, step, aggs or [], None, h_max, m, init_aggs=aggs
     )
-    merged = [
-        F.coalesce(F.col(f"n{r}"), F.lit(0)).bitwiseOR(F.col(f"m{r}"))
-        for r in range(k)
-    ]
-    return state.join(nbr, "id", "left").select(
-        "id", *[m.alias(f"m{r}") for r, m in enumerate(merged)], *extra(merged)
-    )
+    edges.unpersist()
+    return state, rows
 
 
 def neighborhood_function(
@@ -120,41 +133,22 @@ def neighborhood_function(
     value); ``est_pairs_s`` = sum_pow / (k·0.77351) rendered ``%.4f`` —
     the estimated number of ordered pairs within distance ≤ h.
     """
-    edges, state = _init(sym_edges, k)
-
-    def curve_row(h: int, st: DataFrame) -> DataFrame:
-        return st.agg(
-            sum(
-                (F.sum(_low_zero(F.col(f"m{r}"))) for r in range(k)),
-                F.lit(0),
-            ).alias("sum_pow")
-        ).select(
-            F.lit(h).alias("h"),
-            F.col("sum_pow").cast("long").alias("sum_pow"),
-            F.format_string(
-                "%.4f", F.col("sum_pow") / F.lit(k * _PHI)
-            ).alias("est_pairs_s"),
-        )
-
-    per_h = [curve_row(0, state)] if include_h0 else []
-    for h in range(1, h_max + 1):
-        # LAZY lineage cut: the loop has no convergence check, so
-        # nothing needs a per-superstep barrier — all h supersteps and
-        # every per-radius curve aggregate materialize inside the ONE
-        # final action (the checkpoint blocks dedup the shared states,
-        # and independent curve aggregates schedule concurrently with
-        # the next superstep's stages instead of serializing behind h
-        # job barriers)
-        state = _step(state, edges, k).localCheckpoint(eager=False)
-        per_h.append(curve_row(h, state))
-    out = per_h[0]
-    for df in per_h[1:]:
-        out = out.unionAll(df)
-    # one materializing action for the whole curve; after it the curve
-    # rows are plain scalars — safe to release the edge cache
-    out = out.localCheckpoint(eager=True)
-    edges.unpersist()
-    return out
+    sum_pow = sum(
+        (F.sum(_low_zero(F.col(f"m{r}"))) for r in range(k)), F.lit(0)
+    ).alias("sum_pow")
+    # the curve is the per-superstep aggregate row: radius h's sum rides
+    # the action that materializes the h-th state (h = 0 on the start)
+    _, rows = _run(sym_edges, k, h_max, "anf", [sum_pow])
+    curve = [(h, r["sum_pow"]) for h, r in enumerate(rows)]
+    return sym_edges.sparkSession.createDataFrame(
+        curve if include_h0 else curve[1:], "h int, sum_pow long"
+    ).select(
+        "h",
+        "sum_pow",
+        F.format_string("%.4f", F.col("sum_pow") / F.lit(k * _PHI)).alias(
+            "est_pairs_s"
+        ),
+    )
 
 
 def anf_sql(h_max: int = 3, k: int = K_REGS) -> str:
@@ -283,19 +277,15 @@ def ball_sizes(
     (exact integer) and ``est_ball_s = sum_pow/(k·0.77351)`` as
     ``%.4f``.  Same superstep dataflow as
     :func:`neighborhood_function`; the output is the h-th state."""
-    edges, state = _init(sym_edges, k)
-    for _ in range(h):
-        state = _step(state, edges, k).localCheckpoint(eager=True)
+    state, _ = _run(sym_edges, k, h, "anf_ball")
     sum_pow = _pow(F.col(f"m{r}") for r in range(k)).cast("long")
-    out = state.select(
+    return state.select(
         "id",
         sum_pow.alias("sum_pow"),
         F.format_string("%.4f", sum_pow / F.lit(k * _PHI)).alias(
             "est_ball_s"
         ),
-    ).localCheckpoint(eager=True)
-    edges.unpersist()
-    return out
+    )
 
 
 def harmonic_centrality(
@@ -325,24 +315,23 @@ def harmonic_centrality(
     import math
 
     L = math.lcm(*range(1, h_max + 1))
-    edges, state = _init(sym_edges, k, F.lit(0).cast("long").alias("num"))
     old_pow = _pow(F.col(f"m{r}") for r in range(k))
-    for h in range(1, h_max + 1):
 
-        def num(merged):
-            gain = F.lit(L // h) * (_pow(merged) - old_pow)
-            return [(F.col("num") + gain).alias("num")]
+    def num(h, merged):
+        gain = F.lit(L // h) * (_pow(merged) - old_pow)
+        return [(F.col("num") + gain).alias("num")]
 
-        state = _step(state, edges, k, num).localCheckpoint(eager=True)
-    out = state.select(
+    state, _ = _run(
+        sym_edges, k, h_max, "anf_harmonic",
+        start=(F.lit(0).cast("long").alias("num"),), extra=num,
+    )
+    return state.select(
         "id",
         F.col("num").cast("long").alias("harm_num"),
         F.format_string(
             "%.4f", F.col("num") / F.lit(L * k * _PHI)
         ).alias("harmonic_s"),
-    ).localCheckpoint(eager=True)
-    edges.unpersist()
-    return out
+    )
 
 
 def harmonic_sql(h_max: int = 4, k: int = K_REGS) -> str:

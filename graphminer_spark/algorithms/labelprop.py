@@ -90,5 +90,5 @@ def label_propagation(
         n_iter, m,
     )
     e.unpersist()
-    hist = [int(r["changed"] or 0) for r in rows] if until_stable else []
+    hist = [int(r["changed"] or 0) for r in rows[1:]] if until_stable else []
     return LabelPropResult(labels.select("id", "label"), it, converged, hist)

@@ -212,7 +212,7 @@ def _iterate(
     maps a rank state to ``(id, contrib)``, the one step the physical
     strategies do differently. ``m`` (edges) gates AQE for the loop."""
     spark = verts.sparkSession
-    ckpt = checkpointer or CheckpointManager(None, release_chain=True)
+    ckpt = checkpointer or CheckpointManager(None)
     personal = "s" in verts.columns
     if personal:
         n_tele = verts.agg(F.sum("s")).collect()[0][0]
@@ -276,5 +276,5 @@ def _iterate(
     )
     verts.unpersist()
     return PageRankResult(
-        state.select("id", "rank"), it, converged, [float(r["delta"]) for r in rows]
+        state.select("id", "rank"), it, converged, [float(r["delta"]) for r in rows[1:]]
     )

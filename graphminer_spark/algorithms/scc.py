@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphminer_spark.algorithms.sssp import _relax
-from graphminer_spark.checkpoint import CheckpointManager, superstep_planning
+from graphminer_spark.checkpoint import CheckpointManager, run_supersteps
 
 
 def _min_label_fixpoint(
@@ -50,19 +50,20 @@ def _min_label_fixpoint(
     m: int,
     ckpt: CheckpointManager,
     algo: str,
+    lbl: str,
     max_iter: int = 100,
 ) -> DataFrame:
     """min-label propagation along edge direction to fixpoint →
-    ``(id, lbl)`` where lbl = min id with a directed path TO id
+    ``(id, <lbl>)``, the label = min id with a directed path TO id
     (including id itself): the shared relaxation with w = 0 and every
-    vertex seeded at its own id. ``run_supersteps`` detaches the returned
-    fixpoint from the release chain, so it outlives the NEXT fixpoint's
-    loop (fwd is joined with bwd after bwd finishes)."""
+    vertex seeded at its own id. The driver frees only the states its
+    own loop superseded, so the returned fixpoint outlives the NEXT
+    fixpoint's loop (fwd is joined with bwd after bwd finishes)."""
     return _relax(
         dedges.select("src", "dst", F.lit(0).cast("long").alias("w")),
         verts.select("id", F.col("id").alias("dist")),
         m, ckpt, max_iter, algo,
-    ).withColumnRenamed("dist", "lbl")
+    ).withColumnRenamed("dist", lbl)
 
 
 def strongly_connected_components(
@@ -71,45 +72,48 @@ def strongly_connected_components(
     max_outer: int = 20,
 ) -> DataFrame:
     """``(id, scc)`` — scc = min vertex id of each strongly connected
-    component, over all vertices incident to ``dedges(src, dst)``."""
-    ckpt = checkpointer or CheckpointManager(None, release_chain=True)
-    spark = dedges.sparkSession
+    component, over all vertices incident to ``dedges(src, dst)``.
+
+    The outer peel is one superstep loop over the vertex table
+    ``(id, scc)``, scc null while unassigned, that stops when no vertex
+    is unassigned; ``checkpointer`` commits its rounds. The inner
+    fixpoints of a round run on their own non-durable manager: the
+    forward and backward loops both count from iteration 0, so on one
+    durable manager the backward loop's writes would overwrite files a
+    forward state still reads."""
     edges = dedges.select("src", "dst").localCheckpoint(eager=True)
-    verts = (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    assigned = spark.createDataFrame([], "id long, scc long")
     m = edges.count()
-    with superstep_planning(spark, m):
-        for outer in range(1, max_outer + 1):
-            fwd = _min_label_fixpoint(
-                edges, verts, m, ckpt, f"scc_f{outer}"
-            ).withColumnRenamed("lbl", "f")
-            rev = edges.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst")
-            )
-            bwd = _min_label_fixpoint(
-                rev, verts, m, ckpt, f"scc_b{outer}"
-            ).withColumnRenamed("lbl", "b")
-            both = fwd.join(bwd, "id")
-            done = both.filter(F.col("f") == F.col("b")).select(
-                "id", F.col("f").alias("scc")
-            )
-            assigned = assigned.unionByName(done).localCheckpoint(eager=True)
-            remaining = both.filter(F.col("f") != F.col("b")).select("id")
-            n_rem = remaining.count()
-            if n_rem == 0:
-                break
-            verts = remaining.localCheckpoint(eager=True)
+    inner = CheckpointManager(None)
+
+    def peel(state: DataFrame, it: int, _) -> DataFrame:
+        nonlocal edges
+        verts = state.filter(F.col("scc").isNull()).select("id")
+        if it > 1:  # the round's remaining edges, materialized once
             edges = (
                 edges.join(verts.withColumnRenamed("id", "src"), "src", "left_semi")
                 .join(verts.withColumnRenamed("id", "dst"), "dst", "left_semi")
                 .localCheckpoint(eager=True)
             )
-    return assigned
+        fwd = _min_label_fixpoint(edges, verts, m, inner, f"scc_f{it}", "f")
+        rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        bwd = _min_label_fixpoint(rev, verts, m, inner, f"scc_b{it}", "b")
+        done = fwd.join(bwd, "id").filter(F.col("f") == F.col("b"))
+        return state.join(
+            done.select("id", F.col("f").alias("root")), "id", "left"
+        ).select("id", F.coalesce("scc", "root").alias("scc"))
+
+    verts = (
+        edges.select(F.col("src").alias("id"))
+        .unionByName(edges.select(F.col("dst").alias("id")))
+        .distinct()
+    )
+    unassigned = F.count_if(F.col("scc").isNull()).alias("unassigned")
+    state, *_ = run_supersteps(
+        checkpointer, "scc", verts.select("id", F.lit(None).cast("long").alias("scc")),
+        peel, [unassigned], lambda row, _: row["unassigned"] == 0, max_outer, m,
+        init_aggs=[unassigned],
+    )
+    return state.filter(F.col("scc").isNotNull())
 
 
 # md5-parity orientation: deterministic directed view of a canonical

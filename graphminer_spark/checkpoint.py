@@ -10,13 +10,14 @@ through a :class:`CheckpointManager`:
 * ``run_supersteps(ckpt, algo, state, step, aggs, stop, ...)`` owns the
   loop: the default manager, AQE gating (``superstep_planning``), the
   iteration-0 save, one ``save_and_agg`` per superstep, the stop test
-  and ``detach_chain()`` on return. An algorithm supplies only its step
-  function, its aggregates and its stop predicate.
+  and the freeing of the loop's own superseded states. An algorithm
+  supplies only its step function, its aggregates and its stop
+  predicate.
 * ``save(state, iteration, metrics)`` writes the state DataFrame to
   ``{dir}/iter=NNNNNN`` as parquet, appends a JSON line to
   ``metrics.jsonl`` carrying the convergence metric *and* per-partition
   lineage (partition → row count), then returns a fresh DataFrame read
-  back from disk (lineage truncated to one scan).
+  back from disk (lineage cut to one scan).
 * ``save_and_agg(state, iteration, metrics, aggs)`` does the same and
   computes the superstep's aggregates in the materializing action
   (LMFAO's fused aggregates, SIGMOD'19); they join ``metrics`` in the
@@ -26,8 +27,8 @@ through a :class:`CheckpointManager`:
 
 In local mode this is plain parquet; on a cluster the same layout
 lands on HDFS/S3/Iceberg (path-addressed, atomic via directory commit).
-For cheap intra-job truncation without durability,
-``truncate="local"`` uses ``localCheckpoint`` instead of parquet.
+Supersteps off the durable cadence (and every superstep of a manager
+without ``base_dir``) cut lineage with ``localCheckpoint`` instead.
 """
 
 from __future__ import annotations
@@ -97,78 +98,19 @@ def superstep_planning(spark: SparkSession, n_edges: int):
 
 
 class CheckpointManager:
-    def __init__(
-        self,
-        base_dir: str | None,
-        every: int = 5,
-        truncate: str = "parquet",
-        release_chain: bool = False,
-    ):
-        """``base_dir=None`` disables durable checkpoints (pure
-        localCheckpoint truncation). ``every`` = checkpoint cadence in
-        supersteps; intermediate supersteps still truncate lineage
-        locally.
-
-        ``release_chain=True`` unpersists each localCheckpoint state
-        once it is TWO saves old: a linear superstep chain (state_t
-        built from state_{t-1} only) provably never reads a state two
-        generations back, so its blocks can be freed the moment
-        state_{t+2} is materialized. Without it a long bench session
-        accumulates every superseded superstep state in the block
-        manager until the Python GC and the ContextCleaner catch up —
-        measured as a 30-50% slowdown of late-suite queries. Opt-in
-        and enabled ONLY by algorithms whose state chains are audited
-        linear (unpersisting a localCheckpoint is irreversible — its
-        lineage is truncated, so a late reader would fail, not
-        recompute). Callers keeping multiple live states must leave it
-        off or call :meth:`detach_chain` at the point the chain's tail
-        escapes."""
+    def __init__(self, base_dir: str | None, every: int = 5):
+        """``base_dir=None`` disables durable checkpoints: every
+        superstep cuts its lineage with ``localCheckpoint``. ``every`` =
+        durable checkpoint cadence in supersteps; the supersteps between
+        durable ones still cut lineage locally. A manager keeps no
+        states: :func:`run_supersteps` frees each loop's superseded
+        states itself, so loops may share or nest on one manager."""
         self.base_dir = base_dir
         self.every = max(1, every)
-        self.truncate = truncate
-        self.release_chain = release_chain
-        self._chain: list[DataFrame] = []
-        self._release_warned = False
         # (record, byte offset) of the last metrics line written
         self._last: tuple[dict, int] | None = None
         if base_dir:
             os.makedirs(base_dir, exist_ok=True)
-
-    def _note(self, out: DataFrame) -> None:
-        """Track a freshly-materialized localCheckpoint state; release
-        the state two generations back (dead in a linear chain)."""
-        if not self.release_chain:
-            return
-        self._chain.append(out)
-        if len(self._chain) > 2:
-            old = self._chain.pop(0)
-            try:
-                # only a checkpoint's own LogicalRDD is ours to free; any
-                # other plan would unpersist some RDD the caller may hold
-                plan = old._jdf.queryExecution().analyzed()
-                kind = plan.getClass().getSimpleName()
-                if kind != "LogicalRDD":
-                    raise TypeError(f"superseded state is a {kind}, not a LogicalRDD")
-                # SparkContext.unpersistRDD frees the same blocks as
-                # RDD.unpersist without its WARN line, which that method
-                # prints for every locally checkpointed RDD
-                sc = old.sparkSession.sparkContext
-                sc._jsc.sc().unpersistRDD(plan.rdd().id(), False)
-            except Exception as e:  # bookkeeping never breaks the algorithm
-                if not self._release_warned:
-                    self._release_warned = True
-                    _log.warning(
-                        "release_chain: unpersist of a superseded state "
-                        "failed (%s); further failures of this manager "
-                        "are not logged and their blocks stay cached", e,
-                        exc_info=True,
-                    )
-
-    def detach_chain(self) -> None:
-        """Forget (without releasing) the tracked states — call when a
-        still-needed state would otherwise age out of the chain (e.g.
-        a fixpoint result consumed after a later loop starts)."""
-        self._chain = []
 
     # ------------------------------------------------------------ paths
     def _iter_dir(self, iteration: int) -> str:
@@ -182,16 +124,13 @@ class CheckpointManager:
     # ------------------------------------------------------------- save
     def _durable(self, iteration: int, force: bool) -> bool:
         """Single source of truth for the durable-checkpoint cadence
-        (shared by save and save_and_agg so they can never drift)."""
-        return (
-            self.base_dir is not None
-            and self.truncate == "parquet"
-            and (force or iteration % self.every == 0)
-        )
+        (shared by save, save_and_agg and :func:`run_supersteps`'s
+        release of local states, so they can never drift)."""
+        return self.base_dir is not None and (force or iteration % self.every == 0)
 
     def _write(self, state: DataFrame, iteration: int) -> tuple[DataFrame, dict]:
         """Durable commit: write ``state`` as parquet, read it back
-        (lineage truncated to one scan) and describe the checkpoint."""
+        (lineage cut to one scan) and describe the checkpoint."""
         path = self._iter_dir(iteration)
         state.write.mode("overwrite").parquet(path)
         out = state.sparkSession.read.parquet(path)
@@ -233,16 +172,15 @@ class CheckpointManager:
         metrics: dict[str, float | int | str],
         force: bool = False,
     ) -> DataFrame:
-        """Persist state if due, log metrics, return lineage-truncated
-        state DataFrame."""
+        """Persist state if due, log metrics, return the state
+        DataFrame with its lineage cut."""
         if self._durable(iteration, force):
             out, meta = self._write(state, iteration)
         else:
-            # truncate lineage every superstep — plans re-analyze whole
+            # cut lineage every superstep — plans re-analyze whole
             # iteration chains otherwise (measured 5-18× slower with
             # cache-only truncation every 5 steps)
             out, meta = state.localCheckpoint(eager=True), {}
-            self._note(out)
         self._record(iteration, {**meta, **metrics})
         return out
 
@@ -272,7 +210,6 @@ class CheckpointManager:
         else:
             out, meta = state.localCheckpoint(eager=False), {}
             row = out.agg(*aggs).collect()[0]
-            self._note(out)
         self._record(iteration, {**meta, **metrics, **row.asDict()})
         return out, row
 
@@ -302,6 +239,34 @@ class CheckpointManager:
             return [json.loads(line) for line in f if line.strip()]
 
 
+def _release(old: DataFrame, warned: bool) -> bool:
+    """Free the blocks of ``old``, a loop's superseded localCheckpoint
+    state (unpersisting one is irreversible: its lineage is cut, so a
+    late reader fails instead of recomputing). Returns ``warned`` for
+    the next call: the loop logs its first failed release only."""
+    try:
+        # only a checkpoint's own LogicalRDD is ours to free; any other
+        # plan would unpersist some RDD the caller may hold
+        plan = old._jdf.queryExecution().analyzed()
+        kind = plan.getClass().getSimpleName()
+        if kind != "LogicalRDD":
+            raise TypeError(f"superseded state is a {kind}, not a LogicalRDD")
+        # SparkContext.unpersistRDD frees the same blocks as
+        # RDD.unpersist without its WARN line, which that method prints
+        # for every locally checkpointed RDD
+        sc = old.sparkSession.sparkContext
+        sc._jsc.sc().unpersistRDD(plan.rdd().id(), False)
+    except Exception as e:  # bookkeeping never breaks the algorithm
+        if not warned:
+            _log.warning(
+                "run_supersteps: unpersist of a superseded state failed "
+                "(%s); further failures of this loop are not logged and "
+                "their blocks stay cached", e, exc_info=True,
+            )
+        return True
+    return warned
+
+
 def run_supersteps(
     checkpointer: CheckpointManager | None,
     algo: str,
@@ -326,34 +291,55 @@ def run_supersteps(
     superstep's aggregate row — in ONE ``save_and_agg(aggs)`` action
     (``save`` when ``aggs`` is empty, and its row is None). The loop
     converges when ``stop(row, prev_row)`` holds and otherwise ends after
-    ``max_iter``; ``rows`` holds every superstep's row. ``final_save``
-    also commits the last state durably when it fell between durable
-    saves, so a killed run can resume from it (PageRank's contract).
+    ``max_iter``; ``rows`` holds the start state's row (None without
+    ``init_aggs``), then every superstep's. ``final_save`` also commits
+    the last state durably when it fell between durable saves, so a
+    killed run can resume from it (PageRank's contract).
 
     ``n_edges`` gates AQE for the loop (:func:`superstep_planning`); it
     may be a function of the iteration-0 row when that row counts the
-    edges. The tracked chain is detached on return, so a shared
-    manager's later loops can never free the returned state."""
-    ckpt = checkpointer or CheckpointManager(None, release_chain=True)
+    edges.
+
+    The loop frees each localCheckpoint state it committed once it is
+    TWO commits old: state_t is built from state_{t-1} only, so nothing
+    reads a state two generations back once state_{t+2} is materialized.
+    Without this a long session keeps every superseded state in the
+    block manager until the Python GC and the ContextCleaner catch up
+    (measured as a 30-50% slowdown of late-suite queries). Only the
+    loop's own commits are freed, so the returned state and its
+    predecessor outlive it, and loops sharing or nesting on one manager
+    never free each other's states."""
+    ckpt = checkpointer or CheckpointManager(None)
     meta = {"algo": algo}
+    chain: list[DataFrame] = []  # this loop's localCheckpoint commits
+    warned = False
+
+    def commit(new: DataFrame, it: int, fused: list | None):
+        nonlocal warned
+        local = not ckpt._durable(it, False)
+        if fused:
+            out, row = ckpt.save_and_agg(new, it, meta, fused)
+        else:
+            out, row = ckpt.save(new, it, meta), None
+        if local:
+            chain.append(out)
+            if len(chain) > 2:
+                warned = _release(chain.pop(0), warned)
+        return out, row
+
     if start:
         row = state.agg(*init_aggs).collect()[0] if init_aggs else None
-    elif init_aggs:
-        state, row = ckpt.save_and_agg(state, 0, meta, init_aggs)
     else:
-        state, row = ckpt.save(state, 0, meta), None
+        state, row = commit(state, 0, init_aggs)
     if callable(n_edges):
         n_edges = n_edges(row)
-    rows: list[Row | None] = []
+    rows: list[Row | None] = [row]
     converged = False
     it = start
     with superstep_planning(state.sparkSession, n_edges):
         for it in range(start + 1, max_iter + 1):
-            prev, new = row, step(state, it, row)
-            if aggs:
-                state, row = ckpt.save_and_agg(new, it, meta, aggs)
-            else:
-                state, row = ckpt.save(new, it, meta), None
+            prev = row
+            state, row = commit(step(state, it, row), it, aggs)
             rows.append(row)
             if stop is not None and stop(row, prev):
                 converged = True
@@ -364,5 +350,4 @@ def run_supersteps(
             # same-iteration re-save would overwrite the path being
             # read, hence only off-cadence
             state = ckpt.save(state, it, {**meta, "final": True}, force=True)
-    ckpt.detach_chain()
     return state, row, rows, it, converged

@@ -83,6 +83,14 @@ def _jit_warmup(spark: SparkSession, budget_s: float) -> None:
         sc.setJobDescription(None)
 
 
+def _host_defaults() -> tuple[int, str]:
+    """``(cores, driver memory)`` that fit this host: every CPU, and half
+    of physical memory capped at 24g (a local session's executors live
+    in the driver JVM; the rest is for Python workers and the OS)."""
+    half = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2
+    return os.cpu_count() or 1, f"{min(half, 24 << 30) >> 20}m"
+
+
 def get_spark(
     app_name: str = "graphminer_spark",
     cores: int | None = None,
@@ -94,11 +102,14 @@ def get_spark(
 
     ``cores`` controls the ``local[N]`` master locally; ``master``
     overrides it entirely (e.g. ``local-cluster[4,2,8192]`` for real
-    multi-executor runs, or a cluster URL). ``SPARK_GRAFT_CPUS`` env
-    var overrides cores for bench runs.
+    multi-executor runs, or a cluster URL). Cores and driver memory
+    default to the host's (:func:`_host_defaults`); the
+    ``SPARK_GRAFT_CPUS`` and ``SPARK_GRAFT_DRIVER_MEM`` env vars
+    override them.
     """
+    host_cores, host_mem = _host_defaults()
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = int(os.environ.get("SPARK_GRAFT_CPUS", host_cores))
     if shuffle_partitions is None:
         shuffle_partitions = int(
             os.environ.get("SPARK_GRAFT_SHUFFLE", str(max(cores, DEFAULT_SHUFFLE_PARTITIONS)))
@@ -115,7 +126,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", host_mem))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # allow shuffled-hash join where its size conditions hold

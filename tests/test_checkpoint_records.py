@@ -1,6 +1,6 @@
-"""CheckpointManager bookkeeping: one metrics record per superstep, the
-release chain's effect on persisted RDDs, and a warm-up that can fail
-without blocking session creation."""
+"""Superstep bookkeeping: one metrics record per superstep, the
+driver's release of superseded states, a warm-up that can fail without
+blocking session creation, and session defaults derived from the host."""
 
 from __future__ import annotations
 
@@ -10,11 +10,14 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from graphminer_spark import checkpoint
+from graphminer_spark.algorithms import anf
 from graphminer_spark.algorithms.components import connected_components
 from graphminer_spark.algorithms.hits import hits
 from graphminer_spark.algorithms.kcore import kcore
 from graphminer_spark.algorithms.labelprop import label_propagation
 from graphminer_spark.algorithms.pagerank import pagerank
+from graphminer_spark.algorithms.scc import strongly_connected_components
 from graphminer_spark.checkpoint import CheckpointManager
 from graphminer_spark.graph.build import symmetrize
 
@@ -33,6 +36,15 @@ def _iterations(ck):
     return [r["iteration"] for r in ck.metrics()]
 
 
+def _anf_curve(sym, ck):
+    """The ANF curve, its driver loop committing through ``ck`` (the
+    read-outs take no manager of their own)."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(anf, "run_supersteps",
+                   lambda _, *a, **kw: checkpoint.run_supersteps(ck, *a, **kw))
+        return anf.neighborhood_function(sym, 3, include_h0=True).collect()
+
+
 def test_one_record_per_superstep(spark, tmp_path):
     edges, verts = _graph(spark)
     sym = symmetrize(edges, dedup=True)
@@ -48,6 +60,13 @@ def test_one_record_per_superstep(spark, tmp_path):
          lambda recs, _: recs[-1]["n"] == recs[-2]["n"] > 0),
         ("hits", lambda ck: hits(edges, verts, 4, ck).count(),
          lambda recs, _: len(recs) == 5 and all(r["sa"] > 0 for r in recs)),
+        # outer peel rounds only: the inner fixpoints use their own manager
+        ("scc", lambda ck: strongly_connected_components(edges, ck).count(),
+         lambda recs, _: {r["algo"] for r in recs} == {"scc"}
+         and recs[-1]["unassigned"] == 0 < recs[0]["unassigned"]),
+        # one curve row per record, h = 0 from the start state's
+        ("anf", lambda ck: _anf_curve(sym, ck),
+         lambda recs, res: [r["sum_pow"] for r in recs] == [r["sum_pow"] for r in res]),
     ]
     for name, run, check in cases:
         ck = CheckpointManager(str(tmp_path / name), every=1)
@@ -66,10 +85,10 @@ def test_one_record_per_superstep(spark, tmp_path):
 
 def test_shared_manager_keeps_returned_state(spark):
     """A state returned by one loop survives a later loop on the same
-    release-chain manager (its chain is detached on return)."""
+    manager (each loop frees only the states it superseded)."""
     edges, _ = _graph(spark)
     sym = symmetrize(edges, dedup=True)
-    ck = CheckpointManager(None, release_chain=True)
+    ck = CheckpointManager(None)
     core = kcore(sym, 3, checkpointer=ck)
     connected_components(edges, checkpointer=ck).count()
     adj: dict[int, set[int]] = {}
@@ -95,13 +114,16 @@ def test_final_checkpoint_amends_its_superstep_record(spark, tmp_path):
     assert last["checkpoint"].endswith("iter=000006")
 
 
-@pytest.mark.parametrize("release_chain, kept", [(True, 2), (False, 13)])
-def test_release_chain_persistent_rdds(spark, release_chain, kept):
-    """12 supersteps + the start state are 13 localCheckpoints; the
-    release chain keeps only the last two (the returned state and its
-    predecessor), and the persisted edge/vertex inputs are released.
-    The manager holds every state it returns, so the count does not
-    depend on when the JVM garbage-collects unreachable states."""
+@pytest.mark.parametrize("durable", [False, True], ids=["plain", "durable"])
+def test_release_chain_persistent_rdds(spark, tmp_path, durable):
+    """12 supersteps + the start state are 13 commits; the driver frees
+    the localCheckpoint states among them once they are two commits
+    old, under any manager the caller supplies, and keeps the last two
+    (the returned state and its predecessor). A durable manager off its
+    cadence commits those supersteps locally too. The persisted
+    edge/vertex inputs are released. The manager holds every state it
+    returns, so the count does not depend on when the JVM
+    garbage-collects unreachable states."""
 
     class Holding(CheckpointManager):
         def save_and_agg(self, *args, **kwargs):
@@ -112,11 +134,11 @@ def test_release_chain_persistent_rdds(spark, release_chain, kept):
     edges, verts = _graph(spark)
     jsc = spark.sparkContext._jsc
     before = set(jsc.getPersistentRDDs().keySet())
-    ck = Holding(None, release_chain=release_chain)
+    ck = Holding(str(tmp_path / "pr") if durable else None, every=100)
     ck.held = []
     res = pagerank(edges, verts, tol=0.0, max_iter=12, checkpointer=ck)
     assert res.iterations == 12
-    assert len(set(jsc.getPersistentRDDs().keySet()) - before) == kept
+    assert len(set(jsc.getPersistentRDDs().keySet()) - before) == 2
     assert abs(res.ranks.agg(F.sum("rank")).collect()[0][0] - 1.0) < 1e-9
 
 
@@ -140,8 +162,21 @@ def test_release_failure_is_logged_once(caplog):
         def _jdf(self):
             raise RuntimeError("state already gone")
 
-    ck = CheckpointManager(None, release_chain=True)
+    warned = False
     with caplog.at_level(logging.WARNING, logger="graphminer_spark.checkpoint"):
         for _ in range(6):
-            ck._note(Gone())
-    assert [r.getMessage().startswith("release_chain") for r in caplog.records] == [True]
+            warned = checkpoint._release(Gone(), warned)
+    assert [r.getMessage().startswith("run_supersteps") for r in caplog.records] == [True]
+
+
+def test_session_defaults_fit_the_host(monkeypatch):
+    """Cores default to every CPU and the driver to half of physical
+    memory, capped at 24g."""
+    from graphminer_spark import session
+
+    gib = 1 << 30
+    for phys, mem in [(15 * gib, "7680m"), (256 * gib, "24576m")]:
+        sizes = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": phys // 4096}
+        monkeypatch.setattr(session.os, "sysconf", sizes.__getitem__)
+        monkeypatch.setattr(session.os, "cpu_count", lambda: 4)
+        assert session._host_defaults() == (4, mem)

@@ -49,13 +49,13 @@ def _py_scc(edges):
     return comp
 
 
-def _spark_scc(spark, edges):
+def _spark_scc(spark, edges, checkpointer=None):
     from graphminer_spark.algorithms.scc import strongly_connected_components
 
     df = spark.createDataFrame(sorted(set(edges)), "src long, dst long")
     return {
         r["id"]: r["scc"]
-        for r in strongly_connected_components(df).collect()
+        for r in strongly_connected_components(df, checkpointer).collect()
     }
 
 
@@ -99,3 +99,15 @@ def test_scc_random_digraph(spark):
     )
     got = _spark_scc(spark, edges)
     assert got == _py_scc(edges)
+
+
+def test_scc_durable_every_superstep(spark, tmp_path):
+    """A durable manager committing every round records only the outer
+    peel: the forward and backward fixpoints run on their own manager,
+    so neither overwrites the checkpoint files of the other."""
+    from graphminer_spark.checkpoint import CheckpointManager
+
+    edges = [(i, i + 1) for i in range(7)] + [(10, 11), (11, 12), (12, 10)]
+    ck = CheckpointManager(str(tmp_path / "scc"), every=1)
+    assert _spark_scc(spark, edges, ck) == _py_scc(edges)
+    assert {r["algo"] for r in ck.metrics()} == {"scc"}

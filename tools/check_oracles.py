@@ -3,7 +3,9 @@
 Runs every ``__spark_entry__.queries()`` entry at a given sf dir and
 compares row count / columns / order-insensitive values against the
 matching ``oracle_sql()`` statement executed by DuckDB on the same
-parquet files. Usage::
+parquet files. Each line reports the query's Spark wall seconds (build
+plus ``toPandas``), so one run per checkout gives an A/B of the queries
+named. Usage::
 
     python tools/check_oracles.py [sf_dir] [query_name ...]
 """
@@ -12,6 +14,7 @@ from __future__ import annotations
 
 import os
 import sys
+import time
 
 import duckdb
 import pandas as pd
@@ -48,10 +51,11 @@ def main() -> int:
     for name, fn in queries.items():
         if only and name not in only:
             continue
-        sdf = fn(spark, sf_dir)
-        spark_pd = sdf.toPandas()
+        t0 = time.monotonic()
+        spark_pd = fn(spark, sf_dir).toPandas()
+        secs = f"{time.monotonic() - t0:7.2f}s"
         if name not in oracles:
-            print(f"{name:28s} rows={len(spark_pd):8d}  (rows-only: no oracle)")
+            print(f"{name:28s} {secs} rows={len(spark_pd):8d}  (rows-only: no oracle)")
             continue
         duck_pd = con.execute(oracles[name]).fetchdf()
         a, b = canon(spark_pd), canon(duck_pd)
@@ -77,11 +81,11 @@ def main() -> int:
         if status == "FAIL":
             failed.append(name)
             print(
-                f"{name:28s} {status}  spark={len(spark_pd)}x{list(spark_pd.columns)} "
+                f"{name:28s} {status}  {secs} spark={len(spark_pd)}x{list(spark_pd.columns)} "
                 f"duck={len(duck_pd)}x{list(duck_pd.columns)}"
             )
         else:
-            print(f"{name:28s} OK    rows={len(a)}")
+            print(f"{name:28s} OK    {secs} rows={len(a)}")
     print("FAILED:", failed if failed else "none")
     return 1 if failed else 0
 
