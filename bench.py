@@ -404,11 +404,8 @@ def main() -> None:
     )
 
     # ---- Query pipeline at density: the labeled house on the DENSE
-    # divisor-60 graph, with and without the NLF/degree filter stage —
-    # the honest head-to-head showing the candidate pruning paying for
-    # itself where the graph is dense enough to punish unfiltered
-    # enumeration (labels give the filter its selectivity; the
-    # unlabeled SgL kernels have nothing to prune on).
+    # divisor-60 graph, on the plan the matcher picks for it (uniform
+    # synthetic labels: no filter stage, candidate-cardinality order)
     from graphminer_spark.algorithms.subgraph import PatternSpec  # noqa: E402
     from graphminer_spark.graph.labels import with_synthetic_labels  # noqa: E402
 
@@ -421,12 +418,7 @@ def main() -> None:
     lv = with_synthetic_labels(verts)
     timed(
         "query_labeled_house_dense",
-        lambda: count_matches(sym, labeled_house, lv, prune=True).collect(),
-        extra=True,
-    )
-    timed(
-        "query_labeled_house_dense_noprune",
-        lambda: count_matches(sym, labeled_house, lv, prune=False).collect(),
+        lambda: count_matches(sym, labeled_house, lv).collect(),
         extra=True,
     )
 

@@ -80,7 +80,8 @@ def strongly_connected_components(
     fixpoints of a round run on their own non-durable manager: the
     forward and backward loops both count from iteration 0, so on one
     durable manager the backward loop's writes would overwrite files a
-    forward state still reads."""
+    forward state still reads. Raises ``RuntimeError`` when
+    ``max_outer`` rounds leave vertices unassigned."""
     edges = dedges.select("src", "dst").localCheckpoint(eager=True)
     m = edges.count()
     inner = CheckpointManager(None)
@@ -108,11 +109,18 @@ def strongly_connected_components(
         .distinct()
     )
     unassigned = F.count_if(F.col("scc").isNull()).alias("unassigned")
-    state, *_ = run_supersteps(
+    state, last, _, rounds, done = run_supersteps(
         checkpointer, "scc", verts.select("id", F.lit(None).cast("long").alias("scc")),
         peel, [unassigned], lambda row, _: row["unassigned"] == 0, max_outer, m,
         init_aggs=[unassigned],
     )
+    if not done:
+        # exhaustion is not convergence: a partial assignment would
+        # silently drop the unassigned vertices from the result
+        raise RuntimeError(
+            f"strongly_connected_components: max_outer={max_outer} exhausted "
+            f"after {rounds} rounds with {last['unassigned']} vertices unassigned"
+        )
     return state.filter(F.col("scc").isNotNull())
 
 

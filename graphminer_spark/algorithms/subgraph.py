@@ -275,90 +275,18 @@ def build_candidates(
     return c
 
 
-def refine_candidates(
-    sym: DataFrame,
-    spec: PatternSpec,
-    cand: dict[int, DataFrame],
-    rounds: int = 1,
-) -> dict[int, DataFrame]:
-    """CFL/DPiso-style structural refinement of the filter stage's
-    candidate sets (``src/query/filter.cc`` — the tree-structured
-    pruning schemes beyond plain NLF): each round keeps a candidate of
-    position p only if it has ≥ 1 neighbor in the CURRENT candidate
-    set of every pattern-adjacent position q. Sound (no embedding's
-    vertex is ever removed — its pattern neighbors are themselves
-    candidates) and monotone, so any fixed round count is a valid
-    filter; each round is one semi-join chain, shuffle-bounded by
-    |V| + |E|, never materializing adjacency."""
-    adj = spec.adj()
-    for _ in range(rounds):
-        # neighbors-of-candidates, computed once per position per round
-        nbrs = {
-            q: sym.join(
-                cand[q].select(F.col("id").alias("dst")), "dst", "left_semi"
-            ).select(F.col("src").alias("id"))
-            for q in range(spec.n)
-        }
-        cand = {
-            p: _reduce_semijoin(cand[p], [nbrs[q] for q in sorted(adj[p])])
-            for p in range(spec.n)
-        }
-    return cand
-
-
-def _reduce_semijoin(c: DataFrame, filters: list[DataFrame]) -> DataFrame:
-    for f in filters:
-        c = c.join(f, "id", "left_semi")
-    return c
-
-
-# Named filter strategies, reference parity: the reference exposes six
-# pluggable schemes as a per-query choice (``src/query/filter.h:10-22``
-# GQL/CFL/DPiso/NLF/TSO/CECI, ``filter.cc``). Under a declarative
-# engine they collapse onto two real knobs — whether the NLF/degree
-# candidate stage runs (``prune``) and how many structural
-# consistency rounds refine it (``refine``) — because the schemes'
-# *distinctive machinery* is already supplied by Catalyst:
-#
-# * CECI's candidate-edge index  = the optimizer pushing each
-#   position's candidate semi-join below the extension join, onto the
-#   edge scan itself (PushDownLeftSemiAntiJoin; plan-asserted in
-#   ``tests/test_filter_strategies.py``) — every extension edge is
-#   pre-filtered by BOTH endpoint candidate sets before joining.
-# * TSO's spanning-tree order / GQL's candidate-size order = the
-#   connected-prefix greedy order over post-filter candidate counts
-#   (``_level_plan``): every new position attaches to a matched
-#   neighbor, i.e. the order IS a spanning-tree traversal.
-# * CFL's top-down+bottom-up passes and DPiso's DAG-directed dynamic
-#   refinement = ``refine_candidates`` rounds (each round applies the
-#   neighbor-consistency rule in every direction at once; round count
-#   maps to the schemes' pass count).
-FILTER_STRATEGIES: dict[str, tuple[bool | str, int]] = {
-    "nlf": (True, 0),  # local label/degree/NLF stage only
-    "gql": (True, 1),  # + one global pairwise-consistency pass
-    "tso": (True, 0),  # tree order over filtered candidates
-    "ceci": (True, 1),  # candidate-edge filtering (semi pushdown)
-    "cfl": (True, 2),  # tree-directed passes ≈ 2 all-direction rounds
-    "dpiso": (True, 2),  # DAG-directed DP ≈ 2 all-direction rounds
-    "auto": ("auto", 0),  # cost-gated default (skew-triggered stage)
-}
-
-
-# module switch for A/B timing of the ≥4-cycle wedge-close rewrite
-# (see the level loop); production default True, benchmarks flip it
-# for honest head-to-heads
-WEDGE_CLOSE = True
+# The filter stage costs about a dozen extra semi-join shuffles; it
+# pays for them only on a skewed label histogram (max/min label
+# frequency at least this). On uniform labels the label filter alone
+# captures the selectivity and the stage was measured as pure overhead
+# (BENCH/BASELINE.md).
+FILTER_MIN_SKEW = 4.0
 
 
 def match_embeddings(
     sym_edges: DataFrame,
     spec: PatternSpec,
     labeled_vertices: DataFrame | None = None,
-    n_classes: int = 7,
-    prune: bool | str = "auto",
-    skew_threshold: float = 4.0,
-    refine: int = 0,
-    strategy: str | None = None,
     _aux: list | None = None,
     _plan_probe: dict | None = None,
 ) -> DataFrame:
@@ -366,22 +294,18 @@ def match_embeddings(
     satisfying edges, lt/distinctness constraints, labels, and (if
     induced) non-edges. Pure JVM join plan.
 
-    For labeled patterns the reference's filter stage
-    (``src/query/filter.h:10-22``) can run first: per-position
-    candidates restricted by label AND degree AND neighborhood label
-    frequency (NLF) via :func:`build_candidates`, with the matching
-    order chosen by estimated candidate cardinality from the label
-    histogram (``src/query/query_plan.cc`` GQL order). The stage costs
-    ~a dozen extra semi-join shuffles, so ``prune="auto"`` (default)
-    enables it ONLY when the label histogram is skewed
-    (max/min frequency ≥ ``skew_threshold``) — on uniform labels the
-    label filter alone already captures all the selectivity and the
-    stage is measured pure overhead (BENCH/BASELINE.md). The
-    cardinality-informed matching order is kept in every labeled mode
-    (it costs one 7-row collect). ``prune=True``/``False`` force the
-    stage on/off (the reference similarly makes its filter strategy a
-    per-query choice, GQL/CFL/DPiso/...). Unlabeled patterns keep the
-    static greedy order and skip filtering entirely.
+    The plan follows from the pattern and the label histogram alone.
+    A labeled pattern with more than 3 vertices reads the label
+    histogram (one collect, a row per label) and orders its matching
+    by estimated candidate cardinality (``src/query/query_plan.cc`` GQL
+    order). When the histogram is skewed (max/min frequency ≥
+    ``FILTER_MIN_SKEW``) the reference's filter stage
+    (``src/query/filter.h:10-22``) runs first: per-position candidates
+    restricted by label AND degree AND neighborhood label frequency
+    (NLF) via :func:`build_candidates`.
+    A 3-vertex pattern has one extension level, so neither pays for
+    itself there, and unlabeled patterns have nothing to filter on:
+    both keep the static greedy order and the plain label filters.
 
     When the filter stage runs, the matching order uses POST-FILTER
     candidate cardinalities — each position's candidate table is built
@@ -392,20 +316,13 @@ def match_embeddings(
     frequent label's candidate set below a rare label's, flipping the
     optimal seed.
     """
-    if strategy is not None:
-        if strategy not in FILTER_STRATEGIES:
-            raise ValueError(
-                f"unknown filter strategy {strategy!r}; "
-                f"one of {sorted(FILTER_STRATEGIES)}"
-            )
-        prune, refine = FILTER_STRATEGIES[strategy]
     labeled = spec.vlabels is not None and any(
         l is not None for l in spec.vlabels
     )
     cand_est = None
     deg = nlf_df = None
     use_filters = False
-    if labeled and prune is not False:
+    if labeled and spec.n > 3:
         assert labeled_vertices is not None, "labeled pattern needs vertices"
         from graphminer_spark.graph.build import degrees as _degrees
         from graphminer_spark.graph.labels import label_frequency
@@ -423,9 +340,7 @@ def match_embeddings(
         skew = (
             max(freq.values()) / max(1, min(freq.values())) if freq else 1.0
         )
-        use_filters = prune is True or (
-            prune == "auto" and skew >= skew_threshold
-        )
+        use_filters = skew >= FILTER_MIN_SKEW
         if use_filters:
             # materialize the per-vertex filter tables ONCE: every
             # position issues several semi-joins against them, and
@@ -453,14 +368,9 @@ def match_embeddings(
         # refines the matching-order estimate (the GQL order), and the
         # same materialized table feeds the enumeration semi-joins
         for pos in range(spec.n):
-            cand_tables[pos] = build_candidates(
+            c = build_candidates(
                 sym, spec, labeled_vertices, pos, deg=deg, nlf_df=nlf_df
             )
-        if refine > 0:
-            # CFL/DPiso structural rounds on top of the NLF stage
-            cand_tables = refine_candidates(sym, spec, cand_tables, refine)
-        for pos in range(spec.n):
-            c = cand_tables[pos]
             if _aux is not None:
                 c = c.persist()
                 _aux.append(c)
@@ -532,8 +442,7 @@ def match_embeddings(
         # semi-join push below the join into the wedge scan (same
         # PushDownLeftSemiAntiJoin behavior the CECI test asserts).
         if (
-            WEDGE_CLOSE
-            and len(lv.rest) == 1
+            len(lv.rest) == 1
             and not seen_probe
             and not use_filters
             and lv.rest[0] not in spec.adj()[lv.first]
@@ -594,9 +503,6 @@ def count_matches(
     spec: PatternSpec,
     labeled_vertices: DataFrame | None = None,
     alias: str | None = None,
-    prune: bool | str = "auto",
-    refine: int = 0,
-    strategy: str | None = None,
 ) -> DataFrame:
     """Subgraph count (each unordered embedding once) → single row.
 
@@ -605,10 +511,7 @@ def count_matches(
     """
     alias = alias or f"n_{spec.name}"
     aux: list = []
-    emb = match_embeddings(
-        sym_edges, spec, labeled_vertices, prune=prune, refine=refine,
-        strategy=strategy, _aux=aux,
-    )
+    emb = match_embeddings(sym_edges, spec, labeled_vertices, _aux=aux)
     cnt = emb.agg(F.count("*").alias("_o"))
     if spec.lt:
         out = cnt.select(F.col("_o").alias(alias))
@@ -939,11 +842,7 @@ def gks_count(
         spec = PatternSpec(
             "gks_wedge", 3, ((0, 1), (1, 2)), vlabels=(e1, center, e2)
         )
-        # prune=False: 3-vertex wedges have one enumeration level, so
-        # the NLF filter stage would cost more than it saves (×4 specs)
-        w = count_matches(
-            sym_edges, spec, labeled_vertices, alias="w", prune=False
-        )
+        w = count_matches(sym_edges, spec, labeled_vertices, alias="w")
         total = w if total is None else total.crossJoin(
             w.withColumnRenamed("w", f"w{center}")
         )
@@ -952,7 +851,6 @@ def gks_count(
         PatternSpec("gks_tri", 3, ((0, 1), (1, 2), (0, 2)), vlabels=keywords),
         labeled_vertices,
         alias="t",
-        prune=False,
     )
     cols = [c for c in total.columns]
     return (

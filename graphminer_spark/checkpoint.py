@@ -74,8 +74,8 @@ def superstep_planning(spark: SparkSession, n_edges: int):
     runtime optimization of sub-second stages, so AQE is disabled for
     the loop and restored after; at web scale (≥ 50M edges) supersteps
     are seconds-to-minutes and AQE stays on — the same
-    measure-then-gate treatment as the query pipeline's
-    ``prune="auto"``.
+    measure-then-gate treatment as the query pipeline's skew-gated
+    filter stage (``subgraph.FILTER_MIN_SKEW``).
 
     NOTE: mutates session-level SQL conf for the duration (restored in
     a finally). Gated loops are SERIALIZED per process by a module

@@ -224,3 +224,55 @@ def brute_core_numbers(edges: list[tuple[int, int]]) -> dict[int, int]:
         for v in remaining:
             core[v] = k
     return core
+
+
+def brute_match_count(
+    edges: list[tuple[int, int]], spec, labels: dict[int, int] | None = None
+) -> int:
+    """``subgraph.count_matches`` by backtracking over adjacency: the
+    injective maps of the pattern's vertices that keep its edges, its
+    vertex labels (``labels``: id → label), its ``lt`` pairs and, for an
+    induced spec, its non-edges — ordered maps over |Aut| when the spec
+    has no ``lt`` pairs. Small graphs only."""
+    adj: dict[int, set[int]] = {}
+    for a, b in edges:
+        if a != b:
+            adj.setdefault(a, set()).add(b)
+            adj.setdefault(b, set()).add(a)
+    labels = labels or {}
+    padj = spec.adj()
+    lab = spec.vlabels or (None,) * spec.n
+    order = [0]  # every later position has a bound pattern neighbor
+    while len(order) < spec.n:
+        order.append(
+            min(p for p in range(spec.n) if p not in order and padj[p] & set(order))
+        )
+    phi: dict[int, int] = {}
+
+    def fits(p: int, v: int) -> bool:
+        if v in phi.values() or (lab[p] is not None and labels.get(v) != lab[p]):
+            return False
+        for q, w in phi.items():
+            if q in padj[p] and w not in adj[v]:
+                return False
+            if spec.induced and q not in padj[p] and w in adj[v]:
+                return False
+            if (p, q) in spec.lt and not v < w or (q, p) in spec.lt and not w < v:
+                return False
+        return True
+
+    def extend(k: int) -> int:
+        if k == spec.n:
+            return 1
+        p = order[k]
+        cands = adj[phi[min(padj[p] & set(phi))]] if k else adj
+        total = 0
+        for v in cands:
+            if fits(p, v):
+                phi[p] = v
+                total += extend(k + 1)
+                del phi[p]
+        return total
+
+    n = extend(0)
+    return n if spec.lt else n // spec.automorphisms()

@@ -1,6 +1,7 @@
 """Round-3 additions: deep k-clique chain (k≤9), edge-labeled FSM,
-query-pipeline NLF/degree pruning, no-forced-broadcast plan guards,
-and the fused-superstep refactors' behavioral invariants."""
+no-forced-broadcast plan guards, and the fused-superstep refactors'
+behavioral invariants. The query-pipeline filter-stage tests live in
+``tests/test_subgraph.py``."""
 
 from __future__ import annotations
 
@@ -17,12 +18,6 @@ from graphminer_spark.algorithms.patterns import (
     fsm_edge_support,
     fsm_elabel_2edge_support,
     fsm_elabel_support,
-)
-from graphminer_spark.algorithms.subgraph import (
-    PatternSpec,
-    build_candidates,
-    count_matches,
-    match_embeddings,
 )
 from graphminer_spark.graph.build import build_dag, degrees, symmetrize
 from graphminer_spark.graph.labels import (
@@ -155,88 +150,6 @@ def test_fsm_elabel_wedge_vs_bruteforce(spark, seed):
         for r in fsm_elabel_2edge_support(sym, lv, minsup=2).collect()
     }
     assert got == want
-
-
-# ------------------------------------- query pipeline: NLF/degree pruning
-
-LABELED_HOUSE = PatternSpec(
-    "labeled_house",
-    5,
-    ((0, 1), (0, 2), (1, 2), (1, 3), (3, 4), (0, 4)),
-    vlabels=(0, 1, 2, 3, 4),
-)
-
-
-@pytest.mark.parametrize("seed", [7, 23])
-def test_pruning_preserves_labeled_counts(spark, seed):
-    """prune=True (NLF/degree filter stage + cardinality order) and
-    prune=False (label-only filters, static order) agree — the filter
-    stage may only remove vertices that cannot appear in any match."""
-    edges = _random_graph(50, 250, seed)
-    df = edges_df(spark, edges)
-    sym = symmetrize(df, dedup=False)
-    verts = degrees(sym).select("id")
-    lv = with_synthetic_labels(verts)
-    for spec in (
-        LABELED_HOUSE,
-        PatternSpec(
-            "labeled_diamond",
-            4,
-            ((0, 1), (0, 2), (0, 3), (1, 2), (1, 3)),
-            vlabels=(0, 1, 2, 3),
-        ),
-    ):
-        a = count_matches(sym, spec, lv, prune=True).collect()[0][0]
-        b = count_matches(sym, spec, lv, prune=False).collect()[0][0]
-        assert a == b, spec.name
-
-
-def test_auto_prune_on_skewed_labels_matches_unpruned(spark):
-    """prune='auto' engages the filter stage on a skewed label
-    histogram and still returns exactly the unpruned count."""
-    edges = _random_graph(60, 240, 13)
-    df = edges_df(spark, edges)
-    sym = symmetrize(df, dedup=False)
-    verts = degrees(sym).select("id")
-    # skewed labels: classes 0..5 are rare (ids ≡ k mod 37), class 6
-    # holds the bulk — max/min frequency ratio far above the threshold
-    lv = verts.select(
-        "id",
-        F.when(F.col("id") % 37 < 6, (F.col("id") % 37).cast("int"))
-        .otherwise(F.lit(6))
-        .cast("int")
-        .alias("vlabel"),
-    )
-    spec = PatternSpec(
-        "skew_wedge3", 4, ((0, 1), (1, 2), (2, 3)), vlabels=(0, 6, 6, 1)
-    )
-    auto = count_matches(sym, spec, lv, prune="auto").collect()[0][0]
-    off = count_matches(sym, spec, lv, prune=False).collect()[0][0]
-    assert auto == off
-
-
-def test_candidate_filter_shrinks_enumeration_input(spark):
-    """On a selective labeled fixture the NLF/degree candidate set is
-    strictly smaller than the label-only candidate set (the reference
-    filter stage's whole point, src/query/filter.h:10-22)."""
-    edges = _random_graph(60, 200, 11)
-    df = edges_df(spark, edges)
-    sym = symmetrize(df, dedup=False)
-    verts = degrees(sym).select("id")
-    lv = with_synthetic_labels(verts)
-    # position 1 of the labeled house has pattern degree 3 and three
-    # distinctly-labeled neighbors — the NLF filter bites hard
-    pos = 1
-    label_only = lv.filter(
-        F.col("vlabel") == LABELED_HOUSE.vlabels[pos]
-    ).count()
-    pruned = build_candidates(sym, LABELED_HOUSE, lv, pos).count()
-    assert pruned < label_only
-    # and pruning never removes a true match participant
-    emb = match_embeddings(sym, LABELED_HOUSE, lv, prune=False)
-    matched = {r[f"v{pos}"] for r in emb.collect()}
-    kept = {r["id"] for r in build_candidates(sym, LABELED_HOUSE, lv, pos).collect()}
-    assert matched <= kept
 
 
 # -------------------------------------------- plan guards: no forced bcast

@@ -343,86 +343,6 @@ def test_fsm_4edge_matches_universal_brute(spark):
         assert sorted(brute[sh]) == sorted(got[sh]), f"shape {sh} mismatch"
 
 
-# --------------------------------- post-filter cardinality query order
-
-
-def test_query_order_uses_post_filter_cardinality(spark):
-    """GQL-style refinement: the matching order follows FILTERED
-    candidate counts, not raw label frequency — on a fixture where the
-    frequent label's candidates collapse under the degree/NLF filter,
-    the seed flips to that position (and the count stays exact)."""
-    from graphminer_spark.algorithms.subgraph import (
-        PatternSpec,
-        count_matches,
-        match_embeddings,
-    )
-
-    # one label-0 hub in 2 triangles; 48 degree-1 label-0 decoys
-    edges = [
-        (0, 100), (0, 200), (100, 200),
-        (0, 101), (0, 201), (101, 201),
-    ] + [(i, 100) for i in range(2, 50)]
-    sym = symmetrize(edges_df(spark, edges), dedup=False)
-    lv = spark.createDataFrame(
-        [(i, 0) for i in range(50)]
-        + [(100, 1), (101, 1), (200, 2), (201, 2)],
-        "id long, vlabel int",
-    )
-    spec = PatternSpec(
-        "t012", 3, ((0, 1), (0, 2), (1, 2)), vlabels=(0, 1, 2)
-    )
-    probe: dict = {}
-    emb = match_embeddings(sym, spec, lv, prune=True, _plan_probe=probe)
-    # label histogram says position 0 is the WORST seed (50 label-0
-    # vertices vs 2/2); the post-filter counts say it is the best (1)
-    assert probe["cand_est"] == [1, 2, 2]
-    assert 0 in probe["seed"]
-    assert emb.count() == 2
-    # pruned and unpruned plans agree
-    n_noprune = count_matches(sym, spec, lv, prune=False).collect()[0][0]
-    assert n_noprune == 2
-
-
-def test_candidate_refinement_sound_and_effective(spark):
-    """CFL/DPiso structural rounds: counts are invariant for any round
-    count, and on a fixture with structurally-dead candidates (right
-    label + degree + NLF, but no neighbor that itself is a candidate)
-    the refined sets are strictly smaller."""
-    from graphminer_spark.algorithms.subgraph import (
-        PatternSpec,
-        count_matches,
-        match_embeddings,
-    )
-
-    # labeled 4-path 0-1-2-3; decoy section: label-1/label-2 vertices
-    # that satisfy NLF locally but whose would-be continuation dead-ends
-    edges = [
-        # real 4-paths: 10-20-30-40, 11-20-30-41
-        (10, 20), (11, 20), (20, 30), (30, 40), (30, 41),
-        # decoys: 21 (label 1) sees label-0 and label-2 neighbors, but
-        # its label-2 neighbor 31 has no label-3 neighbor at all
-        (12, 21), (21, 31), (31, 13),
-    ]
-    lv = spark.createDataFrame(
-        [(10, 0), (11, 0), (12, 0), (13, 0),
-         (20, 1), (21, 1), (30, 2), (31, 2), (40, 3), (41, 3)],
-        "id long, vlabel int",
-    )
-    sym = symmetrize(edges_df(spark, edges), dedup=False)
-    spec = PatternSpec(
-        "lp4", 4, ((0, 1), (1, 2), (2, 3)), vlabels=(0, 1, 2, 3)
-    )
-    p0, p1 = {}, {}
-    match_embeddings(sym, spec, lv, prune=True, refine=0, _plan_probe=p0)
-    match_embeddings(sym, spec, lv, prune=True, refine=2, _plan_probe=p1)
-    # decoy 21/31 (and dead-end 12) survive NLF but not refinement
-    assert sum(p1["cand_est"]) < sum(p0["cand_est"])
-    # {10,11} × 20 × 30 × {40,41} = 4 labeled paths, any round count
-    for r in (0, 1, 2):
-        n = count_matches(sym, spec, lv, prune=True, refine=r).collect()[0][0]
-        assert n == 4, f"refine={r}"
-
-
 # ------------------------------------------------- AQE superstep gate
 
 
@@ -553,34 +473,6 @@ def test_dedup_operators_release_persisted_tables(spark):
     # simhash persists must be gone — they'd double the delta
     leaked = after - before
     assert len(leaked) <= 2, f"internal persisted tables leaked: {leaked}"
-
-
-# ---------------------------------------- wedge-close cycle rewrite
-
-
-def test_wedge_close_agrees_with_extend_probe(spark):
-    """The >=4-cycle wedge-close rewrite (subgraph.py level loop) must
-    count exactly what the extend-then-probe path counts, on a random
-    graph dense enough that pentagons/houses/4-cycles all appear."""
-    import graphminer_spark.algorithms.subgraph as sg
-    from graphminer_spark.algorithms.subgraph import SGL_PATTERNS, count_matches
-
-    sym = symmetrize(edges_df(spark, _random_graph(60, 500, seed=11)))
-    sym = sym.persist()
-    sym.count()
-    try:
-        for name in ("pentagon", "house", "rectangle", "hexagon"):
-            if name not in SGL_PATTERNS:
-                continue
-            spec = SGL_PATTERNS[name]
-            sg.WEDGE_CLOSE = True
-            a = count_matches(sym, spec).collect()[0][0]
-            sg.WEDGE_CLOSE = False
-            b = count_matches(sym, spec).collect()[0][0]
-            assert a == b, (name, a, b)
-    finally:
-        sg.WEDGE_CLOSE = True
-        sym.unpersist()
 
 
 # ---------------------------------------- color-coding approx paths

@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import random
 
+import pytest
+
 
 def _py_scc(edges):
     """Kosaraju — scc id = min member id."""
@@ -59,20 +61,36 @@ def _spark_scc(spark, edges, checkpointer=None):
     }
 
 
-def test_scc_cycle_chain(spark):
-    """A chain of 3-cycles linked by one-way bridges: every cycle is
-    its own SCC and the bridges never merge them — requires multiple
-    outer rounds (the downstream cycles' F labels are polluted by
-    upstream minima until those settle)."""
+def _cycle_chain():
+    """Four 3-cycles linked by one-way bridges."""
     edges = []
     for c in range(4):
         base = 10 * c
         edges += [(base, base + 1), (base + 1, base + 2), (base + 2, base)]
         if c:
             edges.append((base - 10, base))  # one-way bridge
+    return edges
+
+
+def test_scc_cycle_chain(spark):
+    """A chain of 3-cycles linked by one-way bridges: every cycle is
+    its own SCC and the bridges never merge them — requires multiple
+    outer rounds (the downstream cycles' F labels are polluted by
+    upstream minima until those settle)."""
+    edges = _cycle_chain()
     got = _spark_scc(spark, edges)
     assert got == _py_scc(edges)
     assert len(set(got.values())) == 4
+
+
+def test_scc_raises_when_rounds_run_out(spark):
+    """One outer round settles only the first cycle of the chain; the
+    call must fail rather than return 3 of the 12 vertices."""
+    from graphminer_spark.algorithms.scc import strongly_connected_components
+
+    df = spark.createDataFrame(sorted(set(_cycle_chain())), "src long, dst long")
+    with pytest.raises(RuntimeError, match="1 rounds with 9 vertices unassigned"):
+        strongly_connected_components(df, max_outer=1)
 
 
 def test_scc_bowtie(spark):

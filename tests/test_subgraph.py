@@ -1,6 +1,9 @@
 """Generic subgraph-matching engine vs (a) literal python
 transcriptions of the reference SgL kernels, (b) the ordered/|Aut|
-counting mechanism, and (c) the published citeseer goldens.
+counting mechanism, (c) the published citeseer goldens and (d) the
+backtracking oracle ``oracles.brute_match_count``, which also checks
+the plans the matcher picks for itself: the label filter stage, the
+post-filter matching order and the wedge-close cycle rewrite.
 
 Kernel transcriptions follow /root/reference/src/sgl/cpu_kernels/*.h
 line by line (sorted adjacency, `>= bound → break` = upper bound).
@@ -12,16 +15,20 @@ import itertools
 import random
 
 import pytest
+from pyspark.sql import functions as F
 
 from graphminer_spark.algorithms.subgraph import (
     SGL_PATTERNS,
     PatternSpec,
+    build_candidates,
     count_matches,
     gks_count,
     match_embeddings,
     parse_pattern,
 )
-from graphminer_spark.graph.build import symmetrize
+from graphminer_spark.graph.build import degrees, symmetrize
+from graphminer_spark.graph.labels import with_synthetic_labels
+from graphminer_spark.oracles import brute_match_count
 from tests.conftest import citeseer_dir, edges_df
 
 
@@ -562,3 +569,169 @@ def test_match_embeddings_plan_pure_jvm(spark, small_graph):
     plan = emb._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan
     assert "Join" in plan
+
+
+# ---------------------------- filter stage, matching order, wedge close
+
+
+def _gnm(n, m, seed):
+    rng = random.Random(seed)
+    return [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]
+
+
+def _labels_df(spark, labels):
+    return spark.createDataFrame(sorted(labels.items()), "id long, vlabel int")
+
+
+def _filter_stage_runs(sym, spec, lv) -> bool:
+    """True when ``match_embeddings`` builds candidate tables for
+    ``spec``: the stage hands them to ``_aux`` for release."""
+    aux: list = []
+    match_embeddings(sym, spec, lv, _aux=aux)
+    for t in aux:
+        t.unpersist()
+    return bool(aux)
+
+
+LABELED_HOUSE = PatternSpec(
+    "labeled_house", 5, SGL_PATTERNS["house"].edges, vlabels=(0, 1, 2, 3, 4)
+)
+
+
+@pytest.mark.parametrize("seed", [7, 23])
+def test_pruning_preserves_labeled_counts(spark, seed):
+    """On a skewed label histogram the NLF/degree filter stage runs
+    and may only remove vertices that cannot appear in any match: the
+    counts equal the backtracking oracle's."""
+    edges = _gnm(50, 250, seed)
+    sym = symmetrize(edges_df(spark, edges), dedup=False)
+    # 40 label-0 vertices, the other 10 spread over labels 1..4
+    labels = {v: (v // 5) % 4 + 1 if v % 5 == 0 else 0 for v in range(50)}
+    lv = _labels_df(spark, labels)
+    for spec in (
+        PatternSpec("lhouse", 5, SGL_PATTERNS["house"].edges, vlabels=(1, 0, 0, 2, 0)),
+        PatternSpec("ldiamond", 4, SGL_PATTERNS["diamond"].edges, vlabels=(0, 1, 0, 0)),
+    ):
+        assert _filter_stage_runs(sym, spec, lv), spec.name
+        got = count_matches(sym, spec, lv).collect()[0][0]
+        assert got == brute_match_count(edges, spec, labels), spec.name
+
+
+def test_filter_stage_on_skewed_labels_matches_oracle(spark):
+    """Rare classes 0..5 and one bulk class 6: the max/min frequency
+    ratio is far above the gate, the filter stage runs, and the count
+    is still exact."""
+    edges = _gnm(60, 240, 13)
+    sym = symmetrize(edges_df(spark, edges), dedup=False)
+    labels = {v: v % 37 if v % 37 < 6 else 6 for v in range(60)}
+    lv = _labels_df(spark, labels)
+    spec = PatternSpec(
+        "skew_wedge3", 4, ((0, 1), (1, 2), (2, 3)), vlabels=(0, 6, 6, 1)
+    )
+    assert _filter_stage_runs(sym, spec, lv)
+    got = count_matches(sym, spec, lv).collect()[0][0]
+    assert got == brute_match_count(edges, spec, labels) > 0
+
+
+def test_candidate_filter_shrinks_enumeration_input(spark):
+    """On a selective labeled fixture the NLF/degree candidate set is
+    strictly smaller than the label-only candidate set (the reference
+    filter stage's whole point, src/query/filter.h:10-22)."""
+    sym = symmetrize(edges_df(spark, _gnm(60, 200, 11)), dedup=False)
+    verts = degrees(sym).select("id")
+    lv = with_synthetic_labels(verts)
+    # position 1 of the labeled house has pattern degree 3 and three
+    # distinctly-labeled neighbors — the NLF filter bites hard
+    pos = 1
+    label_only = lv.filter(
+        F.col("vlabel") == LABELED_HOUSE.vlabels[pos]
+    ).count()
+    pruned = build_candidates(sym, LABELED_HOUSE, lv, pos).count()
+    assert pruned < label_only
+    # and pruning never removes a true match participant
+    emb = match_embeddings(sym, LABELED_HOUSE, lv)
+    matched = {r[f"v{pos}"] for r in emb.collect()}
+    kept = {r["id"] for r in build_candidates(sym, LABELED_HOUSE, lv, pos).collect()}
+    assert matched <= kept
+
+
+def test_query_order_uses_post_filter_cardinality(spark):
+    """GQL-style order: the matching order follows FILTERED candidate
+    counts, not raw label frequency — on a fixture where the frequent
+    label's candidates collapse under the degree/NLF filter, the seed
+    flips to that position (and the count stays exact)."""
+    # one label-0 hub in 2 triangles; 48 degree-1 label-0 decoys
+    edges = [
+        (0, 100), (0, 200), (100, 200),
+        (0, 101), (0, 201), (101, 201),
+    ] + [(i, 100) for i in range(2, 50)]
+    sym = symmetrize(edges_df(spark, edges), dedup=False)
+    labels = {i: 0 for i in range(50)} | {100: 1, 101: 1, 200: 2, 201: 2}
+    lv = _labels_df(spark, labels)
+    # triangle 0-1-2 with a label-1 tail on the label-0 position
+    spec = PatternSpec(
+        "t012_tail", 4, ((0, 1), (0, 2), (1, 2), (0, 3)), vlabels=(0, 1, 2, 1)
+    )
+    probe: dict = {}
+    emb = match_embeddings(sym, spec, lv, _plan_probe=probe)
+    # label histogram says position 0 is the WORST seed (50 label-0
+    # vertices vs 2/2/2); the post-filter counts say it is the best (1)
+    assert probe["cand_est"] == [1, 2, 2, 2]
+    assert 0 in probe["seed"]
+    assert emb.count() == 2
+    assert count_matches(sym, spec, lv).collect()[0][0] == 2
+    assert brute_match_count(edges, spec, labels) == 2
+
+
+def test_ceci_candidate_edge_pushdown(spark):
+    """The candidate semi-joins must sit BELOW the extension inner
+    joins in the optimized plan — i.e. every edge scan that feeds an
+    extension is pre-filtered by its endpoint candidate sets (the
+    CECI candidate-edge index, obtained from the optimizer rather
+    than a hand-built index). Guard it: a Spark upgrade or a plan
+    change that breaks the pushdown silently turns the filter stage
+    into post-join work."""
+    rng = random.Random(11)
+    sym = symmetrize(edges_df(spark, _gnm(150, 700, 11)), dedup=False)
+    # skewed labels so the filter stage runs
+    lv = _labels_df(
+        spark, {i: 0 if i % 7 else rng.randrange(4) for i in range(150)}
+    )
+    spec = PatternSpec(
+        "lpath4", 4, ((0, 1), (1, 2), (2, 3)), vlabels=(0, 1, 1, 0)
+    )
+    assert _filter_stage_runs(sym, spec, lv)
+    emb = match_embeddings(sym, spec, lv)
+    plan = emb._jdf.queryExecution().optimizedPlan().toString()
+    lines = plan.splitlines()
+    first_inner = min(
+        i for i, l in enumerate(lines) if "Join Inner" in l
+    )
+    semis_below = [
+        i for i, l in enumerate(lines) if "Join LeftSemi" in l and i > first_inner
+    ]
+    # deeper tree lines = larger indices; the semi filters must appear
+    # in the subtrees UNDER the inner joins (scan side), and none may
+    # sit above the first inner join
+    semis_above = [
+        i for i, l in enumerate(lines) if "Join LeftSemi" in l and i < first_inner
+    ]
+    assert semis_below and not semis_above, plan[:2000]
+
+
+def test_wedge_close_counts_match_oracle(spark):
+    """The pentagon and rectangle plans close a chordless cycle at
+    their first probe and take the wedge-close rewrite (subgraph.py
+    level loop); the house closes a triangle first and keeps
+    extend-then-probe. All three counts equal the backtracking
+    oracle's on a random graph dense enough that each shape appears."""
+    edges = _gnm(60, 500, 11)
+    sym = symmetrize(edges_df(spark, edges)).persist()
+    sym.count()
+    try:
+        for name in ("pentagon", "house", "rectangle"):
+            spec = SGL_PATTERNS[name]
+            got = count_matches(sym, spec).collect()[0][0]
+            assert got == brute_match_count(edges, spec) > 0, name
+    finally:
+        sym.unpersist()
