@@ -1,60 +1,75 @@
 """General-k FSM: the gSpan frontier loop over an embeddings-per-level
-DataFrame.
+DataFrame of fixed-width scalar columns.
 
 The reference mines patterns to arbitrary edge count k with
 rightmost-path extension and is_min canonical dedup
 (``src/fsm/omp_base.cc:150-239`` ``dfs_extend``, ``src/fsm/dfscode.h``,
 ``src/fsm/canonical.h``). This module is the Spark-first
 re-expression — instead of DFS codes on a recursion stack, the frontier
-is a DataFrame of *edge-set embeddings*:
+is a DataFrame of *edge-set embeddings*, one connected k-edge subgraph
+occurrence per row, and every per-row step is a scalar expression or a
+join against a small driver-built table:
 
-* a level-k embedding is one row ``(es, vlist)`` — ``es`` the SORTED
-  set of k graph edges of one connected edge-subgraph occurrence and
-  ``vlist`` the sorted ``(vertex, label)`` structs, carried
-  incrementally so no level ever re-joins the label table;
-* extension = one join against the labeled symmetric edge table
-  (pre-pruned after level 1 to edges whose label pair is frequent —
-  gSpan's anti-monotone 1-edge fact), then a CANONICAL-PARENT filter
-  (the Spark analogue of the reference's is_min rejection,
-  ``src/fsm/omp_base.cc:150-239``): candidate S = E' + ne survives
-  only when ne is the lexicographically MAXIMUM edge of S whose
-  removal keeps S connected, and (for backward edges, both endpoints
-  already in E') only via the smaller anchor. Every connected
-  (k+1)-edge subgraph has at least one removable edge and its parent
-  S − e* is a connected k-edge subgraph whose pattern is a subpattern
-  of S's (MNI is anti-monotone, Bringmann & Nijssen), so the frontier
-  stays complete for frequent patterns while each S is generated
-  EXACTLY ONCE — no per-level ``dropDuplicates`` array-key shuffle.
-  Removability is a property of the index-space STRUCTURE: ``vs`` is
-  sorted, so concrete-edge lex order equals index-edge lex order and
-  the max removable edge is computed once per structure on the
-  driver, broadcast, and checked as a pure expression;
+* a level-L row is ``v0..vL`` (its vertex ids, sorted, null past its
+  vertex count), ``lp`` (their labels, aligned with the slots: slot i's
+  label in bit field i, as a dense rank of the distinct labels, so the
+  packing below is order-preserving for any label values) and ``q``,
+  the index-space STRUCTURE: a bitmask over index pairs ``(a, b)``,
+  ``a < b``. The edges are ``(v_a, v_b)`` for each set bit, so no edge
+  list is carried;
+* extension (level > 1) = the anchor slots, ``stack``-ed out of the row,
+  joined to the labeled symmetric edge table (pre-pruned after level 1
+  to edges whose label pair is frequent — gSpan's anti-monotone 1-edge
+  fact), then a broadcast join with the driver's TRANSITION table keyed
+  by ``(q, anchor slot, t)``: ``t`` is the partner slot of a backward
+  edge (both endpoints already in the row) or ``-1 - p`` for a forward
+  edge whose new vertex sorts into slot ``p``. The table holds only the
+  transitions whose added edge is the lexicographically MAXIMUM edge of
+  the new structure whose removal keeps it connected, and backward
+  pairs absent from ``q`` taken from the smaller slot: the
+  CANONICAL-PARENT rule, the Spark analogue of the reference's is_min
+  rejection (``src/fsm/omp_base.cc:150-239``). Every connected
+  (k+1)-edge subgraph S has a removable edge and its parent S − e* is a
+  connected k-edge subgraph whose pattern is a subpattern of S's (MNI
+  is anti-monotone, Bringmann & Nijssen), so the frontier stays
+  complete for frequent patterns while each S is generated EXACTLY
+  ONCE. Because the vertex slots are sorted, concrete-edge order equals
+  index-pair order and removability is a property of ``q`` alone;
 * pattern identity = two-phase canonicalization (the quick-pattern →
-  canonical-pattern aggregation of ``miner.h``), split so ALL per-row
-  work stays JVM-side: the driver canonicalizes only the ≤ a few
-  hundred distinct index-space STRUCTURES (min over n! encodings,
-  n = k+1 ≤ 6 — the is_min check, memoized), and broadcasts each
-  structure's min-achieving assignments; rows then derive their
-  canonical label tuple as ``array_min`` over those assignments' label
-  permutations — a pure expression;
-* MNI support (``src/fsm/domain_support.h``): per embedding, EVERY
-  min-achieving assignment contributes its position → vertex pairs, so
-  ``countDistinct`` per position is automatically the union over all
-  isomorphic assignments — symmetric positions merge their domains
-  with no explicit orbit bookkeeping;
+  canonical-pattern aggregation of ``miner.h``): the driver
+  canonicalizes only the few distinct structures (min over n!
+  encodings, n = k+1 — the is_min check, memoized); the transition
+  table carries each new structure's id and one min-achieving slot
+  order, and the row's canonical label tuple is the ``least`` over the
+  canonical structure's automorphisms of its packed label ranks — with
+  the labels sorted within each class of interchangeable (twin)
+  positions, one automorphism per coset of the twin permutations is
+  enough. The structure id and that tuple form one long ``code``;
+* MNI support (``src/fsm/domain_support.h``): each row joins the
+  min-achieving assignments of its structure, keeps those whose labels
+  equal its canonical tuple and emits ``(code, position, vertex)``;
+  distinct counts per position union the domains of symmetric
+  positions with no orbit bookkeeping. Only the frequent codes reach
+  the driver, which renders them back to ``structure|[labels]``;
 * anti-monotone pruning between levels: embeddings of infrequent
   patterns leave the frontier (gSpan's support prune).
+
+Each level is one checkpointed pass (extension + code), one grouped
+collect (the structures it realized, for the next transition table,
+and its row count) and one support aggregate; the superseded level is
+freed as soon as its successor is materialized. ``q`` has 55 pair bits,
+so k ≤ 10; larger k raises ``ValueError``, as does a label alphabet too
+large for ``code`` to hold the k+1 packed ranks. The driver-built
+tables are local relations of non-null columns, which keeps the
+generated code of the level-4 pass under the JVM's 8000-byte limit for
+compiling a method (a larger one runs interpreted); at k ≥ 5 the code
+pass outgrows it and runs slower, still correct.
 
 Scale note: unlike the fixed-shape kernels in ``patterns.py`` (whose
 MNI domains commute into NLF counts — hub-safe), the general-k loop is
 embedding-bound by nature: level cost = O(#occurrences), the same
 asymptotics as the reference's DFS enumeration. Use it for depth
 (k ≥ 4); the closed-form kernels remain the scale path for k ≤ 3.
-Measured vs the r04 dropDuplicates miner on the sf0.1 scramble graph
-(alternating-order best-of protocol, BENCH/BASELINE.md round-5 notes):
-1.08× at k=4, 1.56× at k=5 (103 s for the full k=5 mine over a 7.9M-
-embedding top level) — the gap grows with k because the old dedup
-shuffle moved ~(k+1)× the surviving rows.
 """
 
 from __future__ import annotations
@@ -62,11 +77,38 @@ from __future__ import annotations
 from functools import lru_cache
 from itertools import permutations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+MAX_K = 10
+# connected graphs with L edges (OEIS A002905), L = 1..MAX_K: a bound on
+# the structure ids one level can need
+_CONNECTED_GRAPHS = (1, 1, 3, 5, 12, 30, 79, 227, 710, 2322)
 
-# ------------------------------------------------- driver-side canonical
+
+# ------------------------------------------------- driver-side structure
+
+
+def _bit(a: int, b: int) -> int:
+    """Bit of the index pair ``(a, b)``, ``a < b``, in a structure mask."""
+    return 1 << (b * (b - 1) // 2 + a)
+
+
+def _edges(q: int) -> tuple:
+    """The sorted index-pair edges of structure mask ``q``."""
+    return tuple(
+        sorted(
+            (a, b)
+            for b in range(1, MAX_K + 1)
+            for a in range(b)
+            if q & _bit(a, b)
+        )
+    )
+
+
+def _n_vertices(qedges: tuple) -> int:
+    return max(b for _, b in qedges) + 1
 
 
 @lru_cache(maxsize=None)
@@ -94,46 +136,48 @@ def _structure_canon(qedges: tuple, n: int):
     return best, tuple(mins)
 
 
-def _successor_structures(structs: set[tuple]) -> set[tuple]:
-    """All index-space structures one extension can produce from the
-    given level's structures — computed on the DRIVER, before the
-    extension join runs, so the canonical-parent filter and structure
-    map fuse into the extension pass (no pre-filter materialization or
-    collect over raw candidates). Backward edges add (a, b) in place;
-    forward edges insert the new vertex at every sorted position p
-    (shifting indices ≥ p), attached to every existing vertex. The
-    result is a superset of the structures the data can realize —
-    unused entries are dead broadcast rows, never wrong."""
-    out: set[tuple] = set()
-    for qedges in structs:
-        n = max(max(e) for e in qedges) + 1
-        es = set(qedges)
-        for a in range(n):
-            for b in range(a + 1, n):
-                if (a, b) not in es:
-                    out.add(tuple(sorted(es | {(a, b)})))
-        for p in range(n + 1):
-            shifted = {
-                tuple(
-                    sorted(
-                        (a + 1 if a >= p else a, b + 1 if b >= p else b)
-                    )
-                )
-                for a, b in es
-            }
-            for a in range(n):
-                ap = a + 1 if a >= p else a
-                out.add(tuple(sorted(shifted | {tuple(sorted((ap, p)))})))
-    return out
+@lru_cache(maxsize=None)
+def _label_orders(cedges: tuple, n: int) -> tuple:
+    """``(twins, reps)`` of the canonical structure, which together give
+    the least label tuple over its automorphisms without trying them all.
+    ``twins`` are its classes of ≥ 2 interchangeable positions (same
+    neighbours apart from each other); every permutation inside a class
+    is an automorphism, so once the labels are sorted within each class
+    only one automorphism per coset of those permutations matters:
+    ``reps`` holds the one that keeps each class's order."""
+    adj = [set() for _ in range(n)]
+    for a, b in cedges:
+        adj[a].add(b)
+        adj[b].add(a)
+    twins, seen = [], set()
+    for p in range(n):
+        if p not in seen:
+            cls = [p] + [
+                x for x in range(p + 1, n)
+                if x not in seen and adj[p] - {x} == adj[x] - {p}
+            ]
+            seen.update(cls)
+            if len(cls) > 1:
+                twins.append(tuple(cls))
+    es = set(cedges)
+    reps = set()
+    for s in permutations(range(n)):
+        if all(tuple(sorted((s[a], s[b]))) in es for a, b in cedges):
+            rep = list(s)
+            for cls in twins:
+                for p, x in zip(cls, sorted(s[p] for p in cls)):
+                    rep[p] = x
+            reps.add(tuple(rep))
+    return tuple(twins), tuple(sorted(reps))
 
 
 @lru_cache(maxsize=None)
 def _max_removable(qedges: tuple, n: int):
     """Max index-space edge of the structure whose removal keeps the
     remaining edges connected (over their own endpoint set) — the
-    canonical-parent edge. Always exists for k ≥ 2 (any spanning-tree
-    leaf edge is removable). Because embeddings carry ``vs`` sorted,
-    the max removable CONCRETE edge of every occurrence of this
+    canonical-parent edge. There is one for every k ≥ 2 (any spanning-tree
+    leaf edge is removable). Because embeddings carry their vertex slots
+    sorted, the max removable CONCRETE edge of every occurrence of this
     structure sits at exactly these index positions."""
     best = None
     for e in qedges:
@@ -157,6 +201,56 @@ def _max_removable(qedges: tuple, n: int):
         if len({find(v) for v in verts}) == 1 and (best is None or e > best):
             best = e
     return best
+
+
+def _transitions(parents, level: int) -> list[tuple]:
+    """``(q, s, t, nq, ins)`` for every way a level-(level-1) structure
+    ``q`` grows by one edge at anchor slot ``s`` into a structure ``nq``
+    whose canonical parent it is. ``t`` is the backward partner slot
+    (``s < t``, pair absent from ``q``) or ``-1 - p`` for a forward edge
+    whose new vertex takes sorted slot ``p``; ``ins`` is that ``p``, and
+    ``level + 1`` (past every slot) for a backward edge."""
+    rows = []
+    for q in parents:
+        es = _edges(q)
+        n = _n_vertices(es)
+        for s in range(n):
+            for j in range(s + 1, n):
+                if not q & _bit(s, j):
+                    nq = q | _bit(s, j)
+                    if _max_removable(_edges(nq), n) == (s, j):
+                        rows.append((q, s, j, nq, level + 1))
+            for p in range(n + 1):
+                def sh(i):
+                    return i + (i >= p)
+
+                e = tuple(sorted((sh(s), p)))
+                nes = tuple(sorted([(sh(a), sh(b)) for a, b in es] + [e]))
+                if _max_removable(nes, n + 1) == e:
+                    nq = sum(_bit(a, b) for a, b in nes)
+                    rows.append((q, s, -1 - p, nq, p))
+    return rows
+
+
+def _structures(qs, level: int):
+    """Canonical facts of one level's structures → ``(sids, canon, assigns)``:
+    ``sids`` maps each canonical edge set to its structure id, ``canon``
+    maps ``q`` to ``(sid, a*)`` with ``a*`` one min-achieving slot order
+    (padded with 0 to ``level + 1`` positions), and ``assigns`` holds
+    ``(q, g0..g_level)`` for every min-achieving assignment ``g``
+    (padded with ``level + 1``, a slot past every vertex)."""
+    sids: dict[tuple, int] = {}
+    canon: dict[int, tuple] = {}
+    assigns = []
+    width = level + 1
+    for q in sorted(qs):
+        es = _edges(q)
+        n = _n_vertices(es)
+        cedges, mins = _structure_canon(es, n)
+        sid = sids.setdefault(cedges, len(sids))
+        canon[q] = (sid, mins[0] + (0,) * (width - n))
+        assigns += [(q, *g, *(width,) * (width - n)) for g in mins]
+    return sids, canon, assigns
 
 
 def _decode_4edge(canon_edges, canon_labels):
@@ -208,361 +302,296 @@ def _decode_4edge(canon_edges, canon_labels):
 # ------------------------------------------------------- frontier loop
 
 
-def _qkey_str(qedges: tuple) -> str:
-    """Driver-side rendering of an index-space structure, chosen to
-    match the ``_with_quick`` expression byte-for-byte (both sides emit
-    ``a:b,a:b,...`` over the sorted edge list)."""
-    return ",".join(f"{a}:{b}" for a, b in sorted(qedges))
-
-
-def _with_quick(emb: DataFrame) -> DataFrame:
-    """Quick-pattern columns from the carried state — pure expressions:
-    ``vs`` = sorted vertex ids, ``labels`` aligned to it, ``qkey`` =
-    the index-space edge structure rendered ``a:b,a:b,...`` (the
-    structure-map join key, same rendering as :func:`_qkey_str`)."""
-    out = (
-        emb.withColumn("vs", F.transform("vlist", lambda x: x["v"]))
-        .withColumn("labels", F.transform("vlist", lambda x: x["l"]))
+def _table(spark, rows, schema: str) -> DataFrame:
+    """A driver-built table as a local relation (broadcasting it runs no
+    job) of non-null columns (the generated code carries no null checks
+    for them)."""
+    cols = [c.split() for c in schema.split(",")]
+    return spark.createDataFrame(
+        pd.DataFrame(rows, columns=[name for name, _ in cols]),
+        ", ".join(f"{name} {kind} NOT NULL" for name, kind in cols),
     )
-    qedges = F.array_sort(
-        F.transform(
-            "es",
-            lambda e: F.struct(
-                (
-                    F.least(
-                        F.array_position(F.col("vs"), e["u"]),
-                        F.array_position(F.col("vs"), e["v"]),
-                    )
-                    - 1
+
+
+def _cols(prefix: str, n: int) -> list[str]:
+    return [f"{prefix}{i}" for i in range(n)]
+
+
+def _slot(names: list[str], idx: str) -> str:
+    """SQL: the column among ``names`` that ``idx`` indexes (null when it
+    names none of them)."""
+    return f"CASE {idx} " + " ".join(
+        f"WHEN {i} THEN {c}" for i, c in enumerate(names)
+    ) + " END"
+
+
+def _pack(sid: int, ranks: list[str], bits: int, level: int) -> str:
+    """SQL: ``code`` of structure ``sid`` with label ranks ``ranks`` at
+    canonical positions 0, 1, ...: the id above ``level + 1`` rank
+    fields, the first position most significant, absent positions 0 —
+    so within one structure, code order is label-tuple order."""
+    return " + ".join(
+        [f"{sid << bits * (level + 1)}L"]
+        + [
+            f"shiftleft(CAST({r} AS BIGINT), {bits * (level - p)})"
+            for p, r in enumerate(ranks)
+        ]
+    )
+
+
+def _in(expr: str, values) -> str:
+    """SQL: ``expr`` is one of ``values``."""
+    return f"{expr} IN ({', '.join(map(str, values))})" if values else "false"
+
+
+def _with_code(rows: DataFrame, level: int, sids: dict, bits: int):
+    """Adds ``code`` to rows carrying ``sid`` and a min-achieving slot
+    order ``a0..a_level``: the label ranks are read in that order
+    (``c*``), sorted within each twin class (``s*``), and ``code`` is the
+    least of their packings over the structure's class-order-keeping
+    automorphisms — the least over all of its automorphisms."""
+    width = level + 1
+    sort: dict[int, list[str]] = {p: [] for p in range(width)}
+    branches = []
+    for cedges, sid in sids.items():
+        n = _n_vertices(cedges)
+        twins, reps = _label_orders(cedges, n)
+        for cls in twins:
+            # the i-th smallest of the class: the member with i members
+            # before it (ties broken by position)
+            before = {
+                j: " + ".join(
+                    f"CAST(c{x} {'<=' if x < j else '<'} c{j} AS INT)"
+                    for x in cls if x != j
                 )
-                .cast("int")
-                .alias("a"),
-                (
-                    F.greatest(
-                        F.array_position(F.col("vs"), e["u"]),
-                        F.array_position(F.col("vs"), e["v"]),
-                    )
-                    - 1
+                for j in cls
+            }
+            for i, p in enumerate(cls):
+                pick = " ".join(
+                    f"WHEN {before[j]} = {i} THEN c{j}" for j in cls[:-1]
                 )
-                .cast("int")
-                .alias("b"),
-            ),
+                sort[p].append(f"WHEN {sid} THEN CASE {pick} ELSE c{cls[-1]} END")
+        packs = [
+            _pack(sid, [f"s{r[p]}" for p in range(n)], bits, level) for r in reps
+        ]
+        best = packs[0] if len(packs) == 1 else f"least({', '.join(packs)})"
+        branches.append(f"WHEN {sid} THEN {best}")
+    mask = (1 << bits) - 1
+    return (
+        rows.selectExpr(
+            "*",
+            *[f"shiftright(lp, {bits} * a{p}) & {mask} AS c{p}" for p in range(width)],
         )
-    )
-    return out.withColumn(
-        "qkey",
-        F.array_join(
-            F.transform(
-                qedges,
-                lambda e: F.concat_ws(
-                    ":", e["a"].cast("string"), e["b"].cast("string")
-                ),
-            ),
-            ",",
-        ),
+        .selectExpr(
+            "*",
+            *[
+                f"CASE sid {' '.join(w)} ELSE c{p} END AS s{p}" if w else f"c{p} AS s{p}"
+                for p, w in sort.items()
+            ],
+        )
+        .selectExpr("*", f"CASE sid {' '.join(branches)} ELSE 0L END AS code")
     )
 
 
-def _extend(emb: DataFrame, lab_sym: DataFrame) -> DataFrame:
-    """One frontier level: every embedding grows by one incident edge
-    (forward or backward). Backward edges (both endpoints already in
-    the vertex set) are generated only via their SMALLER endpoint as
-    anchor, so within one parent each candidate appears once; the
-    cross-parent dedup is the canonical-parent filter downstream —
-    together they make each (k+1)-edge subgraph appear exactly once
-    with NO dropDuplicates shuffle. The labeled edge table carries the
-    new endpoint's label, so ``vlist`` extends without a label join.
-    Output carries ``ne`` (the added edge) for the parent check."""
+def _extend(frontier: DataFrame, lab_sym: DataFrame, trans: DataFrame,
+            level: int, bits: int) -> DataFrame:
+    """One frontier level: every level-(level-1) row grows by one edge at
+    each anchor slot, and the transition table keeps the growths whose
+    added edge is the new structure's canonical-parent edge. The labeled
+    edge table carries the new endpoint's label, so ``lp`` grows without
+    a label join. Output: the new slots, ``lp``, ``q``, and the new
+    structure's ``sid`` and ``a0..a_level`` from the table."""
+    pv = _cols("v", level)
+    slots = ", ".join(f"{i}, {v}" for i, v in enumerate(pv))
+    below = " + ".join(f"CASE WHEN {v} < w THEN 1 ELSE 0 END" for v in pv)
+    partner = " ".join(f"WHEN {v} = w THEN {i}" for i, v in enumerate(pv))
     ext = (
-        emb.select(
-            "es", "vlist",
-            F.explode(F.transform("vlist", lambda x: x["v"])).alias("anchor"),
-        )
-        .join(
-            lab_sym.select(
-                F.col("src").alias("anchor"),
-                F.col("dst").alias("w"),
-                F.col("ld").alias("lw"),
-            ),
-            "anchor",
-        )
-        .withColumn(
-            "ne",
-            F.struct(
-                F.least("anchor", "w").alias("u"),
-                F.greatest("anchor", "w").alias("v"),
-            ),
-        )
-        .filter(~F.array_contains("es", F.col("ne")))
+        frontier.selectExpr("*", f"stack({level}, {slots}) AS (s, anchor)")
+        .join(lab_sym.selectExpr("src AS anchor", "dst AS w", "ld AS lw"), "anchor")
+        .selectExpr("*", f"CASE {partner} ELSE -1 - ({below}) END AS t")
+        .join(F.broadcast(trans), ["q", "s", "t"])
     )
-    known = F.exists("vlist", lambda x: x["v"] == F.col("w"))
+
+    old = [*pv, "NULL"]
+    grow = [
+        f"CASE WHEN ins > {i} THEN {old[i]} WHEN ins = {i} THEN w"
+        + (f" ELSE {old[i - 1]}" if i else "")
+        + f" END AS v{i}"
+        for i in range(level + 1)
+    ]
+    at = f"{bits} * ins"
+    # the new label's rank goes in at bit field ``ins``; a backward edge
+    # (ins past every slot) adds none
+    insert = (
+        f"(lp & (shiftleft(1L, {at}) - 1)) | shiftleft(CAST(lw AS BIGINT), {at})"
+        f" | shiftleft(shiftright(lp, {at}), {at} + {bits})"
+    )
+    return ext.selectExpr(
+        *grow, f"CASE WHEN ins > {level} THEN lp ELSE {insert} END AS lp",
+        "nq AS q", "sid", *_cols("a", level + 1),
+    )
+
+
+def _supports(canon: DataFrame, assigns: DataFrame, level: int, bits: int,
+              minsup: int) -> DataFrame:
+    """MNI supports ``(code, support)`` with support ≥ minsup: each row
+    meets every min-achieving assignment of its structure, keeps those
+    that read its canonical label tuple, and emits (position, vertex)
+    pairs; per-position distinct counts union symmetric positions."""
+    width = level + 1
+    vtx = _cols("v", width)
+    read = _pack(
+        0, [f"shiftright(lp, {bits} * g{p}) & {(1 << bits) - 1}" for p in range(width)],
+        bits, level,
+    )
+    pairs = ", ".join(f"{p}, {_slot(vtx, f'g{p}')}" for p in range(width))
     return (
-        ext.filter(~known | (F.col("anchor") < F.col("w")))
-        .select(
-            F.array_sort(F.concat("es", F.array("ne"))).alias("es"),
-            F.when(known, F.col("vlist"))
-            .otherwise(
-                F.array_sort(
-                    F.concat(
-                        "vlist",
-                        F.array(
-                            F.struct(
-                                F.col("w").alias("v"),
-                                F.col("lw").cast("int").alias("l"),
-                            )
-                        ),
-                    )
-                )
-            )
-            .alias("vlist"),
-            "ne",
-        )
-    )
-
-
-def _canonical_rows(
-    ann: DataFrame, smap: DataFrame, check_parent: bool = False
-) -> DataFrame:
-    """Attach canonical code + min-achieving assignments, all JVM-side:
-    ``clabels`` = lexicographic min over the structure's assignments of
-    the permuted label tuple; ``code`` identifies the pattern. With
-    ``check_parent``, keep only rows whose added edge ``ne`` sits at
-    the structure's max-removable index positions — the canonical-
-    parent test that replaces cross-parent ``dropDuplicates``."""
-    joined = ann.join(F.broadcast(smap), "qkey")
-    if check_parent:
-        joined = joined.filter(
-            (
-                (F.array_position(F.col("vs"), F.col("ne")["u"]) - 1).cast(
-                    "int"
-                )
-                == F.col("ra")
-            )
-            & (
-                (F.array_position(F.col("vs"), F.col("ne")["v"]) - 1).cast(
-                    "int"
-                )
-                == F.col("rb")
-            )
-        )
-    labeling = lambda a: F.transform(  # noqa: E731
-        a, lambda i: F.element_at(F.col("labels"), i + 1)
-    )
-    clabels = F.array_min(
-        F.transform("assigns", lambda a: labeling(a))
-    )
-    return joined.withColumn("clabels", clabels).withColumn(
-        "code",
-        F.concat(F.col("sid"), F.lit("|"), F.col("clabels").cast("string")),
-    )
-
-
-def _level_supports(canon: DataFrame) -> DataFrame:
-    """MNI supports: every min-achieving assignment contributes its
-    position → vertex pairs, so per-position distinct counts union over
-    isomorphic assignments (symmetric positions merge automatically) →
-    ``(code, support)``."""
-    surviving = F.filter(
-        "assigns",
-        lambda a: F.transform(
-            a, lambda i: F.element_at(F.col("labels"), i + 1)
-        )
-        == F.col("clabels"),
-    )
-    assigned = (
-        canon.select(
-            "code", "vs", "labels", "clabels",
-            F.explode(surviving).alias("assign"),
-        )
-        .select(
-            "code",
-            F.posexplode(
-                F.transform(
-                    "assign", lambda i: F.element_at(F.col("vs"), i + 1)
-                )
-            ).alias("pos", "vtx"),
-        )
-    )
-    return (
-        assigned.groupBy("code", "pos")
+        canon.join(F.broadcast(assigns), "q")
+        .filter(f"{read} = code & {(1 << bits * width) - 1}L")
+        .selectExpr("code", f"stack({width}, {pairs}) AS (pos, vtx)")
+        .filter("vtx IS NOT NULL")
+        .groupBy("code", "pos")
         .agg(F.countDistinct("vtx").alias("d"))
         .groupBy("code")
         .agg(F.min("d").alias("support"))
+        .filter(F.col("support") >= minsup)
     )
 
 
 def _mine(sym_edges, labeled_vertices, k, minsup=None, minsup_fn=None,
           stats=None):
-    """Shared frontier loop → (supports DF, sid → canon_edges map).
+    """Shared frontier loop → the frequent k-edge patterns as
+    ``[(canon_edges, canon_labels, support)]``.
 
     ``minsup_fn`` folds adaptive support into the mine: it receives the
     SYMMETRIC edge count (already an action the loop needs for AQE
     gating) so callers don't pay a second scan of the input. ``stats``
-    (a dict, opt-in — adds one count action per level) collects
-    per-level candidate/frontier row counts for bench reporting."""
-    from graphminer_spark.checkpoint import superstep_planning
+    (a dict, opt-in) collects per-level candidate/frequent counts for
+    bench reporting."""
+    from graphminer_spark.checkpoint import _release, superstep_planning
 
+    if not 1 <= k <= MAX_K:
+        raise ValueError(f"fsm: k must be in 1..{MAX_K}, got {k}")
     spark = sym_edges.sparkSession
     lv = labeled_vertices.select("id", "vlabel")
+    labels = sorted(
+        r[0]
+        for r in lv.select("vlabel").distinct().dropna().collect()
+    )
+    bits = max(1, (len(labels) - 1).bit_length())
+    need = bits * (k + 1) + (_CONNECTED_GRAPHS[k - 1] - 1).bit_length()
+    if need > 63:
+        raise ValueError(
+            f"fsm: k={k} with {len(labels)} distinct labels needs a "
+            f"{need}-bit pattern code; at most 63 bits fit"
+        )
+    ltype = lv.schema["vlabel"].dataType.simpleString()
+    ranked = lv.join(
+        F.broadcast(
+            _table(spark, list(zip(labels, range(len(labels)))),
+                   f"vlabel {ltype}, r int")
+        ),
+        "vlabel",
+    )
     lab_sym = (
         sym_edges.select("src", "dst")
-        .join(
-            lv.select(F.col("id").alias("dst"), F.col("vlabel").alias("ld")),
-            "dst",
-        )
-        .join(
-            lv.select(F.col("id").alias("src"), F.col("vlabel").alias("ls")),
-            "src",
-        )
+        .join(ranked.select(F.col("id").alias("dst"), F.col("r").alias("ld")),
+              "dst")
+        .join(ranked.select(F.col("id").alias("src"), F.col("r").alias("ls")),
+              "src")
         .persist()
     )
     m_edges = lab_sym.count()
     if minsup is None:
         minsup = minsup_fn(m_edges)
-    # dedup on the (src, dst) long pair BEFORE building the array
-    # payload: hash-aggregatable long keys instead of the array-key
-    # SortAggregate (sort + first()) the old dropDuplicates(["es"])
-    # compiled to — identical row set (labels are functionally
-    # determined by the endpoint ids via the label join)
-    emb = (
-        lab_sym.filter(F.col("src") < F.col("dst"))
-        .dropDuplicates(["src", "dst"])
-        .select(
-            F.array(
-                F.struct(F.col("src").alias("u"), F.col("dst").alias("v"))
-            ).alias("es"),
-            F.array_sort(
-                F.array(
-                    F.struct(
-                        F.col("src").alias("v"),
-                        F.col("ls").cast("int").alias("l"),
-                    ),
-                    F.struct(
-                        F.col("dst").alias("v"),
-                        F.col("ld").cast("int").alias("l"),
-                    ),
-                )
-            ).alias("vlist"),
-        )
-    )
-    sid_edges: dict[str, tuple] = {}
     prev = None
-    sup = None
-    structs: set[tuple] = {((0, 1),)}
-
-    def build_smap(structset):
-        """Driver-built structure map (canonical assignments + max
-        removable edge per structure), broadcast into the extension
-        pass — no data scan needed to discover structures."""
-        srows, qmap = [], {}
-        for qedges in sorted(structset):
-            n = max(max(e) for e in qedges) + 1
-            cedges, assigns = _structure_canon(qedges, n)
-            sid = repr(cedges)
-            sid_edges[sid] = cedges
-            rem = _max_removable(qedges, n)
-            ra, rb = rem if rem is not None else (-1, -1)
-            qk = _qkey_str(qedges)
-            qmap[qk] = qedges
-            srows.append((qk, sid, [list(a) for a in assigns], ra, rb))
-        return (
-            spark.createDataFrame(
-                srows,
-                "qkey string, sid string, assigns array<array<int>>, "
-                "ra int, rb int",
-            ),
-            qmap,
-        )
-
+    warned = False
+    realized = {1}
     with superstep_planning(spark, m_edges):
         for level in range(1, k + 1):
-            smap, qmap = build_smap(structs)
-            if level > 1:
-                emb = _extend(emb, lab_sym)
-            ann = _with_quick(emb)
-            # ONE pass: extension join → qkey → broadcast structure map
-            # → canonical-parent filter → materialize only the
-            # exactly-once embeddings (assigns re-derivable via the
-            # broadcast, so not persisted per row)
-            canon = (
-                _canonical_rows(ann, smap, check_parent=level > 1)
-                .select(
-                    "es", "vlist", "vs", "labels", "qkey", "code", "clabels"
+            width = level + 1
+            slots = [*_cols("v", width), "lp"]
+            if level == 1:
+                sids, canon_of, assigns = _structures(realized, level)
+                sid, a = canon_of[1]
+                # dedup on the (src, dst) long pair
+                rows = (
+                    lab_sym.filter(F.col("src") < F.col("dst"))
+                    .dropDuplicates(["src", "dst"])
+                    .select(
+                        F.col("src").alias("v0"), F.col("dst").alias("v1"),
+                        F.expr(f"ls | shiftleft(CAST(ld AS BIGINT), {bits})").alias("lp"),
+                        F.lit(1).cast("long").alias("q"), F.lit(sid).alias("sid"),
+                        *[F.lit(x).alias(f"a{p}") for p, x in enumerate(a)],
+                    )
                 )
+            else:
+                trans = _transitions(realized, level)
+                sids, canon_of, assigns = _structures(
+                    {r[3] for r in trans}, level
+                )
+                tdf = _table(
+                    spark,
+                    [(*r, canon_of[r[3]][0], *canon_of[r[3]][1]) for r in trans],
+                    "q long, s int, t int, nq long, ins int, sid int, "
+                    + ", ".join(f"{c} int" for c in _cols("a", width)),
+                )
+                rows = _extend(frontier, lab_sym, tdf, level, bits)
+            # ONE pass: extension join → transition table → canonical
+            # code; the level's rows are materialized once
+            canon = (
+                _with_code(rows, level, sids, bits)
+                .select(*slots, "q", "code")
                 .localCheckpoint(eager=True)
             )
             if prev is not None:
-                prev.unpersist()
+                warned = _release(prev, warned)
             prev = canon
-            # ONE scan of the checkpointed level serves both the
-            # realized-structure set (tightens next level's successor
-            # enumeration) and the per-level row count (bench stats) —
-            # the old shape paid a separate full count() job per level.
-            # At the last level the structures feed nothing, so the
-            # scan runs only when stats were requested.
-            realized: set[tuple] = set()
+            # ONE grouped collect serves both the realized structures
+            # (next level's transition table) and the level's row count.
+            # At the last level the structures feed nothing, so it runs
+            # only when stats were requested.
             if level < k or stats is not None:
-                qrows = canon.groupBy("qkey").agg(
-                    F.count("*").alias("n")
-                ).collect()
-                realized = {qmap[r["qkey"]] for r in qrows}
+                counts = canon.groupBy("q").count().collect()
+                realized = {r["q"] for r in counts}
                 if stats is not None:
                     stats[f"level{level}_embeddings"] = sum(
-                        int(r["n"]) for r in qrows
+                        r["count"] for r in counts
                     )
-            sup = (
-                _level_supports(canon.join(F.broadcast(smap), "qkey"))
-                .filter(F.col("support") >= minsup)
-                .localCheckpoint(eager=True)  # ≤ pattern-space rows
+            adf = _table(
+                spark, assigns,
+                "q long, " + ", ".join(f"{c} int" for c in _cols("g", width)),
             )
+            frequent = _supports(canon, adf, level, bits, minsup).collect()
             if stats is not None:
-                stats[f"level{level}_frequent"] = sup.count()
+                stats[f"level{level}_frequent"] = len(frequent)
             if level < k:
-                structs = _successor_structures(realized)
-                # anti-monotone prune: only embeddings of frequent patterns
-                # stay on the frontier
-                emb = (
-                    canon.join(sup.select("code"), "code", "left_semi")
-                    .select("es", "vlist")
-                )
+                codes = [r["code"] for r in frequent]
+                # anti-monotone prune: only embeddings of frequent
+                # patterns stay on the frontier
+                frontier = canon.filter(_in("code", codes)).select(*slots, "q")
                 if level == 1:
                     # gSpan's 1-edge fact: an extension edge whose label
                     # pair is infrequent cannot appear in any frequent
                     # pattern — shrink the extension table once, for every
-                    # later level (affects only infrequent-pattern
-                    # candidate counts, which the support filter drops
-                    # anyway)
-                    pairs = set()
-                    for r in sup.select("code").collect():
-                        lpart = r["code"].split("|", 1)[1]
-                        la, lb = (
-                            int(x)
-                            for x in lpart.strip("[]").split(",")
-                            if x.strip()
-                        )
-                        pairs.add((la, lb))
-                    pair_df = spark.createDataFrame(
-                        sorted(pairs), "pl int, ph int"
-                    )
-                    pruned = lab_sym.join(
-                        F.broadcast(pair_df),
-                        (
-                            F.least(F.col("ls"), F.col("ld")).cast("int")
-                            == F.col("pl")
-                        )
-                        & (
-                            F.greatest(F.col("ls"), F.col("ld")).cast("int")
-                            == F.col("ph")
-                        ),
-                        "left_semi",
-                    ).persist()
+                    # later level
+                    pair = _pack(sid, ["least(ls, ld)", "greatest(ls, ld)"], bits, 1)
+                    pruned = lab_sym.filter(_in(pair, codes)).persist()
                     lab_sym.unpersist()
                     lab_sym = pruned
-    out = sup
-    if prev is not None:
-        prev.unpersist()
+    _release(prev, warned)
     lab_sym.unpersist()
-    return out, sid_edges
+    mask = (1 << bits) - 1
+    decoded = {s: e for e, s in sids.items()}
+    out = []
+    for r in frequent:
+        code = r["code"]
+        cedges = decoded[code >> bits * (k + 1)]
+        ranks = [
+            code >> bits * (k - p) & mask for p in range(_n_vertices(cedges))
+        ]
+        out.append((cedges, tuple(labels[x] for x in ranks), r["support"]))
+    return out
 
 
 def fsm_kedge_support(
@@ -574,12 +603,16 @@ def fsm_kedge_support(
 ) -> DataFrame:
     """Frequent k-edge patterns with MNI support → ``(code, support)``,
     support ≥ minsup; ``code`` is the canonical structure + minimal
-    label tuple of the pattern. Driver loop = gSpan's level-wise
-    frontier with anti-monotone support pruning between levels and
-    canonical-parent extension (each candidate generated once)."""
-    assert k >= 1
-    sup, _ = _mine(sym_edges, labeled_vertices, k, minsup, stats=stats)
-    return sup
+    label tuple of the pattern, ``"((0, 1), ...)|[l0, l1, ...]"``.
+    Driver loop = gSpan's level-wise frontier with anti-monotone support
+    pruning between levels and canonical-parent extension (each
+    candidate generated once)."""
+    pats = _mine(sym_edges, labeled_vertices, k, minsup, stats=stats)
+    rows = [
+        (f"{cedges!r}|[{', '.join(map(str, clabels))}]", sup)
+        for cedges, clabels, sup in pats
+    ]
+    return _table(sym_edges.sparkSession, rows, "code string, support long")
 
 
 def fsm_4edge_support(
@@ -597,22 +630,12 @@ def fsm_4edge_support(
     key the DuckDB oracle reproduces. ``minsup_fn`` (symmetric edge
     count → minsup) resolves adaptive support inside the mine's
     existing count action — no extra input scan."""
-    sup, sid_edges = _mine(
-        sym_edges, labeled_vertices, 4, minsup, minsup_fn, stats=stats
-    )
-    spark = sym_edges.sparkSession
-    # decode the FREQUENT patterns only (≤ pattern-space, small)
-    pats = sup.collect()
-    rows = []
-    for r in pats:
-        sid, lpart = r["code"].split("|", 1)
-        clabels = tuple(
-            int(x) for x in lpart.strip("[]").split(",") if x.strip()
-        )
-        rows.append(
-            (*_decode_4edge(sid_edges[sid], clabels), r["support"])
-        )
-    return spark.createDataFrame(
+    pats = _mine(sym_edges, labeled_vertices, 4, minsup, minsup_fn, stats=stats)
+    rows = [
+        (*_decode_4edge(cedges, clabels), sup) for cedges, clabels, sup in pats
+    ]
+    return _table(
+        sym_edges.sparkSession,
         rows,
         "shape string, q1 int, q2 int, q3 int, q4 int, q5 int, support long",
     )

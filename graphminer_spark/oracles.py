@@ -9,6 +9,7 @@ every distributed result must match — exactly for TC/CC/LP, allclose
 from __future__ import annotations
 
 from collections import Counter
+from itertools import combinations, permutations
 
 import numpy as np
 
@@ -276,3 +277,38 @@ def brute_match_count(
 
     n = extend(0)
     return n if spec.lt else n // spec.automorphisms()
+
+
+def brute_fsm(
+    edges: list[tuple[int, int]], labels: dict[int, int], k: int
+) -> tuple[dict[tuple, int], int]:
+    """MNI support of every k-edge pattern by brute force →
+    ``({(canon_edges, canon_labels): support}, n_connected)``. Every
+    connected k-subset of ``edges`` is encoded under every vertex
+    ordering; its pattern is the minimal ``(edges, labels)`` encoding,
+    and each ordering that reaches it adds position → vertex pairs to
+    the pattern's domains. ``n_connected`` counts the connected k-edge
+    subgraphs. Small graphs only."""
+    es_all = sorted({(min(a, b), max(a, b)) for a, b in edges if a != b})
+    dom: dict[tuple, dict[int, set[int]]] = {}
+    n_connected = 0
+    for es in combinations(es_all, k):
+        vs = sorted({x for e in es for x in e})
+        if len(set(union_find_cc(vs, list(es)).values())) != 1:
+            continue
+        n_connected += 1
+        encs = []
+        for assign in permutations(range(len(vs))):  # assign[pos] = index into vs
+            pos_of = {vs[q]: p for p, q in enumerate(assign)}
+            enc = (
+                tuple(sorted(tuple(sorted((pos_of[u], pos_of[v]))) for u, v in es)),
+                tuple(labels[vs[q]] for q in assign),
+            )
+            encs.append((enc, assign))
+        best = min(enc for enc, _ in encs)
+        poss = dom.setdefault(best, {})
+        for enc, assign in encs:
+            if enc == best:
+                for p, q in enumerate(assign):
+                    poss.setdefault(p, set()).add(vs[q])
+    return {pat: min(len(s) for s in poss.values()) for pat, poss in dom.items()}, n_connected

@@ -84,11 +84,14 @@ def _jit_warmup(spark: SparkSession, budget_s: float) -> None:
 
 
 def _host_defaults() -> tuple[int, str]:
-    """``(cores, driver memory)`` that fit this host: every CPU, and half
-    of physical memory capped at 24g (a local session's executors live
-    in the driver JVM; the rest is for Python workers and the OS)."""
-    half = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2
-    return os.cpu_count() or 1, f"{min(half, 24 << 30) >> 20}m"
+    """``(cores, driver memory)`` that fit this host: every CPU, and a
+    quarter of physical memory capped at 24g. A local session's
+    executors live in the driver JVM, and its shuffle files go to
+    ``/dev/shm``, which is RAM as well; the rest is for Python workers
+    and the OS. At half of RAM (7680m on a 15 GB host) the kernel killed
+    the JVM during the motif and pattern-count oracle queries."""
+    quarter = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 4
+    return os.cpu_count() or 1, f"{min(quarter, 24 << 30) >> 20}m"
 
 
 def get_spark(

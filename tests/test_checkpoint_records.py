@@ -170,12 +170,12 @@ def test_release_failure_is_logged_once(caplog):
 
 
 def test_session_defaults_fit_the_host(monkeypatch):
-    """Cores default to every CPU and the driver to half of physical
-    memory, capped at 24g."""
+    """Cores default to every CPU and the driver to a quarter of
+    physical memory, capped at 24g."""
     from graphminer_spark import session
 
     gib = 1 << 30
-    for phys, mem in [(15 * gib, "7680m"), (256 * gib, "24576m")]:
+    for phys, mem in [(15 * gib, "3840m"), (256 * gib, "24576m")]:
         sizes = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": phys // 4096}
         monkeypatch.setattr(session.os, "sysconf", sizes.__getitem__)
         monkeypatch.setattr(session.os, "cpu_count", lambda: 4)

@@ -159,190 +159,6 @@ def test_fsm_mni_bounded_on_zipf_hub(spark):
     }
 
 
-# --------------------------------------------- general-k FSM frontier
-
-
-def test_fsm_kedge_agrees_with_specialized_kernels(spark):
-    """The generic gSpan frontier loop at k=2/3 reproduces the
-    (brute-force-validated) closed-form kernels' support multisets."""
-    from graphminer_spark.algorithms.fsm_general import fsm_kedge_support
-    from graphminer_spark.algorithms.patterns import (
-        fsm_2edge_support,
-        fsm_3edge_support,
-    )
-
-    raw = _random_graph(25, 60, 13)
-    edges = sorted({(min(a, b), max(a, b)) for a, b in raw if a != b})
-    sym = symmetrize(edges_df(spark, edges), dedup=False)
-    lv = spark.createDataFrame(
-        [(v, v % 3) for v in range(25)], "id long, vlabel int"
-    )
-    for k, spec in [(2, fsm_2edge_support), (3, fsm_3edge_support)]:
-        gen = sorted(
-            r["support"]
-            for r in fsm_kedge_support(sym, lv, k, 1).collect()
-        )
-        ref = sorted(r["support"] for r in spec(sym, lv, 1).collect())
-        assert gen == ref, f"k={k} support multiset mismatch"
-
-
-def test_fsm_kedge_k5_matches_universal_brute(spark):
-    """k=5 (beyond the gate's k=4): total pattern count and support
-    multiset match the universal all-permutation brute force — the
-    frontier loop is genuinely general-k."""
-    from collections import defaultdict
-    from itertools import combinations, permutations
-
-    from graphminer_spark.algorithms.fsm_general import fsm_kedge_support
-
-    raw = _random_graph(12, 18, 5)
-    edges = sorted({(min(a, b), max(a, b)) for a, b in raw if a != b})
-    label = {v: v % 2 for v in range(12)}
-    sym = symmetrize(edges_df(spark, edges), dedup=False)
-    lv = spark.createDataFrame(
-        [(v, label[v]) for v in range(12)], "id long, vlabel int"
-    )
-
-    def connected(es):
-        ad = defaultdict(set)
-        for u, v in es:
-            ad[u].add(v)
-            ad[v].add(u)
-        seen = {es[0][0]}
-        stack = [es[0][0]]
-        while stack:
-            x = stack.pop()
-            for y in ad[x]:
-                if y not in seen:
-                    seen.add(y)
-                    stack.append(y)
-        return seen == set(ad)
-
-    dom = defaultdict(lambda: defaultdict(set))
-    for es in combinations(edges, 5):
-        if not connected(es):
-            continue
-        vs = sorted({x for e in es for x in e})
-        n = len(vs)
-        encs = []
-        for assign in permutations(range(n)):
-            pos_of = {vs[q]: p for p, q in enumerate(assign)}
-            encs.append(
-                (
-                    (
-                        tuple(
-                            sorted(
-                                tuple(sorted((pos_of[u], pos_of[v])))
-                                for u, v in es
-                            )
-                        ),
-                        tuple(label[vs[assign[p]]] for p in range(n)),
-                    ),
-                    assign,
-                )
-            )
-        best = min(e for e, _ in encs)
-        for enc, assign in encs:
-            if enc == best:
-                for p in range(n):
-                    dom[best][p].add(vs[assign[p]])
-    brute = sorted(
-        min(len(s) for s in poss.values()) for poss in dom.values()
-    )
-    got = sorted(
-        r["support"] for r in fsm_kedge_support(sym, lv, 5, 1).collect()
-    )
-    assert got == brute
-
-
-def test_fsm_4edge_matches_universal_brute(spark):
-    """k=4: per-shape support multisets match a universal brute force
-    (min-encoding pattern id over all vertex permutations, position
-    domains = exact MNI by definition)."""
-    from collections import Counter, defaultdict
-    from itertools import combinations, permutations
-
-    from graphminer_spark.algorithms.fsm_general import fsm_4edge_support
-
-    raw = _random_graph(22, 50, 13)
-    edges = sorted({(min(a, b), max(a, b)) for a, b in raw if a != b})
-    label = {v: v % 3 for v in range(22)}
-    sym = symmetrize(edges_df(spark, edges), dedup=False)
-    lv = spark.createDataFrame(
-        [(v, label[v]) for v in range(22)], "id long, vlabel int"
-    )
-
-    def connected(es):
-        ad = defaultdict(set)
-        for u, v in es:
-            ad[u].add(v)
-            ad[v].add(u)
-        seen = {es[0][0]}
-        stack = [es[0][0]]
-        while stack:
-            x = stack.pop()
-            for y in ad[x]:
-                if y not in seen:
-                    seen.add(y)
-                    stack.append(y)
-        return seen == set(ad)
-
-    shape_of = {
-        (1, 1, 1, 1, 4): "star4",
-        (1, 1, 1, 2, 3): "chair",
-        (1, 1, 2, 2, 2): "path5",
-        (2, 2, 2, 2): "cycle4",
-        (1, 2, 2, 3): "paw",
-    }
-    dom = defaultdict(lambda: defaultdict(set))
-    pat_shape = {}
-    for es in combinations(edges, 4):
-        if not connected(es):
-            continue
-        vs = sorted({x for e in es for x in e})
-        n = len(vs)
-        best = None
-        for assign in permutations(range(n)):
-            pos_of = {vs[q]: p for p, q in enumerate(assign)}
-            enc = (
-                tuple(
-                    sorted(
-                        tuple(sorted((pos_of[u], pos_of[v]))) for u, v in es
-                    )
-                ),
-                tuple(label[vs[assign[p]]] for p in range(n)),
-            )
-            if best is None or enc < best:
-                best = enc
-        for assign in permutations(range(n)):
-            pos_of = {vs[q]: p for p, q in enumerate(assign)}
-            enc = (
-                tuple(
-                    sorted(
-                        tuple(sorted((pos_of[u], pos_of[v]))) for u, v in es
-                    )
-                ),
-                tuple(label[vs[assign[p]]] for p in range(n)),
-            )
-            if enc == best:
-                for p in range(n):
-                    dom[best][p].add(vs[assign[p]])
-        degc = Counter()
-        for u, v in es:
-            degc[u] += 1
-            degc[v] += 1
-        pat_shape[best] = shape_of[tuple(sorted(degc.values()))]
-
-    brute = defaultdict(list)
-    for pat, poss in dom.items():
-        brute[pat_shape[pat]].append(min(len(s) for s in poss.values()))
-    got = defaultdict(list)
-    for r in fsm_4edge_support(sym, lv, minsup=1).collect():
-        got[r["shape"]].append(r["support"])
-    for sh in set(brute) | set(got):
-        assert sorted(brute[sh]) == sorted(got[sh]), f"shape {sh} mismatch"
-
-
 # ------------------------------------------------- AQE superstep gate
 
 
