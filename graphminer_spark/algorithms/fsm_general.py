@@ -44,10 +44,11 @@ join against a small driver-built table:
   canonical structure's automorphisms of its packed label ranks — with
   the labels sorted within each class of interchangeable (twin)
   positions, one automorphism per coset of the twin permutations is
-  enough. The structure id and that tuple form one long ``code``;
+  enough. A pattern is the structure id ``sid`` plus that tuple packed
+  into one long ``code``;
 * MNI support (``src/fsm/domain_support.h``): each row joins the
   min-achieving assignments of its structure, keeps those whose labels
-  equal its canonical tuple and emits ``(code, position, vertex)``;
+  equal its canonical tuple and emits ``(sid, code, position, vertex)``;
   distinct counts per position union the domains of symmetric
   positions with no orbit bookkeeping. Only the frequent codes reach
   the driver, which renders them back to ``structure|[labels]``;
@@ -57,13 +58,15 @@ join against a small driver-built table:
 Each level is one checkpointed pass (extension + code), one grouped
 collect (the structures it realized, for the next transition table,
 and its row count) and one support aggregate; the superseded level is
-freed as soon as its successor is materialized. ``q`` has 55 pair bits,
-so k ≤ 10; larger k raises ``ValueError``, as does a label alphabet too
-large for ``code`` to hold the k+1 packed ranks. The driver-built
+freed as soon as its successor is materialized; a level with no
+frequent pattern ends the mine. ``q`` has 55 pair bits, so k ≤ 10;
+larger k raises ``ValueError``, as does a label alphabet too large for
+one long to hold the k+1 packed ranks. The driver-built
 tables are local relations of non-null columns, which keeps the
 generated code of the level-4 pass under the JVM's 8000-byte limit for
-compiling a method (a larger one runs interpreted); at k ≥ 5 the code
-pass outgrows it and runs slower, still correct.
+compiling a method (a larger one runs interpreted). At k ≥ 5 the code
+pass outgrows it; still, a k = 5 mine of ``bench.py``'s sf0.01 scramble
+graph (1.49M level-5 rows, minsup 20) takes 26 s warm on 4 CPUs.
 
 Scale note: unlike the fixed-shape kernels in ``patterns.py`` (whose
 MNI domains commute into NLF counts — hub-safe), the general-k loop is
@@ -82,9 +85,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 MAX_K = 10
-# connected graphs with L edges (OEIS A002905), L = 1..MAX_K: a bound on
-# the structure ids one level can need
-_CONNECTED_GRAPHS = (1, 1, 3, 5, 12, 30, 79, 227, 710, 2322)
 
 
 # ------------------------------------------------- driver-side structure
@@ -256,7 +256,8 @@ def _structures(qs, level: int):
 def _decode_4edge(canon_edges, canon_labels):
     """Canonical 4-edge pattern → ``(shape, q1..q5)`` semantic key (the
     named-shape layout the oracle SQL reproduces; q5 = -1 for 4-vertex
-    shapes). Shapes: path5 / star4 / chair / cycle4 / paw."""
+    shapes). Shapes: path5 / star4 / chair / cycle4 / paw. The labels may
+    be any non-negative values that order like them, such as ranks."""
     n = len(canon_labels)
     adj = {i: set() for i in range(n)}
     for a, b in canon_edges:
@@ -302,14 +303,16 @@ def _decode_4edge(canon_edges, canon_labels):
 # ------------------------------------------------------- frontier loop
 
 
-def _table(spark, rows, schema: str) -> DataFrame:
+def _table(spark, rows, schema: str, nullable: bool = False) -> DataFrame:
     """A driver-built table as a local relation (broadcasting it runs no
-    job) of non-null columns (the generated code carries no null checks
-    for them)."""
+    job), by default of non-null columns (the generated code carries no
+    null checks for them)."""
     cols = [c.split() for c in schema.split(",")]
     return spark.createDataFrame(
         pd.DataFrame(rows, columns=[name for name, _ in cols]),
-        ", ".join(f"{name} {kind} NOT NULL" for name, kind in cols),
+        ", ".join(
+            f"{name} {kind}{'' if nullable else ' NOT NULL'}" for name, kind in cols
+        ),
     )
 
 
@@ -325,23 +328,20 @@ def _slot(names: list[str], idx: str) -> str:
     ) + " END"
 
 
-def _pack(sid: int, ranks: list[str], bits: int, level: int) -> str:
-    """SQL: ``code`` of structure ``sid`` with label ranks ``ranks`` at
-    canonical positions 0, 1, ...: the id above ``level + 1`` rank
-    fields, the first position most significant, absent positions 0 —
-    so within one structure, code order is label-tuple order."""
-    return " + ".join(
-        [f"{sid << bits * (level + 1)}L"]
-        + [
-            f"shiftleft(CAST({r} AS BIGINT), {bits * (level - p)})"
-            for p, r in enumerate(ranks)
-        ]
+def _pack(ranks: list[str], bits: int, level: int) -> str:
+    """SQL: the label ranks ``ranks`` at canonical positions 0, 1, ...
+    packed into one long of ``level + 1`` fields, the first position
+    most significant, absent positions 0 — so within one structure,
+    code order is label-tuple order."""
+    return " | ".join(
+        f"shiftleft(CAST({r} AS BIGINT), {bits * (level - p)})"
+        for p, r in enumerate(ranks)
     )
 
 
 def _in(expr: str, values) -> str:
     """SQL: ``expr`` is one of ``values``."""
-    return f"{expr} IN ({', '.join(map(str, values))})" if values else "false"
+    return f"{expr} IN ({', '.join(map(str, values))})"
 
 
 def _with_code(rows: DataFrame, level: int, sids: dict, bits: int):
@@ -372,7 +372,7 @@ def _with_code(rows: DataFrame, level: int, sids: dict, bits: int):
                 )
                 sort[p].append(f"WHEN {sid} THEN CASE {pick} ELSE c{cls[-1]} END")
         packs = [
-            _pack(sid, [f"s{r[p]}" for p in range(n)], bits, level) for r in reps
+            _pack([f"s{r[p]}" for p in range(n)], bits, level) for r in reps
         ]
         best = packs[0] if len(packs) == 1 else f"least({', '.join(packs)})"
         branches.append(f"WHEN {sid} THEN {best}")
@@ -434,25 +434,25 @@ def _extend(frontier: DataFrame, lab_sym: DataFrame, trans: DataFrame,
 
 def _supports(canon: DataFrame, assigns: DataFrame, level: int, bits: int,
               minsup: int) -> DataFrame:
-    """MNI supports ``(code, support)`` with support ≥ minsup: each row
+    """MNI supports ``(sid, code, support)`` with support ≥ minsup: each row
     meets every min-achieving assignment of its structure, keeps those
     that read its canonical label tuple, and emits (position, vertex)
     pairs; per-position distinct counts union symmetric positions."""
     width = level + 1
     vtx = _cols("v", width)
     read = _pack(
-        0, [f"shiftright(lp, {bits} * g{p}) & {(1 << bits) - 1}" for p in range(width)],
+        [f"shiftright(lp, {bits} * g{p}) & {(1 << bits) - 1}" for p in range(width)],
         bits, level,
     )
     pairs = ", ".join(f"{p}, {_slot(vtx, f'g{p}')}" for p in range(width))
     return (
         canon.join(F.broadcast(assigns), "q")
-        .filter(f"{read} = code & {(1 << bits * width) - 1}L")
-        .selectExpr("code", f"stack({width}, {pairs}) AS (pos, vtx)")
+        .filter(f"{read} = code")
+        .selectExpr("sid", "code", f"stack({width}, {pairs}) AS (pos, vtx)")
         .filter("vtx IS NOT NULL")
-        .groupBy("code", "pos")
+        .groupBy("sid", "code", "pos")
         .agg(F.countDistinct("vtx").alias("d"))
-        .groupBy("code")
+        .groupBy("sid", "code")
         .agg(F.min("d").alias("support"))
         .filter(F.col("support") >= minsup)
     )
@@ -460,8 +460,9 @@ def _supports(canon: DataFrame, assigns: DataFrame, level: int, bits: int,
 
 def _mine(sym_edges, labeled_vertices, k, minsup=None, minsup_fn=None,
           stats=None):
-    """Shared frontier loop → the frequent k-edge patterns as
-    ``[(canon_edges, canon_labels, support)]``.
+    """Shared frontier loop → ``(patterns, labels)``: the frequent k-edge
+    patterns as ``[(canon_edges, canon_ranks, support)]`` and the label
+    of each rank.
 
     ``minsup_fn`` folds adaptive support into the mine: it receives the
     SYMMETRIC edge count (already an action the loop needs for AQE
@@ -474,24 +475,25 @@ def _mine(sym_edges, labeled_vertices, k, minsup=None, minsup_fn=None,
         raise ValueError(f"fsm: k must be in 1..{MAX_K}, got {k}")
     spark = sym_edges.sparkSession
     lv = labeled_vertices.select("id", "vlabel")
+    # null is a label of its own, ordered before every other one
     labels = sorted(
-        r[0]
-        for r in lv.select("vlabel").distinct().dropna().collect()
+        (r[0] for r in lv.select("vlabel").distinct().collect()),
+        key=lambda x: (x is not None, x),
     )
     bits = max(1, (len(labels) - 1).bit_length())
-    need = bits * (k + 1) + (_CONNECTED_GRAPHS[k - 1] - 1).bit_length()
-    if need > 63:
+    if bits * (k + 1) > 63:
         raise ValueError(
-            f"fsm: k={k} with {len(labels)} distinct labels needs a "
-            f"{need}-bit pattern code; at most 63 bits fit"
+            f"fsm: k={k} packs {k + 1} label ranks into 63 bits, room for "
+            f"{1 << 63 // (k + 1)} distinct labels; got {len(labels)}"
         )
     ltype = lv.schema["vlabel"].dataType.simpleString()
-    ranked = lv.join(
-        F.broadcast(
-            _table(spark, list(zip(labels, range(len(labels)))),
-                   f"vlabel {ltype}, r int")
-        ),
-        "vlabel",
+    ranks = _table(
+        spark,
+        [(x, r) for r, x in enumerate(labels) if x is not None],
+        f"vlabel {ltype}, r int",
+    )
+    ranked = lv.join(F.broadcast(ranks), "vlabel", "left").select(
+        "id", F.coalesce("r", F.lit(0)).alias("r")
     )
     lab_sym = (
         sym_edges.select("src", "dst")
@@ -541,7 +543,7 @@ def _mine(sym_edges, labeled_vertices, k, minsup=None, minsup_fn=None,
             # code; the level's rows are materialized once
             canon = (
                 _with_code(rows, level, sids, bits)
-                .select(*slots, "q", "code")
+                .select(*slots, "q", "sid", "code")
                 .localCheckpoint(eager=True)
             )
             if prev is not None:
@@ -565,18 +567,32 @@ def _mine(sym_edges, labeled_vertices, k, minsup=None, minsup_fn=None,
             frequent = _supports(canon, adf, level, bits, minsup).collect()
             if stats is not None:
                 stats[f"level{level}_frequent"] = len(frequent)
+            if level < k and not frequent:
+                # nothing is left to grow: every later level is empty
+                if stats is not None:
+                    for later in range(level + 1, k + 1):
+                        stats[f"level{later}_embeddings"] = 0
+                        stats[f"level{later}_frequent"] = 0
+                break
             if level < k:
-                codes = [r["code"] for r in frequent]
+                codes: dict[int, list[int]] = {}
+                for r in frequent:
+                    codes.setdefault(r["sid"], []).append(r["code"])
                 # anti-monotone prune: only embeddings of frequent
                 # patterns stay on the frontier
-                frontier = canon.filter(_in("code", codes)).select(*slots, "q")
+                keep = " ".join(
+                    f"WHEN {s} THEN {_in('code', c)}" for s, c in sorted(codes.items())
+                )
+                frontier = canon.filter(f"CASE sid {keep} ELSE false END").select(
+                    *slots, "q"
+                )
                 if level == 1:
                     # gSpan's 1-edge fact: an extension edge whose label
                     # pair is infrequent cannot appear in any frequent
                     # pattern — shrink the extension table once, for every
                     # later level
-                    pair = _pack(sid, ["least(ls, ld)", "greatest(ls, ld)"], bits, 1)
-                    pruned = lab_sym.filter(_in(pair, codes)).persist()
+                    pair = _pack(["least(ls, ld)", "greatest(ls, ld)"], bits, 1)
+                    pruned = lab_sym.filter(_in(pair, codes[sid])).persist()
                     lab_sym.unpersist()
                     lab_sym = pruned
     _release(prev, warned)
@@ -585,13 +601,12 @@ def _mine(sym_edges, labeled_vertices, k, minsup=None, minsup_fn=None,
     decoded = {s: e for e, s in sids.items()}
     out = []
     for r in frequent:
-        code = r["code"]
-        cedges = decoded[code >> bits * (k + 1)]
-        ranks = [
-            code >> bits * (k - p) & mask for p in range(_n_vertices(cedges))
-        ]
-        out.append((cedges, tuple(labels[x] for x in ranks), r["support"]))
-    return out
+        cedges = decoded[r["sid"]]
+        ranks = tuple(
+            r["code"] >> bits * (k - p) & mask for p in range(_n_vertices(cedges))
+        )
+        out.append((cedges, ranks, r["support"]))
+    return out, labels
 
 
 def fsm_kedge_support(
@@ -606,13 +621,27 @@ def fsm_kedge_support(
     label tuple of the pattern, ``"((0, 1), ...)|[l0, l1, ...]"``.
     Driver loop = gSpan's level-wise frontier with anti-monotone support
     pruning between levels and canonical-parent extension (each
-    candidate generated once)."""
-    pats = _mine(sym_edges, labeled_vertices, k, minsup, stats=stats)
+    candidate generated once).
+
+    Limits: 1 ≤ k ≤ 10, and the k + 1 label ranks of a pattern pack into
+    63 bits, so at most ``2 ** (63 // (k + 1))`` distinct labels (4096 at
+    k = 4, 1024 at k = 5, 32 at k = 10); beyond either, ``ValueError``.
+    A null label is a label of its own, ordered before every other one
+    and written ``null`` in ``code``; edges at a vertex missing from
+    ``labeled_vertices`` are left out."""
+    pats, labels = _mine(sym_edges, labeled_vertices, k, minsup, stats=stats)
     rows = [
-        (f"{cedges!r}|[{', '.join(map(str, clabels))}]", sup)
-        for cedges, clabels, sup in pats
+        (
+            f"{cedges!r}|["
+            + ", ".join("null" if labels[x] is None else str(labels[x]) for x in ranks)
+            + "]",
+            sup,
+        )
+        for cedges, ranks, sup in pats
     ]
-    return _table(sym_edges.sparkSession, rows, "code string, support long")
+    return _table(
+        sym_edges.sparkSession, rows, "code string, support long", nullable=True
+    )
 
 
 def fsm_4edge_support(
@@ -624,18 +653,23 @@ def fsm_4edge_support(
 ) -> DataFrame:
     """Frequent 4-edge patterns with MNI support in the named-shape
     layout → ``(shape, q1, q2, q3, q4, q5, support)``; q5 = -1 for the
-    4-vertex shapes (cycle4 / paw). The gate-facing face of
-    :func:`fsm_kedge_support` — same frontier loop, plus a driver-side
-    decode of each frequent canonical pattern into the shape-semantic
-    key the DuckDB oracle reproduces. ``minsup_fn`` (symmetric edge
-    count → minsup) resolves adaptive support inside the mine's
-    existing count action — no extra input scan."""
-    pats = _mine(sym_edges, labeled_vertices, 4, minsup, minsup_fn, stats=stats)
-    rows = [
-        (*_decode_4edge(cedges, clabels), sup) for cedges, clabels, sup in pats
-    ]
+    4-vertex shapes (cycle4 / paw), and a null label is a null ``q*``.
+    The gate-facing face of :func:`fsm_kedge_support` — same frontier
+    loop, plus a driver-side decode of each frequent canonical pattern
+    into the shape-semantic key the DuckDB oracle reproduces.
+    ``minsup_fn`` (symmetric edge count → minsup) resolves adaptive
+    support inside the mine's existing count action — no extra input
+    scan. Limits and the null-label rule are :func:`fsm_kedge_support`'s
+    at k = 4: at most 4096 distinct labels."""
+    pats, labels = _mine(sym_edges, labeled_vertices, 4, minsup, minsup_fn, stats=stats)
+    rows = []
+    for cedges, ranks, sup in pats:
+        # decoded on ranks, which order like the labels, null first
+        shape, *key = _decode_4edge(cedges, ranks)
+        rows.append((shape, *(labels[x] if x >= 0 else -1 for x in key), sup))
     return _table(
         sym_edges.sparkSession,
         rows,
         "shape string, q1 int, q2 int, q3 int, q4 int, q5 int, support long",
+        nullable=True,
     )

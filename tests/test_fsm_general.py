@@ -129,6 +129,60 @@ def test_fsm_labels_outside_byte_range(spark):
         }
 
 
+def test_fsm_null_label_is_a_label_of_its_own(spark):
+    """A null label mines like a label ordered before every other one
+    and reads ``null``; its edges stay in the mine and in the edge count
+    that ``minsup_fn`` receives."""
+    edges = _random_edges(12, 22, 3)
+    label = {v: v % 2 for v in range(12)}
+    label[edges[0][0]] = label[edges[-1][1]] = None
+    sym, lv = _graph(spark, edges, label)
+    below = {v: -1 if x is None else x for v, x in label.items()}
+    for k in (2, 3):
+        brute, _ = brute_fsm(edges, below, k)
+        want = {
+            _code((cedges, ["null" if x == -1 else x for x in clabels])): sup
+            for (cedges, clabels), sup in brute.items()
+        }
+        assert _supports(fsm_kedge_support(sym, lv, k, 1)) == want
+    seen: list[int] = []
+    rows = fsm_4edge_support(sym, lv, minsup_fn=lambda m: seen.append(m) or 1).collect()
+    assert seen == [sym.count()]
+    brute, _ = brute_fsm(edges, below, 4)
+    assert len(rows) == len(brute)
+    assert sum(None in tuple(r) for r in rows) == sum(-1 in cl for _, cl in brute)
+
+
+def test_fsm_empty_level_ends_the_mine(spark):
+    """When no pattern of some level below k is frequent, or no k-edge
+    subgraph exists, both faces return no rows and report the later
+    levels as empty."""
+    sym, lv = _graph(spark, _random_edges(16, 30, 6), {v: v % 3 for v in range(16)})
+    assert fsm_4edge_support(sym, lv, minsup=1000).collect() == []
+    stats: dict[str, int] = {}
+    assert fsm_kedge_support(sym, lv, 3, 1000, stats=stats).collect() == []
+    assert stats["level1_frequent"] == 0
+    assert stats["level3_embeddings"] == stats["level3_frequent"] == 0
+    sym, lv = _graph(spark, [(0, 1)], {0: 0, 1: 1})
+    assert fsm_kedge_support(sym, lv, 3, 1).collect() == []
+
+
+def test_fsm_label_alphabet_limit(spark):
+    """At k = 5 the six packed label ranks hold 1024 distinct labels: a
+    graph with that many mines like the brute force, one more label
+    raises."""
+    edges = _random_edges(8, 11, 1)
+    label = {v: 3 * v - 1500 for v in range(1024)}
+    sym, lv = _graph(spark, edges, label)
+    brute, _ = brute_fsm(edges, label, 5)
+    assert _supports(fsm_kedge_support(sym, lv, 5, 1)) == {
+        _code(p): s for p, s in brute.items()
+    }
+    _, wider = _graph(spark, edges, {**label, 1024: 5000})
+    with pytest.raises(ValueError, match="room for 1024 distinct labels; got 1025"):
+        fsm_kedge_support(sym, wider, 5, 1)
+
+
 def test_fsm_rejects_k_beyond_the_structure_mask(spark):
     sym, lv = _graph(spark, [(0, 1)], {0: 0, 1: 0})
     for k in (0, 11):
